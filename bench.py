@@ -223,47 +223,6 @@ def _ensure_scaling_input(n_rows: int, seed: int = 42) -> str:
     return base
 
 
-def _run_linkage_kernel(spark, n_rows: int) -> dict:
-    """Diagnostic (not part of the reported scaling metric): the linkage
-    job proper — blocking → scoring → metrics → clusters — over a FIXED,
-    pre-materialized (clean, dirty) input. Isolates the engine's
-    throughput-producing stages from data-prep when bisecting
-    regressions; the reported scaling number uses the FULL pipeline."""
-    from pyspark.sql import functions as F
-
-    from rlerrorgenerator_spark.linkage.blocking import build_candidates
-    from rlerrorgenerator_spark.linkage.features import score_pairs
-    from rlerrorgenerator_spark.linkage.metrics import label_pairs, pairwise_metrics
-    from rlerrorgenerator_spark.linkage.resolve import clusters_from_links
-    from rlerrorgenerator_spark.operators import mess_data
-    from rlerrorgenerator_spark.pipeline import default_error_config
-    from rlerrorgenerator_spark.sources.pages import prep_pages, synth_pages
-
-    clean = prep_pages(
-        synth_pages(spark, n_rows, seed=42, body_tokens=(200, 600))
-    ).localCheckpoint(eager=True)
-    dirty, _ = mess_data(clean, default_error_config(), seed=42, exact=False)
-    dirty = dirty.localCheckpoint(eager=True)
-    t0 = time.time()
-    cand = build_candidates(clean, dirty).localCheckpoint(eager=True)
-    n_cand = cand.count()
-    scored = score_pairs(cand, clean, dirty).localCheckpoint(eager=True)
-    labeled = label_pairs(scored, dirty)
-    m = pairwise_metrics(labeled).collect()[0]
-    accepted = scored.where(F.col("prediction")).select("rid_a", "rid_b", "match_prob")
-    all_ids = clean.select(F.col("url").alias("id")).unionByName(
-        dirty.select(F.col("rid").alias("id"))
-    )
-    clusters_from_links(accepted, all_ids).count()
-    elapsed = time.time() - t0
-    return {
-        "sec": elapsed,
-        "n_candidates": n_cand,
-        "pairs_per_sec": n_cand / elapsed if elapsed else 0.0,
-        "f1": m.f1,
-    }
-
-
 class _HostLoadGauge:
     """Host-interference gauge while a leg runs — the contention signal
     the round-4 artifact was missing: both hi attempts landed in a
@@ -302,7 +261,9 @@ class _HostLoadGauge:
                     continue
                 if p[0] in ext_names:
                     v = [int(x) for x in p[1:]]
-                    busy += sum(v) - v[3] - v[4] - v[7]  # -idle -iowait -steal
+                    # fields 0-7 only: guest/guest_nice (8, 9) are already
+                    # counted inside user/nice
+                    busy += sum(v[:8]) - v[3] - v[4] - v[7]  # -idle -iowait -steal
                 elif p[0] in own_names:
                     v = [int(x) for x in p[1:]]
                     steal += v[7]

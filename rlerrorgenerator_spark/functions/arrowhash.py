@@ -19,10 +19,13 @@ Arrow columnar buffers via ``mapInArrow`` — no per-element boxing, no
 interpreted eval, and the Python workers parallelize per-core exactly
 like JVM tasks. The hash is a fixed-width XXH64 specialization (one
 8-byte lane), NOT bit-compatible with Spark's multi-arg ``xxhash64``;
-that is fine because every oracle-checked path (``exact_shingles``
-scoring, ``minhash_blocks_verified``, the md5-mode dedup plans) keeps
-its own expression-based formulation — set-Jaccard and MinHash-recall
-semantics are invariant to WHICH injective 64-bit hash is used.
+that is fine because set-Jaccard and MinHash-recall semantics are
+invariant to WHICH injective 64-bit hash is used. ``exact_shingles``
+scoring runs this same kernel with ``exact=True`` (full sorted-distinct
+64-bit sets), so its Jaccard equals the string-shingle Jaccard an
+independent SQL engine re-derives. Only the md5-mode plans
+(``minhash_blocks_verified``, the dedup plans) hash differently: their
+oracles reproduce bucket KEYS, not just set semantics.
 
 Determinism: pure per-row functions of the text bytes — identical
 results at any partitioning/core count (the partition-invariance tests
@@ -180,8 +183,9 @@ def _shingle_hashes(flat_th: np.ndarray, n_tok: np.ndarray,
     """k-gram hashes over consecutive token hashes.
 
     Rows with fewer than k tokens are zero-padded up to k so every row
-    yields ≥1 shingle (mirrors the expression path's try_element_at-null
-    semantics closely enough for a blocking/sampling hash).
+    yields exactly one shingle of all its tokens — the string definition
+    (k consecutive tokens, clipped at the end of the list); a token hash
+    is 0 only by 2⁻⁶⁴ chance, so the pad cannot alias a real token.
     -> (flat shingle hashes uint64, per-row shingle counts int64)."""
     n = len(n_tok)
     if n == 0:
@@ -232,43 +236,57 @@ def minhash_from_text(texts: pa.Array, *, n_hashes: int, shingle_k: int,
 
 
 def sampled_shingles32(texts: pa.Array, *, shingle_k: int = 4,
-                       seed: int = 42,
-                       sample_threshold: int = 32) -> tuple[pa.Array, pa.Array]:
-    """Per-row (sampled 32-bit shingle-hash list, use_sample flag) — the
-    scoring side's pair-shuffle payload. Rows with ≥ sample_threshold
-    shingles ship the deterministic 1-in-4 subsample (h%4==0 over the
-    truncated value, matching both sides); shorter rows ship the full
-    32-bit set (see features.py's boundary rationale)."""
+                       seed: int = 42, sample_threshold: int = 32,
+                       exact: bool = False) -> tuple[pa.Array, pa.Array]:
+    """Per-row (sorted-distinct shingle-hash list, use_sample flag) over
+    word k-shingles of text split on single spaces — the scoring side's
+    pair-shuffle payload.
+
+    Default: 32-bit (high word) hashes as ``array<int>``. Rows with
+    ≥ sample_threshold shingles ship the deterministic 1-in-4 subsample
+    (h%4==0 over the truncated value, matching both sides); shorter rows
+    ship the full 32-bit set (see features.py's boundary rationale).
+
+    ``exact=True`` (verification mode): the full 64-bit hashes as
+    ``array<bigint>``, never sampled (flag all false). Each row then has
+    exactly as many values as distinct string shingles, and pair Jaccard
+    equals the string-shingle Jaccard — up to 2⁻⁶⁴ collisions and the
+    token hash's documented blind spot (tokens over 24 bytes that differ
+    only in their middle bytes, see _hash_tokens)."""
     flat_th, n_tok = _token_hashes(texts, lower=False, pattern=" ",
                                    regex=False, seed=seed)
     flat_sh, n_sh = _shingle_hashes(flat_th, n_tok, shingle_k, seed)
-    # arithmetic >> 32 of the signed view == Spark shiftright(h,32) cast int
-    h32 = (flat_sh.view(np.int64) >> 32).astype(np.int32)
     n = len(n_sh)
-    use_sample = n_sh >= sample_threshold
+    if exact:
+        h, out_type = flat_sh.view(np.int64), pa.int64()
+        use_sample = np.zeros(n, dtype=bool)
+    else:
+        # arithmetic >> 32 of the signed view == Spark shiftright(h,32) cast int
+        h, out_type = (flat_sh.view(np.int64) >> 32).astype(np.int32), pa.int32()
+        use_sample = n_sh >= sample_threshold
     # SORTED-DISTINCT per row: downstream Jaccard treats the arrays as
     # sets anyway (array_intersect emits set semantics), and pre-deduped
     # sides let add_features compute |a∪b| as |a|+|b|−|a∩b| instead of a
     # second per-pair hash-set build (array_union). One lexsort here
     # replaces ~|pairs| OpenHashSet constructions in the scoring stage.
     row_id = np.repeat(np.arange(n), n_sh)
-    order = np.lexsort((h32, row_id))
-    h32 = h32[order]
+    order = np.lexsort((h, row_id))
+    h = h[order]
     row_id = row_id[order]
-    if len(h32):
-        first = np.ones(len(h32), dtype=bool)
-        first[1:] = (h32[1:] != h32[:-1]) | (row_id[1:] != row_id[:-1])
+    if len(h):
+        first = np.ones(len(h), dtype=bool)
+        first[1:] = (h[1:] != h[:-1]) | (row_id[1:] != row_id[:-1])
     else:
         first = np.zeros(0, dtype=bool)
     keep = first.copy()
-    # h32/row_id are in sorted order now — derive the per-element sample
+    # h/row_id are in sorted order now — derive the per-element sample
     # mask from the sorted row_id, not the pre-sort repeat layout
     sampled_rows = use_sample[row_id] if len(row_id) else row_id.astype(bool)
-    keep[sampled_rows] &= (h32[sampled_rows] % 4) == 0
+    keep[sampled_rows] &= (h[sampled_rows] % 4) == 0
     kept_per_row = (np.bincount(row_id[keep], minlength=n)
                     if len(keep) else np.zeros(n, dtype=np.int64))
     out_off = np.concatenate(([0], np.cumsum(kept_per_row))).astype(np.int32)
-    values = pa.array(h32[keep], type=pa.int32())
+    values = pa.array(h[keep], type=out_type)
     lists = pa.ListArray.from_arrays(pa.array(out_off, type=pa.int32()), values)
     return lists, pa.array(use_sample)
 
@@ -295,14 +313,15 @@ def minhash_signature_batches(batches, *, text_col: str, n_hashes: int,
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
-def sided_shingle_batches(batches, *, text_col: str, shingle_k: int):
+def sided_shingle_batches(batches, *, text_col: str, shingle_k: int,
+                          exact: bool = False):
     """mapInArrow kernel: passes every input column through untouched and
-    appends (__sh, __shs) computed from text_col."""
+    appends (__sh, __shs) computed from text_col by sampled_shingles32."""
     for batch in batches:
         for b in _slices(batch):
             lists, flags = sampled_shingles32(
                 b.column(b.schema.get_field_index(text_col)),
-                shingle_k=shingle_k)
+                shingle_k=shingle_k, exact=exact)
             cols = list(b.columns) + [lists, flags]
             names = list(b.schema.names) + ["__sh", "__shs"]
             yield pa.RecordBatch.from_arrays(cols, names=names)

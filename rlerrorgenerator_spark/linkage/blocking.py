@@ -6,11 +6,12 @@ generalize to three strategies over the pages domain, unioned + deduped:
 
 1. exact blocks on normalized keys (url, text prefix) — equi-joins,
    sort-merge/broadcast picked by Catalyst/AQE;
-2. sorted-neighborhood over a sort key — Spark's global ``orderBy`` is a
-   range-partitioned sort (scales out), neighbors via banded self-join;
-3. MinHash-LSH on text shingles — shingling, hashing and band signatures
-   all with built-in expressions (``sequence``/``transform``/``xxhash64``
-   /``array_min``), so the whole thing is JVM-side and deterministic.
+2. sorted-neighborhood over a sort key — a distributed global rank
+   (range-partitioned sort, scales out), then neighbors via lag windows
+   over dense-rank blocks (one hash shuffle);
+3. MinHash-LSH on word shingles — signatures from one vectorized Arrow
+   kernel per side (``functions/arrowhash.py``, a narrow map), band keys
+   and the bucket join as built-in expressions; deterministic per row.
 
 Skew: pathological blocks (empty/boilerplate text → one giant LSH bucket)
 are capped at ``max_block_size`` before the pair join — the explicit
@@ -28,6 +29,9 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import Column
+from pyspark.sql.types import LongType, StructField, StructType
+
+from rlerrorgenerator_spark.functions.arrowhash import minhash_signature_batches
 
 
 def normalize_url(col) -> Column:
@@ -204,93 +208,27 @@ def sorted_neighborhood_blocks(clean: DataFrame, dirty: DataFrame,
 def minhash_signature(df: DataFrame, text_col: str, id_col: str,
                       n_hashes: int = 16, shingle_k: int = 5,
                       seed: int = 1) -> DataFrame:
-    """MinHash signature per row: min over shingles of xxhash64(salt_i, s)
-    for each of n_hashes salts. All built-in expressions.
+    """MinHash signature per row over word (shingle_k−1)-shingles of
+    lower(text) split on whitespace runs: ``__id`` plus ``mh_0`` …
+    ``mh_{n_hashes-1}`` (bigint).
 
-    Shape: explode shingles -> ONE groupBy with n_hashes min-aggregates.
-    The array-expression formulation (array_min(transform(...)) per hash)
-    looks shuffle-free but Catalyst's projection collapse inlines the
-    shingle construction into every one of the n_hashes expressions,
-    recomputing it 16x per row — measured 122s vs ~10s at 80k rows. The
-    min-aggs combine map-side so the exploded shuffle stays small.
-
-    Universal-hashing trick: ONE xxhash64 over the shingle *string*, then
-    each of the n_hashes functions derives by re-hashing that 8-byte long
-    — string bytes are read once, not n_hashes times. Long-to-long xxhash
-    keeps it overflow-safe under ANSI mode (an affine multiply would
-    throw on overflow).
-
-    Shingling shape: project the token split as a bound attribute, explode
-    POSITIONS, then slice+concat per position-row. Building shingle
-    arrays with array_distinct is O(tokens²) in string compares (measured
-    112s for 12M shingles vs 1.3s this way) — and MinHash doesn't need
-    distinct: min over a multiset equals min over its set."""
-    k = max(2, shingle_k - 1)  # word shingles (see _shingles rationale)
-    if os.environ.get("SPARK_GRAFT_ARROW_KERNELS", "1") != "0":
-        # Vectorized fast path (functions/arrowhash.py): the expression
-        # form below is ~18 interpreted HOF passes per row (ArrayTransform
-        # is CodegenFallback — JFR measured it at ~35% of the 4-core
-        # scaling leg's samples together with the scoring transforms).
-        # One mapInArrow computes token hashes, shingle hashes and all
-        # n_hashes segment-mins as numpy passes over the Arrow buffers.
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from rlerrorgenerator_spark.functions.arrowhash import (
-            minhash_signature_batches,
-        )
-
-        pre = df.select(F.col(id_col).alias("__id"),
-                        F.coalesce(text_col, F.lit("")).alias("__text"))
-        out_schema = StructType(
-            [pre.schema.fields[0]]
-            + [StructField(f"mh_{i}", LongType(), True)
-               for i in range(n_hashes)]
-        )
-        return pre.mapInArrow(
-            lambda it: minhash_signature_batches(
-                it, text_col="__text", n_hashes=n_hashes,
-                shingle_k=k, seed=seed),
-            out_schema,
-        )
-    # STRING-FREE, SHUFFLE-FREE signatures: hash tokens once, build the
-    # per-row shingle-hash array (multi-arg xxhash64 over k consecutive
-    # token hashes — no slice/concat string building), then each of the
-    # n_hashes signature values is an array_min over a per-hash rehash of
-    # that BOUND array. Zero shuffle, perfect cache locality per row —
-    # the earlier explode → groupBy(id) form built ~32MB hash-agg maps
-    # per task (LLC-thrashing at high parallelism), and the historic
-    # warning about the array-expression form applied to STRING shingle
-    # construction being inlined n_hashes times; with 8-byte hash
-    # elements the rehash is ~10ns/element.
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.transform(
-            # split directly on the whitespace-run pattern — one regex
-            # pass instead of collapse-then-split (identical token arrays,
-            # verified empirically; ~30% cheaper at 240k rows)
-            F.split(F.lower(text_col), r"\s+"),
-            lambda t: F.xxhash64(t),
-        ).alias("__th"),
+    One ``mapInArrow`` (``arrowhash.minhash_signature_batches``) per
+    side: token hashes, shingle hashes and all n_hashes segment-mins are
+    numpy passes over the Arrow buffers — a narrow map with no shuffle
+    and no per-element interpreted evaluation. (Spark's higher-order
+    array functions are CodegenFallback; as expressions the same work was
+    ~18 interpreted passes per row, ~35% of a 4-core profile's samples.)"""
+    k = max(2, shingle_k - 1)  # tokens per word shingle
+    pre = df.select(F.col(id_col).alias("__id"),
+                    F.coalesce(text_col, F.lit("")).alias("__text"))
+    out_schema = StructType(
+        [pre.schema.fields[0]]
+        + [StructField(f"mh_{i}", LongType(), True) for i in range(n_hashes)]
     )
-    n = F.greatest(F.size("__th") - F.lit(k - 1), F.lit(1))
-    sh = toks.withColumn(
-        "__sh",
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.xxhash64(
-                F.lit(f"mh{seed}"),
-                *[F.try_element_at(F.col("__th"), i + j) for j in range(k)],
-            ),
-        ),
-    )
-    return sh.select(
-        "__id",
-        *[
-            F.array_min(
-                F.transform(F.col("__sh"), lambda h, i=i: F.xxhash64(F.lit(i), h))
-            ).alias(f"mh_{i}")
-            for i in range(n_hashes)
-        ],
+    return pre.mapInArrow(
+        lambda it: minhash_signature_batches(
+            it, text_col="__text", n_hashes=n_hashes, shingle_k=k, seed=seed),
+        out_schema,
     )
 
 
@@ -308,9 +246,9 @@ def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
 
     def band_keys(sig: DataFrame, rid_alias: str) -> DataFrame:
         # ONE explode over an array of (band, bkey) structs — a per-band
-        # union would re-evaluate the whole signature aggregation subtree
-        # once per band (8× the cost; Catalyst does not share it across
-        # union branches).
+        # union would re-evaluate the whole signature subtree once per
+        # band (8× the cost; Catalyst does not share it across union
+        # branches).
         structs = F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
@@ -325,8 +263,7 @@ def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
             F.col("__id").alias(rid_alias), F.explode(structs).alias("bk")
         ).select(rid_alias, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
 
-    # (band, bkey) grouping ≡ bkey grouping here (bkey is band-salted),
-    # and the two-sided cap needs one count + one broadcast for both sides
+    # (band, bkey) grouping ≡ bkey grouping here (bkey is band-salted)
     ka, kb = _cap_blocks_two_sided(band_keys(sig_a, "rid_a"),
                                    band_keys(sig_b, "rid_b"),
                                    ["band", "bkey"], max_block_size)
@@ -346,12 +283,14 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
     → band equi-join → hot-bucket cap → pair dedup), but hashing with the
     md5-u64 discipline of ``plans.dedup.minhash_signatures`` so an
     independent SQL engine reproduces every bucket key bit-identically.
-    The xxhash fast path stays the production blocking; this variant is
-    what the driver's cross-engine oracle exercises (``er_blocking_minhash``).
+    The Arrow-kernel :func:`minhash_blocks` stays the production
+    blocking; this variant is what the driver's cross-engine oracle
+    exercises (``er_blocking_minhash``).
 
-    The hot-bucket cap groups on (band, bkey) — the md5 band keys carry
-    no band salt, so capping on ``bkey`` alone (safe for the salted
-    xxhash keys) could conflate buckets across bands here."""
+    The hot-bucket cap is the shared :func:`_cap_blocks_two_sided` on
+    (band, bkey) — the md5 band keys carry no band salt, so capping on
+    ``bkey`` alone (safe for the salted xxhash keys) could conflate
+    buckets across bands here."""
     from rlerrorgenerator_spark.plans.dedup import minhash_signatures
 
     rows_per_band = n_hashes // bands
@@ -377,22 +316,9 @@ def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
         ).select(rid_alias, F.col("bk.band").alias("band"),
                  F.col("bk.bkey").alias("bkey"))
 
-    def cap(keyed: DataFrame) -> DataFrame:
-        # per-key count window, same discipline as _cap_blocks_two_sided's
-        # default form: single consumer of the signature plan (no
-        # double-evaluation trap, no localCheckpoint needed), no driver
-        # broadcast build, and the window's (band, bkey) exchange is the
-        # exact partitioning the bucket join consumes — one Exchange per
-        # side in the dumped plan
-        w = Window.partitionBy("band", "bkey")
-        return (
-            keyed.withColumn("__bc", F.count(F.lit(1)).over(w))
-            .where(F.col("__bc") <= max_block_size)
-            .drop("__bc")
-        )
-
-    ka = cap(band_keys(sig_a, "rid_a"))
-    kb = cap(band_keys(sig_b, "rid_b"))
+    ka, kb = _cap_blocks_two_sided(band_keys(sig_a, "rid_a"),
+                                   band_keys(sig_b, "rid_b"),
+                                   ["band", "bkey"], max_block_size)
     return (
         ka.join(kb, ["band", "bkey"])
         .groupBy("rid_a", "rid_b")

@@ -16,15 +16,15 @@ Pages-domain feature family (SURVEY.md §7.5):
 - length ratio, lang equality (the gender/race-style categorical);
 - warc_ts delta in days (dob analogue).
 
-Everything except JW is built-in (codegen); JW is one Arrow-batched
-pandas UDF over the (already blocked) pair table. At 100 TB the pair
-table is repartitioned on the blocking key first so each Arrow batch is
-one block (`SURVEY.md §4`).
+Two steps leave the JVM, each once per Arrow batch: the per-row
+shingle hashing (one ``mapInArrow`` kernel per side, before the pair
+join) and JW (one pandas UDF over the already blocked pair table).
+Everything else is built-in (codegen). At 100 TB the pair table is
+repartitioned on the blocking key first so each Arrow batch is one block
+(`SURVEY.md §4`).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,10 +32,12 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     IntegerType,
+    LongType,
     StructField,
     StructType,
 )
 
+from rlerrorgenerator_spark.functions.arrowhash import sided_shingle_batches
 from rlerrorgenerator_spark.functions.similarity import (
     jaro_winkler_udf,
     norm_levenshtein,
@@ -43,9 +45,6 @@ from rlerrorgenerator_spark.functions.similarity import (
 )
 from rlerrorgenerator_spark.linkage.blocking import normalize_url
 
-
-def _arrow_kernels_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_ARROW_KERNELS", "1") != "0"
 
 PAIR_COLS = ["url", "lang", "warc_ts"]
 TEXT_PREFIX = 64
@@ -59,10 +58,10 @@ def attach_pair_attrs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     Shingle arrays are computed here, ONCE PER ROW on each side before the
     pair join — computing them inside the pair-level feature expressions
     would redo the array construction per candidate pair. They are stored
-    as HASHED shingles (array<long>): 8-byte elements instead of ~25-byte
-    strings through the join, and the later array_intersect/array_union
-    compare longs, not strings. No array_distinct (O(n²) on big string
-    arrays); intersect/union already emit set semantics.
+    as HASHED shingles, sorted-distinct per row (``array<int>`` sampled
+    by default, ``array<bigint>`` with ``exact_shingles``): 4- or 8-byte
+    elements instead of ~25-byte strings through the join, and the later
+    array_intersect compares integers, not strings.
 
     The sided projections are SLIM: full texts never enter the pair join
     — only the 64-char prefix, the length, and the hashed shingles
@@ -70,56 +69,18 @@ def attach_pair_attrs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     at 10^5 pairs and would be TBs at crawl scale)."""
 
     def sided(df: DataFrame, key_col: str, alias: str) -> DataFrame:
-        k = 4
-        if not exact_shingles and _arrow_kernels_enabled():
-            # Vectorized fast path (functions/arrowhash.py): the three
-            # HOF transforms + sample filter below are CodegenFallback —
-            # interpreted, boxing, ~35% of the 4-core leg's execution
-            # samples (JFR, round 4). One mapInArrow computes the sampled
-            # 32-bit shingle payload in a handful of numpy passes; every
-            # other _sided_select expression stays JVM codegen.
-            from rlerrorgenerator_spark.functions.arrowhash import (
-                sided_shingle_batches,
-            )
-
-            cols = list(dict.fromkeys([key_col, *PAIR_COLS]))  # url is both
-            pre = df.select(
-                *cols, F.coalesce("text", F.lit("")).alias("text"),
-            )
-            out_schema = StructType(
-                pre.schema.fields
-                + [StructField("__sh", ArrayType(IntegerType()), True),
-                   StructField("__shs", BooleanType(), True)]
-            )
-            mapped = pre.mapInArrow(
-                lambda it: sided_shingle_batches(it, text_col="text",
-                                                 shingle_k=k),
-                out_schema,
-            )
-            return _sided_select(mapped, key_col, alias,
-                                 F.col("__sh"), F.col("__shs"))
-        # STRING-FREE shingle hashing: hash each token once, then derive
-        # the k-shingle hash from k consecutive token hashes with one
-        # multi-arg xxhash64 — no slice/concat string building. Building
-        # shingle STRINGS (concat_ws(slice(toks))) measured ~45s of a 55s
-        # score stage at 60k rows; this form is pure long arithmetic over
-        # a bound array attribute (no recompute inside the lambda).
-        step = df.withColumn(
-            "__toks__", F.split(F.coalesce("text", F.lit("")), " ")
-        ).withColumn("__th__", F.transform(F.col("__toks__"), lambda t: F.xxhash64(t)))
-        n = F.greatest(F.size("__th__") - F.lit(k - 1), F.lit(1))
-        # try_element_at: docs shorter than k tokens yield nulls past the
-        # end, which xxhash64 skips — same set semantics, no ANSI throw
-        hashed = F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.xxhash64(*[F.try_element_at(F.col("__th__"), i + j)
-                                   for j in range(k)]),
-        )
-        # Deterministic 1-in-4 shingle subsample (keep h % 4 == 0): when
-        # BOTH sides are sampled the pair Jaccard over the samples is an
-        # unbiased estimate of the true shingle Jaccard (MinHash-style
-        # subsampling) — and the pair shuffle ships 4× fewer array bytes,
-        # the dominant bandwidth cost of scoring.
+        # One mapInArrow hashes the shingles in a handful of numpy passes
+        # (functions/arrowhash.py); every other projection stays JVM
+        # codegen.
+        #
+        # Default: deterministic 1-in-4 shingle subsample (keep h % 4 ==
+        # 0) of 32-bit hashes. When BOTH sides are sampled the pair
+        # Jaccard over the samples is an unbiased estimate of the true
+        # shingle Jaccard (MinHash-style subsampling) — and the pair
+        # shuffle ships 4× fewer array bytes, the dominant bandwidth cost
+        # of scoring. Truncating 64→32 bits halves those bytes again; at
+        # ≤ ~400 shingles/doc the extra collision probability is
+        # ~n²/2³³ ≈ 2e-5, invisible next to the sampling variance.
         # Short documents keep the FULL array: near the 20-token body
         # floor a doc has ~17 shingles → ~4 sampled, a high-variance (or
         # empty → jaccard forced to 0) estimate exactly where the gated
@@ -127,46 +88,36 @@ def attach_pair_attrs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
         # saving is noise anyway, so exact Jaccard costs nothing. A
         # ``shs_*`` flag records which form shipped so add_features can
         # symmetrize mixed full-vs-sampled pairs at the 32 boundary.
-        if exact_shingles:
-            # verification mode (the cross-engine e2e oracle): full
-            # 64-bit shingle-hash sets, no subsample, no truncation —
-            # |intersect|/|union| equals the exact string-shingle Jaccard
-            # an independent engine computes (modulo ~2⁻⁶⁴ collisions)
-            use_sample = F.lit(False)
-            hashed_out = hashed
-            return _sided_select(step, key_col, alias, hashed_out, use_sample)
-        use_sample = F.size(hashed) >= 32
-        # ship 32-bit shingle hashes through the pair shuffle: the arrays
-        # are the dominant scoring-shuffle payload and truncating 64→32
-        # bits halves those bytes; at ≤ ~400 shingles/doc the extra
-        # collision probability is ~n²/2³³ ≈ 2e-5 — invisible next to the
-        # 1-in-4 sampling variance the Jaccard estimate already carries.
-        # shiftright(…, 32) keeps the (uniform) high word and always fits
-        # int, so the cast cannot throw under ANSI. The 1-in-4 subsample
-        # keys off the TRUNCATED value so add_features' mixed-pair
-        # symmetrization (pmod over the shipped ints) selects exactly the
-        # same elements the row-side filter kept.
-        hashed32 = F.transform(hashed, lambda h: F.shiftright(h, 32).cast("int"))
-        hashed_out = F.when(
-            use_sample, F.filter(hashed32, lambda h: F.pmod(h, F.lit(4)) == 0)
-        ).otherwise(hashed32)
-        return _sided_select(step, key_col, alias, hashed_out, use_sample)
+        #
+        # exact_shingles (the cross-engine verification mode): full
+        # 64-bit shingle-hash sets, no subsample, no truncation —
+        # |intersect|/|union| equals the exact string-shingle Jaccard an
+        # independent engine computes.
+        cols = list(dict.fromkeys([key_col, *PAIR_COLS]))  # url is both
+        pre = df.select(*cols, F.coalesce("text", F.lit("")).alias("text"))
+        elem = LongType() if exact_shingles else IntegerType()
+        out_schema = StructType(
+            pre.schema.fields
+            + [StructField("__sh", ArrayType(elem), True),
+               StructField("__shs", BooleanType(), True)]
+        )
+        mapped = pre.mapInArrow(
+            lambda it: sided_shingle_batches(it, text_col="text", shingle_k=4,
+                                             exact=exact_shingles),
+            out_schema,
+        )
+        return mapped.select(
+            F.col(key_col).alias(f"rid_{alias}"),
+            *[F.col(c).alias(f"{c}_{alias}") for c in PAIR_COLS],
+            F.substring("text", 1, TEXT_PREFIX).alias(f"tp_{alias}"),
+            F.length("text").alias(f"tlen_{alias}"),
+            F.col("__sh").alias(f"sh_{alias}"),
+            F.col("__shs").alias(f"shs_{alias}"),
+        )
 
     a = sided(clean, "url", "a")
     b = sided(dirty, "rid", "b")
     return candidates.join(a, "rid_a").join(b, "rid_b")
-
-
-def _sided_select(step: DataFrame, key_col: str, alias: str,
-                  hashed_out, use_sample) -> DataFrame:
-    return step.select(
-        F.col(key_col).alias(f"rid_{alias}"),
-        *[F.col(c).alias(f"{c}_{alias}") for c in PAIR_COLS],
-        F.substring(F.coalesce("text", F.lit("")), 1, TEXT_PREFIX).alias(f"tp_{alias}"),
-        F.length(F.coalesce("text", F.lit(""))).alias(f"tlen_{alias}"),
-        hashed_out.alias(f"sh_{alias}"),
-        use_sample.alias(f"shs_{alias}"),
-    )
 
 
 def add_features(pairs: DataFrame, exact_shingles: bool = False) -> DataFrame:
@@ -191,19 +142,12 @@ def add_features(pairs: DataFrame, exact_shingles: bool = False) -> DataFrame:
         F.filter(F.col("sh_b"), lambda h: F.pmod(h, F.lit(4)) == 0),
     ).otherwise(F.col("sh_b"))
     inter = F.size(F.array_intersect(eff_a, eff_b)).cast("double")
-    if exact_shingles or not _arrow_kernels_enabled():
-        union = F.size(F.array_union(eff_a, eff_b)).cast("double")
-    else:
-        # kernel-path arrays are already DEDUPED per side (arrowhash
-        # emits sorted distinct values), so |a ∪ b| = |a| + |b| − |a ∩ b|
-        # — array_union's second per-pair hash-set build is pure waste
-        # (OpenHashSet get/rehash measured ~4% of the 4-core leg's JFR
-        # samples). The exact_shingles oracle path keeps array_union:
-        # its arrays carry duplicates and its DuckDB re-derivation
-        # computes the set union.
-        union = (F.size(eff_a) + F.size(eff_b)).cast("double") - inter
-    fast = not exact_shingles and _arrow_kernels_enabled()
-    if fast:
+    # both sides ship sorted-distinct arrays (arrowhash), so
+    # |a ∪ b| = |a| + |b| − |a ∩ b| — array_union's second per-pair
+    # hash-set build would be pure waste (OpenHashSet get/rehash measured
+    # ~4% of the 4-core leg's JFR samples)
+    union = (F.size(eff_a) + F.size(eff_b)).cast("double") - inter
+    if not exact_shingles:
         # Bounded Levenshtein (early-exit O(n·t)) wherever the score's
         # consumers gate the value anyway — see norm_levenshtein_capped.
         # url_lev_abs: the score zeroes url evidence beyond 3 edits and
@@ -320,21 +264,21 @@ def score_pairs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     """candidates (rid_a, rid_b, block) → scored pairs with metric_* +
     match_prob + prediction. Heavy payload columns (texts, shingle arrays)
     are dropped from the output — the scored table checkpoints lean.
-    ``exact_shingles=True`` scores with full unsampled shingle sets
-    (exact Jaccard; the cross-engine verification mode).
+    ``exact_shingles=True`` is the cross-engine verification mode: the
+    same shingle kernel ships full unsampled 64-bit sets (exact Jaccard)
+    and the distance metrics are uncapped.
 
-    Scored-output contract, Arrow-kernel fast path (the default,
-    ``SPARK_GRAFT_ARROW_KERNELS`` unset or ``1``): the persisted distance
-    metrics are CAPPED at their score gates — ``metric_url_lev_abs``
-    saturates at 4 (the score zeroes url evidence beyond 3 edits) and
-    ``metric_text_lev`` / ``metric_swap_lev`` report 1.0 for any raw
-    prefix distance > 16 (the 0.25 × 64-char gate). ``match_prob`` and
-    ``prediction`` are provably unchanged by the caps (every consumer
-    gates below them), but anything downstream that treats these three
-    columns as TRUE normalized distances must either use the
-    ``exact_shingles``/expression path or tolerate the saturated range;
-    a cross-mode diff of the scored table will show divergent metric
-    values on capped pairs by design."""
+    Scored-output contract of the default mode (``exact_shingles``
+    false): the persisted distance metrics are CAPPED at their score
+    gates — ``metric_url_lev_abs`` saturates at 4 (the score zeroes url
+    evidence beyond 3 edits) and ``metric_text_lev`` / ``metric_swap_lev``
+    report 1.0 for any raw prefix distance > 16 (the 0.25 × 64-char
+    gate). ``match_prob`` and ``prediction`` are provably unchanged by
+    the caps (every consumer gates below them), but anything downstream
+    that treats these three columns as TRUE normalized distances must
+    either score with ``exact_shingles=True`` or tolerate the saturated
+    range; a cross-mode diff of the scored table will show divergent
+    metric values on capped pairs by design."""
     out = add_match_prob(add_features(
         attach_pair_attrs(candidates, clean, dirty, exact_shingles),
         exact_shingles))

@@ -14,7 +14,6 @@ lineage + metrics".
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,10 +124,8 @@ def run_linkage(
     # bound legs at 240k rows measured the 4-core leg 131-142s unstaged
     # vs 126-128s staged. The 1-core leg pays one extra serial
     # materialization (~15s) — the staged table is still the right plan
-    # at every parallelism. SPARK_GRAFT_STAGE_DIRTY=0 restores the
-    # re-derive-per-consumer behavior for A/B measurement.
-    if (dirty_pages is None
-            and os.environ.get("SPARK_GRAFT_STAGE_DIRTY", "1") == "1"):
+    # at every parallelism.
+    if dirty_pages is None:
         dirty = ckpt.stage(dirty, "dirty_staged")
     candidates = ckpt.stage(
         build_candidates(clean, dirty, use_minhash=use_minhash), "candidates"

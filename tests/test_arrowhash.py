@@ -5,15 +5,14 @@ The kernels replace interpreted HOF expression chains (CodegenFallback)
 in minhash blocking signatures and scoring shingle prep; these tests pin
 the invariants the pipeline relies on: determinism, value-equality for
 equal inputs, masking correctness at token boundaries, the 1-in-4
-sampling contract, and cross-mode (expression vs kernel) blocking recall
-at pipeline level.
+sampling contract, and the exact (verification) mode's agreement with
+string-shingle set semantics.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pytest
 
 from rlerrorgenerator_spark.functions.arrowhash import (
     _hash_tokens,
@@ -92,8 +91,9 @@ def test_minhash_jaccard_estimate():
 
 def test_sampled_shingles_contract():
     long_doc = " ".join(f"w{i}" for i in range(300))
-    lists, flags = sampled_shingles32(pa.array([long_doc, "a b c"]),
-                                      shingle_k=4)
+    texts = pa.array([long_doc, "a b c"])
+    lists, flags = sampled_shingles32(texts, shingle_k=4)
+    assert lists.type == pa.list_(pa.int32())
     flags = flags.to_pylist()
     assert flags == [True, False]
     sampled = np.asarray(lists[0].as_py())
@@ -103,24 +103,56 @@ def test_sampled_shingles_contract():
     assert len(lists[1]) == 1
     # ~1 in 4 kept
     assert 297 * 0.12 < len(sampled) < 297 * 0.45
+    # default payload pinned: per row, the sorted-distinct high words of
+    # the 64-bit shingle hashes, 1-in-4 filtered on sampled rows
+    th, n_tok = _token_hashes(texts, lower=False, pattern=" ", regex=False)
+    sh, n_sh = _shingle_hashes(th, n_tok, k=4, seed=42)
+    hi = (sh.view(np.int64) >> 32).astype(np.int32)
+    start = 0
+    for row, n in enumerate(n_sh):
+        want = np.unique(hi[start:start + n])
+        if flags[row]:
+            want = want[want % 4 == 0]
+        assert lists[row].as_py() == want.tolist()
+        start += n
 
 
-@pytest.mark.usefixtures("spark")
-def test_pipeline_mode_equivalence(spark, monkeypatch):
-    """Expression path and kernel path produce the same blocking recall
-    and scoring decisions at small scale (same candidates is NOT
-    required — the hash families differ — but the pipeline-level F1 and
-    the exact/SNM-covered candidate core must agree)."""
-    from rlerrorgenerator_spark.pipeline import run_linkage
+def _string_shingles(text: str, k: int = 4) -> set[str]:
+    """Word k-shingles as strings — the SQL oracles' definition
+    ``w[i:i+k-1]`` for i in 1..greatest(len(w)-k+1, 1), w split on ' '."""
+    w = text.split(" ")
+    return {" ".join(w[i:i + k]) for i in range(max(len(w) - k + 1, 1))}
 
-    res = {}
-    for mode in ("1", "0"):
-        # monkeypatch (not os.environ writes): a pre-existing user/CI
-        # value is restored even when run_linkage raises mid-loop
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_KERNELS", mode)
-        r = run_linkage(spark, n_rows=600, seed=11, compute_clusters=False,
-                        exact=False, body_tokens=(40, 80))
-        m = r.metrics.collect()[0]
-        res[mode] = (r.candidates.count(), m.f1)
-    assert res["1"][1] == pytest.approx(res["0"][1], abs=0.02)
-    assert res["1"][0] == pytest.approx(res["0"][0], rel=0.05)
+
+def test_exact_shingles_match_string_shingles():
+    """exact=True ships full 64-bit sorted-distinct sets whose sizes and
+    pairwise Jaccard equal the string 4-shingle sets' — what lets the
+    exact_shingles oracles compare against an engine shingling strings."""
+    rng = np.random.default_rng(7)
+    vocab = [f"tok{i}" for i in range(12)]
+    long_doc = " ".join(rng.choice(vocab, size=600))
+    texts = [
+        "",                                     # empty text
+        "a", "a b", "a b c", "a  b", "a b ",    # < 4 tokens (incl. empties)
+        "a b c d",
+        "x y z w x y z w x y z w",              # repeated shingles
+        "a b c d e", "b c d e a",
+        long_doc,
+        long_doc.replace("tok3", "tok4", 5),    # near-duplicate long doc
+        "averyveryverylongtoken24 b c d",       # token at the 24-byte limit
+    ]
+    lists, flags = sampled_shingles32(pa.array(texts), shingle_k=4,
+                                      exact=True)
+    assert lists.type == pa.list_(pa.int64())
+    assert not any(flags.to_pylist())
+    sets = [np.asarray(v.as_py(), dtype=np.int64) for v in lists]
+    ref = [_string_shingles(t) for t in texts]
+    for got, want in zip(sets, ref):
+        assert (np.diff(got) > 0).all()        # sorted distinct
+        assert len(got) == len(want)
+    for i in range(len(texts)):
+        for j in range(len(texts)):
+            inter = len(np.intersect1d(sets[i], sets[j]))
+            assert inter == len(ref[i] & ref[j]), (texts[i][:20], texts[j][:20])
+            # both sides deduped: |a ∪ b| = |a| + |b| − |a ∩ b|
+            assert len(sets[i]) + len(sets[j]) - inter == len(ref[i] | ref[j])

@@ -179,6 +179,21 @@ def test_watch_cpus_complement(monkeypatch):
     assert bench._watch_cpus(None) == ([], [])
 
 
+def test_host_load_gauge_counts_guest_time_once(monkeypatch):
+    """On Linux guest/guest_nice (/proc/stat fields 8-9) are already
+    inside user/nice, so external busy must not count them twice."""
+    import io
+
+    stat = ("cpu  120 1 60 2000 17 2 3 34 15 1\n"
+            "cpu1 20 1 10 500 7 2 3 4 15 1\n"
+            "cpu2 9 0 0 100 0 0 0 30 0 0\n")
+    monkeypatch.setattr(bench, "open", lambda *a, **k: io.StringIO(stat),
+                        raising=False)
+    busy, steal = bench._HostLoadGauge([1], [2])._read()
+    assert busy == 20 + 1 + 10 + 2 + 3   # user nice system irq softirq
+    assert steal == 30
+
+
 def test_timed_out_leg_keeps_banked_attempts(stub_env):
     """A leg that outlives the remaining budget is killed by its own
     timeout; completed attempts stand and the result still parses."""
