@@ -17,8 +17,10 @@ per-query seconds plus the north-rule evidence:
   subprocesses; ``scaling_efficiency = throughput(4N)/(4·throughput(N))``
   — the sandbox proxy for N→4N executors (driver note). JVM/Python
   warmup runs before the timed region (cluster startup is a one-time
-  cost, not steady-state throughput). Skipped when
-  SPARK_GRAFT_BENCH_SCALING=0.
+  cost, not steady-state throughput). The two legs alternate in rounds
+  and each side reports its best attempt; rounds continue up to
+  ``$SPARK_GRAFT_SCALING_MAX_ROUNDS`` while the next one is projected
+  to fit ``$SPARK_GRAFT_BENCH_DEADLINE``. Skipped with ``--no-scaling``.
 
 Usage: python bench.py [--sf-dir DIR] [--no-scaling]
 """
@@ -223,116 +225,13 @@ def _ensure_scaling_input(n_rows: int, seed: int = 42) -> str:
     return base
 
 
-class _HostLoadGauge:
-    """Host-interference gauge while a leg runs — the contention signal
-    the round-4 artifact was missing: both hi attempts landed in a
-    *mildly, correlatedly* contended window (25-35% slow, intra-leg
-    spread only 7.7%), which the dispersion trigger cannot see. Two
-    complementary /proc/stat signals, both invisible to the leg itself:
-
-    - EXTERNAL BUSY: busy jiffies on the CPUs OUTSIDE the leg's affinity
-      range — in-machine interference (another process in this VM). The
-      leg's own work cannot appear there (taskset confines every
-      JVM/Python thread).
-    - OWN-RANGE STEAL: steal jiffies on the leg's OWN CPUs — hypervisor
-      co-tenants. On a VM, neighbor load never shows as busy on our
-      vCPUs; it shows as time the hypervisor declined to schedule us.
-
-    ``load()`` reports the max of the two mean per-core fractions.
-    GATE-AGNOSTIC by construction — reads /proc/stat only, never a
-    throughput or efficiency value."""
-
-    def __init__(self, watch_cpus: list[int],
-                 own_cpus: list[int] | None = None):
-        self.watch = watch_cpus
-        self.own = own_cpus or []
-        self._samples: list[tuple[float, int, int]] = []
-        self._stop = False
-        self._th = None
-
-    def _read(self) -> tuple[int, int]:
-        ext_names = {f"cpu{c}" for c in self.watch}
-        own_names = {f"cpu{c}" for c in self.own}
-        busy = steal = 0
-        with open("/proc/stat") as f:
-            for line in f:
-                p = line.split()
-                if not p:
-                    continue
-                if p[0] in ext_names:
-                    v = [int(x) for x in p[1:]]
-                    # fields 0-7 only: guest/guest_nice (8, 9) are already
-                    # counted inside user/nice
-                    busy += sum(v[:8]) - v[3] - v[4] - v[7]  # -idle -iowait -steal
-                elif p[0] in own_names:
-                    v = [int(x) for x in p[1:]]
-                    steal += v[7]
-        return busy, steal
-
-    def __enter__(self):
-        import threading
-
-        if not self.watch and not self.own:
-            return self
-
-        def run():
-            while not self._stop:
-                try:
-                    b, st = self._read()
-                    self._samples.append((time.time(), b, st))
-                except OSError:
-                    return
-                time.sleep(1.0)
-
-        self._th = threading.Thread(target=run, daemon=True)
-        self._th.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop = True
-        if self._th is not None:
-            self._th.join(timeout=5)
-
-    def load(self) -> float | None:
-        """max(external busy, own-range steal) as mean per-core fractions
-        in 0..1; None if unknown."""
-        if len(self._samples) < 2:
-            return None
-        (t0, b0, s0), (t1, b1, s1) = self._samples[0], self._samples[-1]
-        dt = t1 - t0
-        if dt <= 0:
-            return None
-        hz = 100.0  # USER_HZ
-        ext = (b1 - b0) / hz / dt / len(self.watch) if self.watch else 0.0
-        own = (s1 - s0) / hz / dt / len(self.own) if self.own else 0.0
-        return max(ext, own)
-
-
-def _watch_cpus(bind_cpus: str | None) -> tuple[list[int], list[int]]:
-    """(external, own) CPU sets for the gauge while a leg bound to
-    ``bind_cpus`` runs: external = every schedulable CPU outside the bind
-    range (in-machine interference), own = the bind range itself (steal
-    accounting). Both empty (gauge off) for unbound legs — there our own
-    threads roam everywhere and external load is indistinguishable from
-    the leg's."""
-    if not bind_cpus:
-        return [], []
-    try:
-        avail = os.sched_getaffinity(0)
-    except (AttributeError, OSError):
-        return [], []
-    lo, hi = bind_cpus.split("-") if "-" in bind_cpus else (bind_cpus,) * 2
-    bound = set(range(int(lo), int(hi) + 1))
-    return sorted(avail - bound), sorted(bound)
-
-
 def _run_er_subprocess(sf_dir: str, cores: int, n_rows: int,
                        shuffle_partitions: int,
                        bind_cpus: str | None = None,
                        pages_path: str | None = None,
-                       timeout: int = 3600) -> tuple[dict, float | None]:
-    """-> (leg result, host-interference fraction during the leg:
-    max of external-CPU busy and own-range steal)."""
+                       timeout: int = 3600) -> dict:
+    """One scaling leg in a fresh subprocess -> its `_run_er_pipeline`
+    result."""
     import subprocess
 
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
@@ -345,16 +244,15 @@ def _run_er_subprocess(sf_dir: str, cores: int, n_rows: int,
         # in main / BENCH/BASELINE.md for the bound-vs-unbound
         # measurements behind making this the default.
         cmd = ["taskset", "-c", bind_cpus] + cmd
-    with _HostLoadGauge(*_watch_cpus(bind_cpus)) as gauge:
-        proc = subprocess.run(
-            cmd,
-            capture_output=True, text=True, env=env,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=timeout,
-        )
+    proc = subprocess.run(
+        cmd,
+        capture_output=True, text=True, env=env,
+        cwd=os.path.dirname(os.path.abspath(__file__)),
+        timeout=timeout,
+    )
     for line in proc.stdout.splitlines():
         if line.startswith("BENCHJSON:"):
-            return json.loads(line[len("BENCHJSON:"):]), gauge.load()
+            return json.loads(line[len("BENCHJSON:"):])
     raise RuntimeError(f"scaling run at {cores} cores failed:\n{proc.stderr[-2000:]}")
 
 
@@ -450,9 +348,7 @@ def main() -> None:
         "er_pairs_per_sec": round(er["pairs_per_sec"], 1),
         "er_f1": round(er["f1"], 6),
     }
-    do_scaling = (not args.no_scaling
-                  and os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0")
-    if do_scaling:
+    if not args.no_scaling:
         # Headline JSON line FIRST (VERDICT r3 fix #1): if the scaling
         # section outlives the driver's budget, the completed per-query
         # timings still parse; on a full run the final line below —
@@ -519,7 +415,7 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
     n_small = int(os.environ.get("SPARK_GRAFT_SCALING_N", "1"))
     n_big = 4 * n_small
     # Input sized so parallel compute dominates the fixed per-job driver
-    # overheads AND escalation rounds fit the budget. History: 240k rows
+    # overheads AND several rounds fit the budget. History: 240k rows
     # cost ~900-1000s per 1-core leg in round 3 (rc=124 under the driver
     # budget); round 4 briefly dropped to 100k, where the fixed per-job
     # floor dominates the FAST leg and the ratio understates the engine
@@ -531,9 +427,8 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
     # at 180k (lo = P + f, hi = P/4 + f): P ~= 246s, f ~= 18s ->
     # modeled eff 0.841 at 200k while legs (lo ~357s + hi ~120s wall)
     # fit THREE alternating rounds + headline + first-run fixture
-    # generation inside the 1800s deadline — the escalation headroom
-    # the r4 artifact lacked (2 rounds, both hi attempts contended, no
-    # budget to retry).
+    # generation inside the 1800s deadline (the r4 artifact had room for
+    # only 2 rounds, both hi attempts contended, no budget to retry).
     scaling_rows = int(os.environ.get("SPARK_GRAFT_SCALING_ROWS", "200000"))
     sp = max(4 * n_big, 16)  # identical partitioning at both levels
     # Host timing variance on this shared box (BENCH/BASELINE.md):
@@ -543,13 +438,9 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
     # each — best-of-N(hi) over a single lo would be upward-biased,
     # and a one-shot noisy-SLOW low leg would inflate the ratio
     # undetected. No early stop on the gate: attempts end only at
-    # round count or the wall-clock deadline, alternating legs so both
-    # see the same contention epochs.
-    rounds = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "2"))
-    # max_rounds 4: the deadline projection (not this cap) is what
-    # actually bounds the run — a 4th round only happens when earlier
-    # legs were fast enough to afford it, which is exactly when an
-    # escalation trigger firing means a retry is worth having.
+    # max_rounds or the wall-clock deadline, alternating legs so both
+    # see the same contention epochs. The deadline projection (not this
+    # cap) is what usually bounds the run at 200k rows.
     max_rounds = int(os.environ.get("SPARK_GRAFT_SCALING_MAX_ROUNDS", "4"))
     # CPU-affinity binding (default ON; SPARK_GRAFT_BIND_CPUS=0 to
     # disable): taskset each leg to exactly N / 4N cores — the
@@ -570,12 +461,7 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
 
     los, his = [], []
     lo_secs, hi_secs = [], []
-    lo_loads, hi_loads = [], []
     stopped = None
-    # external-load threshold for the host-load escalation (fraction of
-    # each non-leg CPU busy during an attempt). Idle-box baseline ≈ 0.02
-    # (daemons); the r4 incidents measured neighbor windows well above.
-    load_thr = float(os.environ.get("SPARK_GRAFT_HOST_LOAD_THR", "0.20"))
 
     def _remaining() -> float:
         return deadline - (time.time() - t_start)
@@ -618,12 +504,6 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
             "low_leg_secs": [round(s, 1) for s in lo_secs],
             "high_leg_secs": [round(s, 1) for s in hi_secs],
             "high_leg_attempts": his,
-            # mean busy fraction of the NON-leg host CPUs during each
-            # attempt (None = gauge unavailable): a contended artifact is
-            # self-explaining, and the escalation below keys off this
-            "low_leg_host_load": lo_loads,
-            "high_leg_host_load": hi_loads,
-            "host_load_threshold": load_thr,
             "cpu_bound_legs": bool(lo_bind),
             **({"stopped_early": note} if note else {}),
             "scaling_efficiency": round(eff, 3),
@@ -649,85 +529,40 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
             return False
         try:
             t = time.time()
-            lo, ld = _run_er_subprocess(sf_dir, n_small, scaling_rows, sp,
-                                        lo_bind, pages_path,
-                                        timeout=int(max(120, _remaining())))
+            lo = _run_er_subprocess(sf_dir, n_small, scaling_rows, sp,
+                                    lo_bind, pages_path,
+                                    timeout=int(max(120, _remaining())))
             lo_secs.append(time.time() - t)
             los.append(round(lo["pairs_per_sec"], 1))
-            lo_loads.append(round(ld, 3) if ld is not None else None)
             t = time.time()
-            hi, hd = _run_er_subprocess(sf_dir, n_big, scaling_rows, sp,
-                                        hi_bind, pages_path,
-                                        timeout=int(max(120, _remaining())))
+            hi = _run_er_subprocess(sf_dir, n_big, scaling_rows, sp,
+                                    hi_bind, pages_path,
+                                    timeout=int(max(120, _remaining())))
             hi_secs.append(time.time() - t)
             his.append(round(hi["pairs_per_sec"], 1))
-            hi_loads.append(round(hd, 3) if hd is not None else None)
             _bank()
             return True
         except Exception as exc:  # leg timed out or died: keep evidence
             stopped = f"leg failed: {type(exc).__name__}"
             return False
 
-    for _ in range(rounds):
-        if not _one_round():
-            break
-
-    # Escalation — SYMMETRIC and GATE-AGNOSTIC: run one more alternating
-    # round on BOTH legs (up to max_rounds) when either trigger fires.
-    # Neither trigger ever reads a throughput ratio or the efficiency
-    # value, so escalation cannot bias toward the 0.8 target; the
-    # statistic stays best-of-N with the SAME N on both legs.
-    #
-    # 1. Dispersion: the attempts of EITHER leg disagree by > 20% — a
-    #    burst hit one attempt (the round-3 failure mode).
-    # 2. Host load: the attempt best-of-N would SELECT on either leg ran
-    #    while the non-leg host CPUs were busier than load_thr — i.e.
-    #    even the statistic's pick was likely degraded and a quieter
-    #    attempt could replace it. This is the round-4 failure mode
-    #    (both hi attempts mildly contended, spread only 7.7% — the
-    #    dispersion trigger alone cannot see correlated contention).
-    def _spread(xs):
-        return (max(xs) - min(xs)) / max(xs) if max(xs) else 0.0
-
-    def _best_contended() -> bool:
-        for vals, loads in ((los, lo_loads), (his, hi_loads)):
-            if vals:
-                i = max(range(len(vals)), key=vals.__getitem__)
-                if i < len(loads) and loads[i] is not None \
-                        and loads[i] > load_thr:
-                    return True
-        return False
-
-    while (stopped is None and los and len(los) < max_rounds
-           and (_spread(los) > 0.2 or _spread(his) > 0.2
-                or _best_contended())):
-        if not _one_round():
-            break
-
-    # Budget-filling rounds — SYMMETRIC and GATE-AGNOSTIC (reads only the
-    # wall clock): when the triggers are quiet but budget remains, keep
-    # sampling up to max_rounds instead of returning early with unused
-    # deadline (the 2026-08-21 rehearsal ended best-of-2 with 755s
-    # unspent; the quiet-window 4-core leg carries ±10% run-to-run
-    # variance — GC/JIT/scheduling alignment — while the 1-core leg is
-    # ±1%, so N=2 under-samples the noisy leg). External load only ever
-    # STEALS cycles, so best-of-N estimates the uncontended capability of
-    # BOTH legs and more rounds refine both sides of the ratio equally.
-    # Filling uses the same OPTIMISTIC projection as the trigger retries
-    # (least-contended round could fit). The failure mode of optimism is
-    # benign and self-limiting: a fill round that outlives the deadline
-    # is killed by its per-leg timeout, banked attempts stand, the final
-    # JSON still prints — and an INCOMPLETE fill round can only leave an
-    # extra LOW attempt (legs run lo-then-hi), whose only possible effect
-    # on max(lo) is to RAISE the denominator, i.e. a conservative bias.
-    # A conservative projection was tried first and cost the decisive
-    # third sample twice (2026-08-21: two quiet full runs each ended
-    # best-of-2 at eff 0.78 with ~600s unspent because the worst
-    # observed round × 1.15 overshot the remaining budget by ~60s).
-    while (stopped is None and los and len(los) < max_rounds
-           and _remaining() > _estimate()):
-        if not _one_round():
-            break
+    # One rule, reading only the clock: keep running alternating rounds
+    # up to max_rounds while a least-contended round is projected to fit.
+    # External load only ever STEALS cycles, so best-of-N estimates the
+    # uncontended capability of BOTH legs and more rounds refine both
+    # sides of the ratio equally (the quiet-window 4-core leg carries
+    # ±10% run-to-run variance, the 1-core leg ±1%). The failure mode of
+    # the optimistic projection is benign: a round that outlives the
+    # deadline is killed by its per-leg timeout, banked attempts stand,
+    # and an incomplete round can only leave an extra LOW attempt (legs
+    # run lo-then-hi), whose only possible effect is to RAISE max(lo),
+    # i.e. a conservative bias. A conservative projection was tried
+    # first and cost the decisive third sample twice (2026-08-21: two
+    # quiet full runs each ended best-of-2 at eff 0.78 with ~600s
+    # unspent). `stopped_early` is set exactly when fewer than
+    # max_rounds rounds completed.
+    while len(los) < max_rounds and _one_round():
+        pass
 
     return _result(stopped)
 

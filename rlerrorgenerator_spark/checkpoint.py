@@ -43,14 +43,19 @@ class CheckpointManager:
         return os.path.join(self.base_dir, name)
 
     def exists(self, name: str) -> bool:
+        """Whether stage ``name`` was committed, asked of the Hadoop
+        FileSystem that writes it, so ``file://``, ``hdfs://`` or object
+        store URIs resolve the same way the write did."""
         if self.base_dir is None:
             return False
-        p = self._path(name)
-        if self.fmt == "iceberg":
-            # path-based Iceberg tables mark commit state in metadata/,
-            # not a _SUCCESS flag
-            return os.path.exists(os.path.join(p, "metadata"))
-        return os.path.exists(os.path.join(p, "_SUCCESS"))
+        # path-based Iceberg tables mark commit state in metadata/, not a
+        # _SUCCESS flag
+        marker = "metadata" if self.fmt == "iceberg" else "_SUCCESS"
+        jvm = self.spark._jvm
+        path = jvm.org.apache.hadoop.fs.Path(
+            os.path.join(self._path(name), marker))
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs.exists(path)
 
     def load(self, name: str) -> DataFrame:
         return self.spark.read.format(self.fmt).load(self._path(name))

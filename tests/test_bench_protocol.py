@@ -2,10 +2,10 @@
 
 The scaling section is the round's evidence for the north rule's
 N -> 4N efficiency gate, so its *protocol* discipline matters as much
-as the engine's plans: symmetric attempt counts, gate-agnostic
-escalation triggers (wall times and spreads only, never the efficiency
-value), budget projections that a single contended observation cannot
-poison, and SIGTERM snapshots that always parse. These tests stub the
+as the engine's plans: symmetric attempt counts, one round rule that
+reads only the clock (never a throughput or the efficiency value),
+budget projections that a single contended observation cannot poison,
+and SIGTERM snapshots that always parse. These tests stub the
 subprocess legs — no Spark, they run in milliseconds — and pin each
 rule so a later edit cannot silently weaken the measurement.
 """
@@ -25,7 +25,6 @@ import bench
 def stub_env(monkeypatch):
     """Route _run_scaling's collaborators to deterministic stubs."""
     monkeypatch.setenv("SPARK_GRAFT_SCALING_ROWS", "100000")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_ROUNDS", "2")
     monkeypatch.setenv("SPARK_GRAFT_SCALING_MAX_ROUNDS", "3")
     monkeypatch.setattr(bench, "_ensure_scaling_input",
                         lambda n, seed=42: "/tmp/unused-fixture")
@@ -35,18 +34,16 @@ def stub_env(monkeypatch):
 
 def _legs(monkeypatch, schedule):
     """Install a stub leg runner fed from `schedule`: a list of
-    (pairs_per_sec, wall_secs[, host_load]) consumed in call order
-    (lo, hi, lo, hi, ...). wall_secs is simulated by advancing a fake
-    clock, not by sleeping; host_load defaults to a quiet 0.02."""
+    (pairs_per_sec, wall_secs) consumed in call order (lo, hi, lo, hi,
+    ...). wall_secs is simulated by advancing a fake clock, not by
+    sleeping."""
     calls = {"i": 0, "cores": []}
     clock = {"t": 1000.0}
 
     monkeypatch.setattr(bench.time, "time", lambda: clock["t"])
 
     def fake_leg(sf_dir, cores, n_rows, sp, bind, pages, timeout=3600):
-        entry = schedule[calls["i"]]
-        pps, wall = entry[0], entry[1]
-        load = entry[2] if len(entry) > 2 else 0.02
+        pps, wall = schedule[calls["i"]]
         calls["i"] += 1
         calls["cores"].append(cores)
         if wall > timeout:
@@ -54,8 +51,7 @@ def _legs(monkeypatch, schedule):
             import subprocess
             raise subprocess.TimeoutExpired(cmd="leg", timeout=timeout)
         clock["t"] += wall
-        return ({"pairs_per_sec": pps, "f1": 0.999,
-                 "n_candidates": 391574}, load)
+        return {"pairs_per_sec": pps, "f1": 0.999, "n_candidates": 391574}
 
     monkeypatch.setattr(bench, "_run_er_subprocess", fake_leg)
     return calls, clock
@@ -102,53 +98,40 @@ def test_no_budget_no_round(stub_env):
     assert "error" in res and "deadline" in res["error"]
 
 
-def test_dispersion_escalation_is_symmetric_and_capped(stub_env):
-    """>20% intra-leg spread on EITHER leg adds one more alternating
-    round on BOTH legs, up to max_rounds. The trigger reads spreads
-    only — a round that already passes 0.8 still escalates."""
-    calls, clock = _legs(
-        stub_env,
-        [(1000, 470), (4000, 130),
-         (1000, 470), (2500, 210),    # hi spread 37.5% -> escalate
-         (1000, 470), (3900, 135)])
-    res = bench._run_scaling("/x", clock["t"], 5000)
-    assert len(res["low_leg_attempts"]) == 3
-    assert len(res["high_leg_attempts"]) == 3
-    assert res["pairs_per_sec_high"] == 4000  # best-of-N, same N both legs
-
-
-def test_host_load_escalation_on_correlated_contention(stub_env):
-    """Regression pin for the round-4 artifact: BOTH hi attempts ran in
-    mildly contended windows (~30% slow, intra-leg spread < 20% — the
-    dispersion trigger is blind to correlated contention), but the
-    host-load gauge saw busy neighbor CPUs during the best attempt →
-    one more symmetric round, which lands a quiet hi leg."""
-    calls, clock = _legs(
-        stub_env,
-        [(2245, 470, 0.03), (6173, 187, 0.45),   # hi contended (load .45)
-         (2203, 490, 0.03), (5729, 203, 0.41),   # spread 7.2% — no disp.
-         (2240, 470, 0.02), (7900, 150, 0.02)])  # quiet third round
-    res = bench._run_scaling("/x", clock["t"], 5000)
-    assert len(res["high_leg_attempts"]) == 3
-    assert res["pairs_per_sec_high"] == 7900
-    assert res["high_leg_host_load"] == [0.45, 0.41, 0.02]
-    assert res["scaling_efficiency"] == pytest.approx(
-        7900 / (4 * 2245), abs=1e-3)
-
-
-def test_host_load_trigger_reads_best_attempt_only(stub_env):
-    """A contended NON-best attempt must not escalate: best-of-N already
-    discards it, so another round would spend budget for nothing.
-    (Deadline sized so the budget-filling rule cannot add a round —
-    this test isolates the host-load trigger.)"""
-    calls, clock = _legs(
-        stub_env,
-        [(1000, 470, 0.02), (4000, 130, 0.02),   # quiet bests
-         (850, 530, 0.50), (3400, 150, 0.50)])   # contended non-bests
-    # deadline leaves no room for a budget-fill round either
-    res = bench._run_scaling("/x", clock["t"], 1300)
-    assert len(res["low_leg_attempts"]) == 2     # no third round
-    assert res["scaling_efficiency"] == 1.0
+@pytest.mark.parametrize("schedule, deadline, rounds, best_hi, eff", [
+    # a burst hits one hi attempt (37.5% spread): the round rule alone
+    # runs the third round that recovers it
+    ([(1000, 470), (4000, 130),
+      (1000, 470), (2500, 210),
+      (1000, 470), (3900, 135)], 5000, 3, 4000, 1.0),
+    # round-4 artifact: both early hi attempts mildly, correlatedly
+    # contended (spread 7.2%); the third round lands a quiet hi leg
+    ([(2245, 470), (6173, 187),
+      (2203, 490), (5729, 203),
+      (2240, 470), (7900, 150)], 5000, 3, 7900, 7900 / (4 * 2245)),
+    # contended non-best attempts and a deadline with no room for a
+    # third round: best-of-2 stands, and the artifact says why
+    ([(1000, 470), (4000, 130),
+      (850, 530), (3400, 150)], 1300, 2, 4000, 1.0),
+], ids=["burst", "correlated", "deadline"])
+def test_rounds_run_until_max_rounds_or_deadline(stub_env, schedule, deadline,
+                                                 rounds, best_hi, eff):
+    """One rule: alternating rounds on BOTH legs until max_rounds (3 in
+    stub_env) or until a least-contended round no longer fits the
+    deadline. The rule never reads a throughput, so a round that already
+    passes 0.8 still continues, and best-of-N keeps the same N on both
+    legs. `stopped_early` is present exactly when fewer than max_rounds
+    rounds ran."""
+    calls, clock = _legs(stub_env, schedule)
+    res = bench._run_scaling("/x", clock["t"], deadline)
+    assert len(res["low_leg_attempts"]) == rounds
+    assert len(res["high_leg_attempts"]) == rounds
+    assert calls["cores"] == [1, 4] * rounds
+    assert res["pairs_per_sec_high"] == best_hi
+    assert res["scaling_efficiency"] == pytest.approx(eff, abs=1e-3)
+    assert ("stopped_early" in res) == (rounds < 3)
+    if rounds < 3:
+        assert res["stopped_early"].startswith("deadline")
 
 
 def test_budget_filling_rounds_use_leftover_deadline(stub_env):
@@ -166,32 +149,6 @@ def test_budget_filling_rounds_use_leftover_deadline(stub_env):
     assert len(res["high_leg_attempts"]) == 3
     assert res["pairs_per_sec_high"] == 4000
     assert "stopped_early" not in res
-
-
-def test_watch_cpus_complement(monkeypatch):
-    """The gauge watches the schedulable CPUs OUTSIDE the leg's bind
-    range for external busy, the bind range itself for steal, and is
-    off for unbound legs."""
-    monkeypatch.setattr(bench.os, "sched_getaffinity",
-                        lambda pid: set(range(8)), raising=False)
-    assert bench._watch_cpus("3-6") == ([0, 1, 2, 7], [3, 4, 5, 6])
-    assert bench._watch_cpus("2-2") == ([0, 1, 3, 4, 5, 6, 7], [2])
-    assert bench._watch_cpus(None) == ([], [])
-
-
-def test_host_load_gauge_counts_guest_time_once(monkeypatch):
-    """On Linux guest/guest_nice (/proc/stat fields 8-9) are already
-    inside user/nice, so external busy must not count them twice."""
-    import io
-
-    stat = ("cpu  120 1 60 2000 17 2 3 34 15 1\n"
-            "cpu1 20 1 10 500 7 2 3 4 15 1\n"
-            "cpu2 9 0 0 100 0 0 0 30 0 0\n")
-    monkeypatch.setattr(bench, "open", lambda *a, **k: io.StringIO(stat),
-                        raising=False)
-    busy, steal = bench._HostLoadGauge([1], [2])._read()
-    assert busy == 20 + 1 + 10 + 2 + 3   # user nice system irq softirq
-    assert steal == 30
 
 
 def test_timed_out_leg_keeps_banked_attempts(stub_env):

@@ -37,6 +37,10 @@ def test_connected_components_long_chain(spark):
     )
     comp = connected_components(edges)
     assert comp.select("component").distinct().count() == 1
+    # one round cannot close a 33-node chain: fail loudly, never return
+    # partial labels
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
 
 
 def test_find_best_links_one_to_one(spark):
@@ -161,6 +165,19 @@ def test_checkpoint_format_env_gate(spark, tmp_path, monkeypatch):
     assert not mgr.exists("stage1")
     (tmp_path / "ice" / "stage1" / "metadata").mkdir(parents=True)
     assert mgr.exists("stage1")
+
+
+def test_checkpoint_resume_with_uri_base_dir(spark, tmp_path, monkeypatch):
+    """A ``file://`` base_dir resumes like a plain path: the committed
+    stage is reused, not rewritten by a second stage() call."""
+    from rlerrorgenerator_spark.checkpoint import CheckpointManager
+
+    monkeypatch.delenv("SPARK_GRAFT_CKPT_FORMAT", raising=False)
+    mgr = CheckpointManager(spark, (tmp_path / "ck").as_uri())
+    assert not mgr.exists("s")
+    assert mgr.stage(spark.range(3), "s").count() == 3
+    assert mgr.exists("s")
+    assert mgr.stage(spark.range(5), "s").count() == 3
 
 
 def test_osa_distance_known_values():
