@@ -12,7 +12,8 @@ semantics", `/root/reference/R/1_error.R:48-109`):
 Scale design: candidate sampling is a distributed seeded top-k
 (``orderBy(xxhash64).limit(k)`` → TakeOrderedAndProject, no global
 shuffle), or hash-Bernoulli for the 10^12-row path; the mutation itself is
-either a built-in column expression or one Arrow-batched pandas UDF.
+either a built-in column expression or an Arrow-batched pandas UDF (one
+per run of consecutive editors on the Bernoulli path).
 """
 
 from __future__ import annotations
@@ -60,6 +61,13 @@ def lineage_entry(col: str, error: str, before: Column, after: Column, ts: int) 
         after.cast("string").alias("after"),
         F.lit(ts).cast("long").alias("ts"),
     )
+
+
+def explode_lineage(df: DataFrame) -> DataFrame:
+    """Accumulated-lineage array column → lineage table rows."""
+    return df.select(
+        F.col(KEY).alias("rid"), F.explode(LINEAGE_ARRAY_COL).alias("e")
+    ).select("rid", "e.field", "e.error", "e.before", "e.after", "e.ts")
 
 
 def union_lineage(dfs: list) -> DataFrame | None:
@@ -165,9 +173,10 @@ def apply_cell_edit(
     - ``selected`` is a COLUMN predicate (Bernoulli scale path): the edit
       is one narrow projection — ``__sel`` flag, ``__after`` value,
       conditional overwrite. Zero joins, zero jobs; consecutive transforms
-      fuse into one codegen stage. ``new_value`` may reference ``__sel``
-      (pandas UDFs use it to skip unselected rows cheaply, since Spark
-      evaluates UDFs under ``when`` unconditionally).
+      fuse into one codegen stage. ``new_value`` may reference ``__sel``.
+      The pandas-UDF editors do not come through here on this path: they
+      test eligibility on the value inside one fused UDF
+      (``edit.apply_edit_steps``).
     - ``selected`` is a key DataFrame (exact-k path): ``new_value`` is
       evaluated ONLY over the semi-joined selected rows, then the k-row
       edit set joins back (broadcast under the session threshold/AQE).

@@ -7,14 +7,19 @@ rows ``(error, amount, col_names, arguments)``; ``amount<1`` is a fraction
 function name via a registry; ``add_duplicates`` always held for last
 (`R/1_error.R:115-126`).
 
-Spark lifecycle (SURVEY.md §3.1): each config row appends lazy DataFrame
-plan (narrow ops + small joins + at most one pandas UDF); because each
-stage references its input ~3× (candidate scan, edit set, patch join),
-un-checkpointed plans grow ~3^k — the driver therefore checkpoints each
-stage (``localCheckpoint`` volatile, or durable parquet/Iceberg via a
-``CheckpointManager``), exactly the per-stage snapshot discipline of the
-reference (`benchmarking/utils.R:504-641`) and the north rule's resumable
-stages.
+Spark lifecycle (SURVEY.md §3.1), exact-k path: each config row appends
+lazy DataFrame plan (narrow ops + small joins + at most one pandas UDF per
+edited column); because each stage references its input ~3× (candidate
+scan, edit set, patch join), un-checkpointed plans grow ~3^k — the driver
+therefore checkpoints each stage (``localCheckpoint`` volatile, or durable
+parquet/Iceberg via a ``CheckpointManager``), exactly the per-stage
+snapshot discipline of the reference (`benchmarking/utils.R:504-641`) and
+the north rule's resumable stages.
+
+Bernoulli path: the cell ops are one narrow projection chain, staged once
+after the last cell op. Each run of consecutive editor rows
+(indel/repl/tpose) is ONE pandas UDF (``edit.apply_edit_steps``), so the
+chain crosses into Python once per run, not once per row.
 """
 
 from __future__ import annotations
@@ -29,13 +34,14 @@ from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.checkpoint import CheckpointManager
 from rlerrorgenerator_spark.operators.base import (
-    KEY,
     LINEAGE_ARRAY_COL,
     LINEAGE_ENTRY_TYPE,
     REGISTRY,
     empty_lineage,
+    explode_lineage,
     resolve_n_errors,
 )
+from rlerrorgenerator_spark.operators.edit import EDIT_STEPS, apply_edit_steps
 
 ROW_OPS = {"add_duplicates", "add_near_duplicates", "twins_generate"}
 
@@ -154,17 +160,20 @@ def mess_data(
     ts = 0
     since_ckpt = 0
     lineage_lazy_branches = 0
-    for row in ordered:
+    run_steps = []  # Bernoulli path: steps of the current run of editor rows
+    for i, row in enumerate(ordered):
         fn = REGISTRY.get(row.error)
         if fn is None:
             raise KeyError(f"unknown error transform {row.error!r}; "
                            f"registered: {sorted(REGISTRY)}")
         if not exact and ts == n_cell_ops and LINEAGE_ARRAY_COL in dirty.columns:
             # entering ROW_OPS: materialize dirty once (single pass over
-            # the whole fused cell-edit chain), extract the lineage table
+            # the whole fused cell-edit chain) unless the last cell op
+            # already staged it, and extract the lineage table
             mgr = ckpt or CheckpointManager(spark)
-            dirty = mgr.stage(dirty, f"dirty_cells_ts{ts:03d}")
-            lineage = lineage.unionByName(_explode_lineage(dirty))
+            if since_ckpt or not ts:
+                dirty = mgr.stage(dirty, f"dirty_cells_ts{ts:03d}")
+            lineage = lineage.unionByName(explode_lineage(dirty))
             lineage_lazy_branches += 1
             dirty = dirty.drop(LINEAGE_ARRAY_COL)
             since_ckpt = 0
@@ -220,11 +229,23 @@ def mess_data(
             lineage = mgr.stage(lineage, f"lineage_ts{ts:03d}")
             lineage_lazy_branches = 0
         ts += 1
-        dirty, ln = fn(
-            dirty, lineage, n_errors, col_names,
-            seed=seed, stage=f"s{ts:03d}", ts=ts,
-            exact=exact, rate=rate, **kwargs,
-        )
+        if not exact and row.error in EDIT_STEPS:
+            # consecutive editor rows share one Arrow pass: collect their
+            # steps and apply them at the end of the run
+            run_steps += EDIT_STEPS[row.error](
+                col_names, seed=seed, stage=f"s{ts:03d}", ts=ts, rate=rate,
+                **kwargs,
+            )
+            ln = None
+            if i + 1 == len(ordered) or ordered[i + 1].error not in EDIT_STEPS:
+                dirty, ln = apply_edit_steps(dirty, run_steps)
+                run_steps = []
+        else:
+            dirty, ln = fn(
+                dirty, lineage, n_errors, col_names,
+                seed=seed, stage=f"s{ts:03d}", ts=ts,
+                exact=exact, rate=rate, **kwargs,
+            )
         if ln is not None:
             lineage = lineage.unionByName(ln)
             lineage_lazy_branches += 1
@@ -238,9 +259,8 @@ def mess_data(
         if since_ckpt >= checkpoint_every and (exact or ts >= n_cell_ops):
             # exact path: per-stage snapshot discipline (plans reference
             # their input ~3x via the patch joins). Bernoulli path: the
-            # cell-edit chain is ONE fused narrow projection — no
-            # intermediate checkpoints needed or taken before the
-            # dirty_cells materialization above.
+            # cell-edit chain is ONE fused narrow projection, staged once
+            # after the last cell op (no intermediate checkpoints).
             mgr = ckpt or CheckpointManager(spark)
             dirty = mgr.stage(dirty, f"dirty_ts{ts:03d}")
             # lineage is NOT checkpointed per stage: once dirty is staged,
@@ -251,8 +271,9 @@ def mess_data(
     if not exact and LINEAGE_ARRAY_COL in dirty.columns:
         # program had no row ops: extract lineage now
         mgr = ckpt or CheckpointManager(spark)
-        dirty = mgr.stage(dirty, "dirty_cells_final")
-        lineage = lineage.unionByName(_explode_lineage(dirty))
+        if since_ckpt or not ts:
+            dirty = mgr.stage(dirty, "dirty_cells_final")
+        lineage = lineage.unionByName(explode_lineage(dirty))
         dirty = dirty.drop(LINEAGE_ARRAY_COL)
     mgr = ckpt or CheckpointManager(spark)
     if heavy:
@@ -261,7 +282,7 @@ def mess_data(
     durable = mgr.base_dir is not None
     if exact or durable or heavy:
         dirty = mgr.stage(dirty, "dirty_final")
-    # else: volatile Bernoulli path — dirty_cells is already materialized
+    # else: volatile Bernoulli path — the cell edits are already materialized
     # and the row-op tail is a few shallow ops over checkpointed parents;
     # re-materializing the whole table would double the memory-write cost
     # of injection for no plan-depth benefit.
@@ -273,13 +294,6 @@ def mess_data(
     # off materialized parents; a second full staging measured 5.7s at
     # 4 cores for zero plan-depth benefit.
     return dirty, lineage
-
-
-def _explode_lineage(dirty: DataFrame) -> DataFrame:
-    """Accumulated-lineage array column → lineage table rows."""
-    return dirty.select(
-        F.col(KEY).alias("rid"), F.explode(LINEAGE_ARRAY_COL).alias("e")
-    ).select("rid", "e.field", "e.error", "e.before", "e.after", "e.ts")
 
 
 def _params(fn) -> set[str]:

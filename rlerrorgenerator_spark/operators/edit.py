@@ -12,30 +12,76 @@ Reference semantics (`/root/reference/R/2_edit_distance_errors.R`):
   eligible position; rows need >1 distinct char (`tpose_eligible`,
   `:182-192`).
 
-All three share one shape: seeded per-row string surgery inside an
-Arrow-batched pandas UDF (the scalar R cores `indel.default`/`repl.default`
-/`tpose.base` are row-at-a-time `map_chr` loops — the slow path we never
-take). Determinism: each row's RNG is keyed on (seed, stage, rid), so the
-result is independent of partitioning.
+All three share one shape: seeded per-row string surgery on one column
+(an ``EditStep``) inside Arrow-batched pandas UDFs (the scalar R cores
+`indel.default`/`repl.default`/`tpose.base` are row-at-a-time `map_chr`
+loops — the slow path we never take). Determinism: each row's draws are
+keyed on (seed, stage, rid), so the result is independent of partitioning.
+
+Bernoulli path: ``apply_edit_steps`` runs a whole list of steps — one
+editor call, or a run of consecutive editor rows in ``mess_data`` — as ONE
+pandas UDF. The JVM computes everything that does not depend on the value
+(selection flags, per-row seeds or md5 draws); the kernel tests each
+step's eligibility on the value left by the previous steps and applies
+the edit in step order. One UDF per step would cost one Python round-trip
+per step: Catalyst cannot merge UDFs whose inputs read an earlier UDF's
+output. Exact-k path: JVM eligibility picks the top-k rows, then one UDF
+per step edits them.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import partial, reduce
+from operator import or_
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql import Column
-
 from rlerrorgenerator_spark.operators.base import (
     KEY,
+    LINEAGE_ARRAY_COL,
     apply_cell_edit,
+    choose_ids,
+    explode_lineage,
+    lineage_entry,
     register,
-    select_rows,
     split_across_cols,
+    union_lineage,
 )
 from rlerrorgenerator_spark.operators.charsets import CHARSETS, CONFUSION_MAPS
-from rlerrorgenerator_spark.rng import MD5_RNG, draw_streams, draw_token, md5_u64_str, seed64_col
+from rlerrorgenerator_spark.rng import (
+    MD5_RNG,
+    XXHASH_RNG,
+    draw_streams,
+    draw_token,
+    md5_u64_str,
+    seed64_col,
+    seeded_bernoulli,
+)
+
+
+@dataclass(frozen=True)
+class EditStep:
+    """One editor applied to one column under one stage token.
+
+    ``edit`` maps (three u64 draws, value) to the new value. ``eligible``
+    (Python, Bernoulli path) and ``eligible_col`` (JVM, exact-k path) are
+    the same predicate on a non-null value."""
+
+    col: str
+    error: str
+    stage: str
+    ts: int
+    seed: int
+    rate: float | None
+    rng: str
+    edit: Callable[[tuple[int, int, int], str], str]
+    eligible: Callable[[str], bool]
+    eligible_col: Callable[[str], Column]
 
 
 def _resolve_charset(charset: str) -> tuple[str | None, dict[str, str] | None]:
@@ -45,12 +91,10 @@ def _resolve_charset(charset: str) -> tuple[str | None, dict[str, str] | None]:
 
 
 def _seed_series_to_u64(seed64: pd.Series):
-    import numpy as np
-
     return seed64.to_numpy(dtype="int64", na_value=0).view("uint64")
 
 
-def _make_udf(fn, seed: int, stage: str):
+def _make_udf(fn):
     """Wrap a scalar (draws, str) -> str editor as an Arrow-batched pandas
     UDF over (value, seed64). The per-row seed is derived JVM-side
     (``seed64_col``); the UDF mixes it into draw streams with VECTORIZED
@@ -70,67 +114,101 @@ def _make_udf(fn, seed: int, stage: str):
     return udf
 
 
-def _make_udf_flagged(fn, seed: int, stage: str):
-    """Flag-gated variant for the inline (Bernoulli) path: Spark evaluates
-    pandas UDFs under when() unconditionally, so the selection flag is an
-    input and unselected rows skip the edit entirely."""
-    @F.pandas_udf("string")
-    def udf(val: pd.Series, flag: pd.Series, seed64: pd.Series) -> pd.Series:
-        u0, u1, u2 = draw_streams(_seed_series_to_u64(seed64), 3)
-        out = []
-        for v, f, a, b, c in zip(val.to_numpy(), flag.to_numpy(), u0, u1, u2):
-            if not f or v is None:
-                out.append(v)
-                continue
-            out.append(fn((int(a), int(b), int(c)), str(v)))
-        return pd.Series(out, dtype="object")
-
-    return udf
+def _step_draws(step: EditStep) -> list[Column]:
+    """The JVM-side draw inputs of one step: the per-row seed, or (md5
+    mode) the three u64 draws as DECIMAL STRINGS (rng.md5_u64_str — the
+    cross-engine draw a DuckDB oracle reproduces bit-identically)."""
+    if step.rng == MD5_RNG:
+        return [md5_u64_str(draw_token(step.seed, step.stage, f"d{i}"), KEY)
+                for i in range(3)]
+    return [seed64_col(KEY, step.seed, step.stage)]
 
 
-def _make_udf_md5(fn):
-    """md5-mode variant: the three u64 draws arrive as JVM-computed
-    DECIMAL STRINGS (rng.md5_u64_str — the cross-engine draw a DuckDB
-    oracle reproduces bit-identically); the UDF does no hashing at all."""
-    @F.pandas_udf("string")
-    def udf(val: pd.Series, flag: pd.Series, d0: pd.Series, d1: pd.Series,
-            d2: pd.Series) -> pd.Series:
-        out = []
-        for v, f, a, b, c in zip(val.to_numpy(), flag.to_numpy(),
-                                 d0.to_numpy(), d1.to_numpy(), d2.to_numpy()):
-            if not f or v is None:
-                out.append(v)
-                continue
-            out.append(fn((int(a), int(b), int(c)), str(v)))
-        return pd.Series(out, dtype="object")
+def _edit_kernel(steps: list[EditStep], cols: list[str]):
+    """One pandas UDF applying ``steps`` in order. Inputs: the value of
+    each column in ``cols``, then per step its selection flag and draws.
+    Output: struct ``a{k}`` = step k's result where step k was selected
+    (flag set and eligible on the current value), else NULL."""
+    fields = ", ".join(f"a{k}: string" for k in range(len(steps)))
 
-    return udf
+    @F.pandas_udf(f"struct<{fields}>")
+    def kernel(*series: pd.Series) -> pd.DataFrame:
+        vals = {c: s.to_numpy(dtype=object, copy=True)
+                for c, s in zip(cols, series)}
+        inputs = iter(series[len(cols):])
+        out = {}
+        for k, step in enumerate(steps):
+            idx = np.flatnonzero(next(inputs).to_numpy(dtype=bool, na_value=False))
+            if step.rng == MD5_RNG:
+                u = [[int(x) for x in next(inputs).to_numpy()[idx]] for _ in range(3)]
+            else:
+                u = draw_streams(_seed_series_to_u64(next(inputs))[idx], 3)
+            v = vals[step.col]
+            after = np.full(len(v), None, dtype=object)
+            for i, a, b, c in zip(idx, *u):
+                s = v[i]
+                if s is None or not step.eligible(s):
+                    continue
+                v[i] = after[i] = step.edit((int(a), int(b), int(c)), s)
+            out[f"a{k}"] = after
+        return pd.DataFrame(out)
+
+    return kernel
 
 
-def _apply_editor(df, col, scalar_fn, error_name, per_col, seed, st, ts,
-                  exact, rate, eligible, rng_mode: str = "xxhash"):
-    """Shared skeleton: selection (exact-k DataFrame or inline predicate)
-    + UDF wiring + apply_cell_edit."""
-    sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng_mode)
-    if isinstance(sel, Column):
-        # ship NULL instead of the (KB-scale) value for unselected rows:
-        # the Arrow exchange then carries ~rate×|col| bytes instead of
-        # |col| bytes — at a few % selection this cuts the Python
-        # round-trip ~20×, the measured bandwidth bound of the inject
-        # stage. Selected ⇒ eligible ⇒ non-null, so NULL is unambiguous.
-        gated = F.when(F.col("__sel"), F.col(col))
-        if rng_mode == MD5_RNG:
-            udf = _make_udf_md5(scalar_fn)
-            draws = [md5_u64_str(draw_token(seed, st, f"d{i}"), KEY)
-                     for i in range(3)]
-            new_value = udf(gated, F.col("__sel"), *draws)
-        else:
-            udf = _make_udf_flagged(scalar_fn, seed, st)
-            new_value = udf(gated, F.col("__sel"), seed64_col(KEY, seed, st))
-    else:
-        udf = _make_udf(scalar_fn, seed, st)
-        new_value = udf(F.col(col), seed64_col(KEY, seed, st))
-    return apply_cell_edit(df, col, sel, new_value, error_name, ts)
+def apply_edit_steps(df: DataFrame, steps: list[EditStep]
+                     ) -> tuple[DataFrame, DataFrame | None]:
+    """Bernoulli path: apply ``steps`` in order in one Arrow pass.
+
+    A column's value crosses to Python only on rows where some step on it
+    has its flag set, so the exchange carries ~rate×bytes, not table
+    bytes. The JVM rebuilds each step's ``before`` (the latest earlier
+    result on its column, else the input) and each column's final value
+    from the per-step results. Lineage entries follow step order; they are
+    appended to the accumulated-lineage column when ``df`` has one,
+    otherwise returned as an explicit lineage DataFrame."""
+    if not steps:
+        return df, None
+    cols = list(dict.fromkeys(s.col for s in steps))
+    flags = [seeded_bernoulli(KEY, s.seed, s.stage, s.rate, s.rng) for s in steps]
+    gated = [F.when(reduce(or_, [f for s, f in zip(steps, flags) if s.col == c]),
+                    F.col(c)) for c in cols]
+    inputs = [x for s, f in zip(steps, flags) for x in [f, *_step_draws(s)]]
+    tmp = df.withColumn("__edits", _edit_kernel(steps, cols)(*gated, *inputs))
+    current = {c: [F.col(c)] for c in cols}  # latest result first
+    entries = []
+    for k, s in enumerate(steps):
+        after = F.col(f"__edits.a{k}")
+        entries.append(F.when(after.isNotNull(), lineage_entry(
+            s.col, s.error, F.coalesce(*current[s.col]), after, s.ts)))
+        current[s.col].insert(0, after)
+    new_entries = F.array_compact(F.array(*entries))
+    exprs = {c: F.coalesce(*current[c]) for c in cols}
+    accumulate = LINEAGE_ARRAY_COL in df.columns
+    if accumulate:
+        exprs[LINEAGE_ARRAY_COL] = F.concat(F.col(LINEAGE_ARRAY_COL), new_entries)
+    out = tmp.select(*[exprs.get(c, F.col(c)).alias(c) for c in df.columns])
+    if accumulate:
+        return out, None
+    return out, explode_lineage(
+        tmp.select(KEY, new_entries.alias(LINEAGE_ARRAY_COL)))
+
+
+def _run_editor(df: DataFrame, steps: list[EditStep], n_errors: int,
+                exact: bool) -> tuple[DataFrame, DataFrame | None]:
+    """A registered editor's body: one fused pass (Bernoulli), or per step
+    a seeded top-k on JVM eligibility plus one UDF over the k rows."""
+    if not exact:
+        return apply_edit_steps(df, steps)
+    per_col = split_across_cols(n_errors, len(steps))
+    lineages = []
+    for s in steps:
+        sel = choose_ids(df, s.eligible_col(s.col), per_col, s.seed, s.stage,
+                         True, s.rate)
+        new_value = _make_udf(s.edit)(F.col(s.col), seed64_col(KEY, s.seed, s.stage))
+        df, ln = apply_cell_edit(df, s.col, sel, new_value, s.error, s.ts)
+        lineages.append(ln)
+    return df, union_lineage(lineages)
 
 
 def _indel_one(u, s: str, charset: str) -> str:
@@ -188,74 +266,103 @@ def _tpose_one(u, s: str) -> str:
     return s[:pos] + s[pos + 1] + s[pos] + s[pos + 2:]
 
 
+def _non_empty(s: str) -> bool:
+    return len(s) > 0
+
+
+def _non_empty_col(col: str) -> Column:
+    return F.col(col).isNotNull() & (F.length(col) > 0)
+
+
+def _has_confusable(confusion: dict[str, str], s: str) -> bool:
+    return any(c in confusion for c in s)
+
+
+def _has_confusable_col(confusion: dict[str, str], col: str) -> Column:
+    pat = "[" + "".join(sorted(set(confusion))).replace("\\", "\\\\").replace("]", "\\]") + "]"
+    return _non_empty_col(col) & F.col(col).rlike(pat)
+
+
+def _tpose_eligible(s: str) -> bool:
+    # tpose_eligible (`R/2_edit:182-192`): >1 distinct character
+    return len(s) > 1 and s != s[0] * len(s)
+
+
+def _tpose_eligible_col(col: str) -> Column:
+    # JVM form: length>1 AND the string differs from its first char repeated
+    return (
+        F.col(col).isNotNull()
+        & (F.length(col) > 1)
+        & (F.col(col) != F.expr(f"repeat(substring({col}, 1, 1), length({col}))"))
+    )
+
+
+def indel_steps(col_names: list[str], *, seed: int, stage: str, ts: int,
+                rate: float | None = None, charset: str = "letters",
+                rng: str = XXHASH_RNG) -> list[EditStep]:
+    cs, _ = _resolve_charset(charset)
+    return [EditStep(col, "indel", f"{stage}|indel|{col}", ts, seed, rate, rng,
+                     partial(_indel_one, charset=cs), _non_empty, _non_empty_col)
+            for col in col_names]
+
+
+def repl_steps(col_names: list[str], *, seed: int, stage: str, ts: int,
+               rate: float | None = None, charset: str = "letters",
+               rng: str = XXHASH_RNG) -> list[EditStep]:
+    cs, confusion = _resolve_charset(charset)
+    name = "repl" if confusion is None else f"repl_{charset}"
+    edit = partial(_repl_one, charset=cs, confusion=confusion)
+    if confusion is None:
+        eligible, eligible_col = _non_empty, _non_empty_col
+    else:
+        # only rows containing a confusable char are eligible
+        eligible = partial(_has_confusable, confusion)
+        eligible_col = partial(_has_confusable_col, confusion)
+    return [EditStep(col, name, f"{stage}|repl|{col}", ts, seed, rate, rng,
+                     edit, eligible, eligible_col)
+            for col in col_names]
+
+
+def tpose_steps(col_names: list[str], *, seed: int, stage: str, ts: int,
+                rate: float | None = None, rng: str = XXHASH_RNG) -> list[EditStep]:
+    return [EditStep(col, "tpose", f"{stage}|tpose|{col}", ts, seed, rate, rng,
+                     _tpose_one, _tpose_eligible, _tpose_eligible_col)
+            for col in col_names]
+
+
+# error name -> step builder; ``mess_data`` fuses runs of these rows
+EDIT_STEPS: dict[str, Callable[..., list[EditStep]]] = {
+    "indel": indel_steps,
+    "repl": repl_steps,
+    "tpose": tpose_steps,
+}
+
+
 @register("indel")
 def indel(df: DataFrame, lineage: DataFrame, n_errors: int, col_names: list[str],
           *, seed: int, stage: str, ts: int, charset: str = "letters",
-          exact: bool = True, rate: float | None = None, rng: str = "xxhash"):
+          exact: bool = True, rate: float | None = None, rng: str = XXHASH_RNG):
     """Insert-or-delete one char (`R/2_edit_distance_errors.R:5-93`)."""
-    per_col = split_across_cols(n_errors, len(col_names))
-    cs, _ = _resolve_charset(charset)
-    lineages = []
-    for col in col_names:
-        st = f"{stage}|indel|{col}"
-        eligible = F.col(col).isNotNull() & (F.length(col) > 0)
-        df, ln = _apply_editor(df, col, lambda u, s, cs=cs: _indel_one(u, s, cs),
-                               "indel", per_col, seed, st, ts, exact, rate,
-                               eligible, rng_mode=rng)
-        lineages.append(ln)
-    return df, _union(lineages)
+    steps = indel_steps(col_names, seed=seed, stage=stage, ts=ts, rate=rate,
+                        charset=charset, rng=rng)
+    return _run_editor(df, steps, n_errors, exact)
 
 
 @register("repl")
 def repl(df: DataFrame, lineage: DataFrame, n_errors: int, col_names: list[str],
          *, seed: int, stage: str, ts: int, charset: str = "letters",
-         exact: bool = True, rate: float | None = None, rng: str = "xxhash"):
+         exact: bool = True, rate: float | None = None, rng: str = XXHASH_RNG):
     """Replace one char with a different one (`R/2_edit:99-180`); with
     ``charset='keyboard'|'ocr'`` replacement follows a confusion map."""
-    per_col = split_across_cols(n_errors, len(col_names))
-    cs, confusion = _resolve_charset(charset)
-    lineages = []
-    for col in col_names:
-        st = f"{stage}|repl|{col}"
-        eligible = F.col(col).isNotNull() & (F.length(col) > 0)
-        if confusion is not None:
-            # only rows containing a confusable char are eligible
-            pat = "[" + "".join(sorted(set(confusion))).replace("\\", "\\\\").replace("]", "\\]") + "]"
-            eligible = eligible & F.col(col).rlike(pat)
-        name = "repl" if confusion is None else f"repl_{charset}"
-        df, ln = _apply_editor(
-            df, col, lambda u, s, cs=cs, cf=confusion: _repl_one(u, s, cs, cf),
-            name, per_col, seed, st, ts, exact, rate, eligible, rng_mode=rng,
-        )
-        lineages.append(ln)
-    return df, _union(lineages)
+    steps = repl_steps(col_names, seed=seed, stage=stage, ts=ts, rate=rate,
+                       charset=charset, rng=rng)
+    return _run_editor(df, steps, n_errors, exact)
 
 
 @register("tpose")
 def tpose(df: DataFrame, lineage: DataFrame, n_errors: int, col_names: list[str],
           *, seed: int, stage: str, ts: int, exact: bool = True,
-          rate: float | None = None, rng: str = "xxhash"):
+          rate: float | None = None, rng: str = XXHASH_RNG):
     """Transpose two adjacent differing chars (`R/2_edit:199-276`)."""
-    per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
-    for col in col_names:
-        st = f"{stage}|tpose|{col}"
-        # tpose_eligible (`R/2_edit:182-192`): >1 distinct character. A
-        # cheap JVM-side proxy: length>1 AND not all chars equal (string
-        # differs from its first char repeated).
-        eligible = (
-            F.col(col).isNotNull()
-            & (F.length(col) > 1)
-            & (F.col(col) != F.expr(f"repeat(substring({col}, 1, 1), length({col}))"))
-        )
-        df, ln = _apply_editor(df, col, lambda u, s: _tpose_one(u, s),
-                               "tpose", per_col, seed, st, ts, exact, rate,
-                               eligible, rng_mode=rng)
-        lineages.append(ln)
-    return df, _union(lineages)
-
-
-def _union(dfs):
-    from rlerrorgenerator_spark.operators.base import union_lineage
-
-    return union_lineage(dfs)
+    steps = tpose_steps(col_names, seed=seed, stage=stage, ts=ts, rate=rate, rng=rng)
+    return _run_editor(df, steps, n_errors, exact)

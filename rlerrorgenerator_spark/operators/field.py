@@ -7,10 +7,8 @@ Python on the executor hot path (whole-stage codegen end to end).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from pyspark.sql import Column
 
 from rlerrorgenerator_spark.operators.base import (
     KEY,

@@ -82,7 +82,7 @@ def _sel_tok(st: str) -> str:
 
 
 def _d_tok(st: str, i: int) -> str:
-    """Editor draw tokens used by edit._apply_editor(rng='md5')."""
+    """Editor draw tokens used by edit._step_draws (rng='md5')."""
     return draw_token(SEED, st, f"d{i}")
 
 

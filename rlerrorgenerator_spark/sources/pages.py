@@ -34,10 +34,11 @@ _SYLLABLES = [
     "ta", "ne", "ri", "so", "lu", "ma", "ke", "vi", "do", "pa",
     "she", "tro", "gli", "fen", "cor", "bal", "mun", "dis", "qua", "zer",
 ]
-_VOCAB = [a + b for a in _SYLLABLES for b in _SYLLABLES] + [
+# an array, not a list: ``rng.choice`` would convert a list on every call
+_VOCAB = np.array([a + b for a in _SYLLABLES for b in _SYLLABLES] + [
     "the", "and", "for", "with", "from", "page", "report", "data",
     "about", "index", "news", "update", "archive", "info",
-]
+])
 _LANGS = ["en", "de", "fr", "es", "it"]
 _LANG_W = np.array([0.55, 0.15, 0.12, 0.10, 0.08])
 _TLDS = ["com", "org", "net", "io", "dev"]

@@ -29,3 +29,14 @@ def test_deterministic_across_partitionings(spark):
 def test_urls_unique(spark):
     df = synth_pages(spark, 500, seed=42)
     assert df.select("url").distinct().count() == 500
+
+
+def test_rows_for_ids_pinned():
+    """Page generation is a fixed function of (ids, seed, n_total)."""
+    import hashlib
+
+    from rlerrorgenerator_spark.sources.pages import _rows_for_ids
+
+    df = _rows_for_ids(range(50), 7, 1000, (200, 600))
+    assert hashlib.sha256(df.to_csv(index=False).encode()).hexdigest() == (
+        "fa05748add3cc6e32bbf97ce78d9e9187f896068af301815236909a5d339fc0c")
