@@ -412,7 +412,7 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
     # latencies (AQE replans, codegen, broadcast builds), which
     # dominate wall time at 32 threads on MB-scale sandbox inputs
     # and would dominate nothing at 100 TB.
-    n_small = int(os.environ.get("SPARK_GRAFT_SCALING_N", "1"))
+    n_small = 1
     n_big = 4 * n_small
     # Input sized so parallel compute dominates the fixed per-job driver
     # overheads AND several rounds fit the budget. History: 240k rows

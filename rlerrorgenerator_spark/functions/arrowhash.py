@@ -73,17 +73,6 @@ def _avalanche(h: np.ndarray) -> np.ndarray:
     return h
 
 
-def xxh64_u64(v: np.ndarray, seed) -> np.ndarray:
-    """XXH64 of one little-endian u64 lane (the single-lane
-    specialization of the reference algorithm), vectorized.
-    ``seed`` is an np.uint64 scalar or array."""
-    h = seed + P5 + _U64(8)
-    k = _rotl(v * P2, 31) * P1
-    h = h ^ k
-    h = _rotl(h, 27) * P1 + P4
-    return _avalanche(h)
-
-
 def _string_buffer_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(starts, lens, data) views into a StringArray's buffers, offset-safe."""
     off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[

@@ -5,6 +5,15 @@ Each transform is a pure function
   → (df', new_lineage_rows)``
 mirroring the reference's dispatch contract (`/root/reference/R/1_error.R:62-106`)
 but returning the lineage explicitly (Spark has no attributes-on-DataFrames).
+
+Cell transforms record lineage in the table itself: each edit appends an
+entry to the ``__lineage`` array column in the same projection.
+``register`` wraps them, so a standalone call on a table without that
+column seeds it from ``lineage`` and returns the table without it, plus
+the appended entries as lineage rows; inside ``mess_data`` (table with
+the column) the entries stay in the column and ``None`` is returned. The
+row-generating transforms (``base.ROW_OPS``) return their lineage rows
+explicitly.
 """
 
 from rlerrorgenerator_spark.operators.base import (

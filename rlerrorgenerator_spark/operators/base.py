@@ -11,13 +11,16 @@ semantics", `/root/reference/R/1_error.R:48-109`):
 
 Scale design: candidate sampling is a distributed seeded top-k
 (``orderBy(xxhash64).limit(k)`` → TakeOrderedAndProject, no global
-shuffle), or hash-Bernoulli for the 10^12-row path; the mutation itself is
-either a built-in column expression or an Arrow-batched pandas UDF (one
-per run of consecutive editors on the Bernoulli path).
+shuffle), or hash-Bernoulli for the 10^12-row path. Either way the
+selection reaches the edit as a boolean column, and the edit appends its
+lineage to the in-row ``__lineage`` array in the same projection. The
+mutation itself is a built-in column expression or an Arrow-batched
+pandas UDF (``edit.apply_edit_steps``).
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Callable
 
@@ -25,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rlerrorgenerator_spark.rng import bernoulli_col, rank_col, seeded_bernoulli
+from rlerrorgenerator_spark.rng import rank_col, seeded_bernoulli
 
 KEY = "rid"
 
@@ -40,13 +43,13 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
-# Accumulated-lineage column (Bernoulli scale path): instead of one lazy
-# lineage DataFrame branch per stage — each re-running every pandas-UDF
-# stage since the last checkpoint when finally materialized (quadratic
-# re-execution; the round-1 inject-stage scaling killer) — the dirty
-# table carries its own lineage as an array<struct> column appended in
-# the SAME projection as the edit. One pass computes dirty AND lineage;
-# the driver explodes the column once at the end.
+# Accumulated-lineage column: instead of one lazy lineage DataFrame
+# branch per stage — each re-running every pandas-UDF stage since the
+# last checkpoint when finally materialized (quadratic re-execution; the
+# round-1 inject-stage scaling killer) — the dirty table carries its own
+# lineage as an array<struct> column appended in the SAME projection as
+# the edit. One pass computes dirty AND lineage; the driver explodes the
+# column once, before the row-generating ops.
 LINEAGE_ARRAY_COL = "__lineage"
 LINEAGE_ENTRY_TYPE = (
     "array<struct<field:string,error:string,before:string,after:string,ts:bigint>>"
@@ -63,6 +66,10 @@ def lineage_entry(col: str, error: str, before: Column, after: Column, ts: int) 
     )
 
 
+def empty_lineage_col() -> Column:
+    return F.expr("array()").cast(LINEAGE_ENTRY_TYPE)
+
+
 def explode_lineage(df: DataFrame) -> DataFrame:
     """Accumulated-lineage array column → lineage table rows."""
     return df.select(
@@ -70,23 +77,54 @@ def explode_lineage(df: DataFrame) -> DataFrame:
     ).select("rid", "e.field", "e.error", "e.before", "e.after", "e.ts")
 
 
-def union_lineage(dfs: list) -> DataFrame | None:
-    """Union explicit lineage branches, ignoring accumulate-mode Nones."""
-    real = [d for d in dfs if d is not None]
-    if not real:
-        return None
-    out = real[0]
-    for d in real[1:]:
-        out = out.unionByName(d)
-    return out
+def with_lineage_col(df: DataFrame, lineage: DataFrame | None) -> DataFrame:
+    """Lineage table rows → accumulated-lineage array column on ``df``."""
+    if lineage is None:
+        return df.withColumn(LINEAGE_ARRAY_COL, empty_lineage_col())
+    prior = lineage.groupBy(F.col("rid").alias(KEY)).agg(
+        F.collect_list(F.struct("field", "error", "before", "after", "ts"))
+        .cast(LINEAGE_ENTRY_TYPE).alias(LINEAGE_ARRAY_COL))
+    return df.join(prior, KEY, "left").select(
+        *df.columns,
+        F.coalesce(LINEAGE_ARRAY_COL, empty_lineage_col()).alias(LINEAGE_ARRAY_COL))
+
+
+# Row-generating transforms: they append rows, read the finished lineage
+# table and return their lineage rows explicitly. ``mess_data`` runs them
+# after every cell transform.
+ROW_OPS = {"add_duplicates", "add_near_duplicates", "twins_generate"}
 
 # name -> transform fn; mirrors the reference's by-name dynamic dispatch
 # from the error-table config (`/root/reference/R/1_error.R:95-100`).
 REGISTRY: dict[str, Callable] = {}
 
 
+def _cell_transform(fn):
+    """A cell transform edits ``df`` in place and appends its lineage to
+    ``__lineage``; this wrapper gives it the public contract
+    ``(df, lineage, ...) → (df', new_lineage_rows)``. On a table that
+    carries ``__lineage`` (inside ``mess_data``) the new rows stay in the
+    column and ``None`` is returned. Otherwise (a standalone call) the
+    column is seeded from ``lineage``, and the result comes back without
+    it, plus the appended entries as lineage rows."""
+    @functools.wraps(fn)
+    def run(df: DataFrame, lineage: DataFrame | None, *args, **kwargs):
+        if LINEAGE_ARRAY_COL in df.columns:
+            return fn(df, lineage, *args, **kwargs), None
+        seeded = with_lineage_col(df, lineage) \
+            .withColumn("__n0", F.size(LINEAGE_ARRAY_COL))
+        out = fn(seeded, lineage, *args, **kwargs)
+        appended = out.withColumn(LINEAGE_ARRAY_COL, F.filter(
+            LINEAGE_ARRAY_COL, lambda e, i: i >= F.col("__n0")))
+        return out.drop(LINEAGE_ARRAY_COL, "__n0"), explode_lineage(appended)
+
+    return run
+
+
 def register(name: str):
     def deco(fn):
+        if name not in ROW_OPS:
+            fn = _cell_transform(fn)
         REGISTRY[name] = fn
         fn.__transform_name__ = name
         return fn
@@ -144,110 +182,59 @@ def select_rows(
     exact: bool = True,
     rate: float | None = None,
     rng: str = "xxhash",
-) -> DataFrame | Column:
-    """Row selection for a transform: either a key DataFrame (exact-k via
-    seeded top-k) or — the scale path — a plain boolean COLUMN predicate
-    (eligible ∧ hash-Bernoulli). The predicate form lets ``apply_cell_edit``
-    run the entire stage as one narrow projection: no joins, no per-stage
-    job, whole chains of transforms fuse into a single codegen stage.
-    Same selected set as ``choose_ids(exact=False)`` (same hash)."""
-    if exact:
-        return choose_ids(df, eligible, k, seed, stage, True, rate)
-    assert rate is not None
-    return eligible & seeded_bernoulli(KEY, seed, stage, rate, rng)
+) -> tuple[DataFrame, Column]:
+    """Row selection for a transform, as a boolean COLUMN over the
+    returned table.
+
+    Bernoulli (``exact=False``): eligible ∧ hash-Bernoulli, a plain
+    predicate (same set as ``choose_ids(exact=False)``); the table is
+    returned unchanged. Exact-k: the seeded top-k key set of
+    ``choose_ids`` is left-joined onto the table as the ``__sel`` flag.
+    Either way ``apply_cell_edit`` runs the edit as one projection."""
+    if not exact:
+        assert rate is not None
+        return df, eligible & seeded_bernoulli(KEY, seed, stage, rate, rng)
+    return flag_keys(df, choose_ids(df, eligible, k, seed, stage, True, rate))
+
+
+def flag_keys(df: DataFrame, keys: DataFrame, on: str = KEY
+              ) -> tuple[DataFrame, Column]:
+    """Left-join a key set onto ``df`` as the ``__sel`` flag column."""
+    flags = keys.select(on, F.lit(True).alias("__sel"))
+    return (df.join(flags, on, "left").select(*df.columns, "__sel"),
+            F.coalesce(F.col("__sel"), F.lit(False)))
 
 
 def apply_cell_edit(
     df: DataFrame,
     col: str,
-    selected: DataFrame | Column,
+    selected: Column,
     new_value: Column,
     error: str,
     ts: int,
     lineage_after: Column | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Overwrite ``col`` with ``new_value`` on selected rows; emit lineage.
+) -> DataFrame:
+    """Overwrite ``col`` with ``new_value`` on selected rows and append
+    each edit's lineage entry to ``__lineage``, in one narrow projection:
+    ``__sel`` flag, ``__after`` value, conditional overwrite. Zero joins,
+    zero jobs; consecutive transforms fuse into one codegen stage.
+    ``selected`` comes from ``select_rows``; ``new_value`` may reference
+    ``__sel`` and is evaluated on every row, so it must be total. The
+    pandas-UDF editors do not come through here: they test eligibility on
+    the value inside one UDF (``edit.apply_edit_steps``).
 
-    Two selection forms:
-
-    - ``selected`` is a COLUMN predicate (Bernoulli scale path): the edit
-      is one narrow projection — ``__sel`` flag, ``__after`` value,
-      conditional overwrite. Zero joins, zero jobs; consecutive transforms
-      fuse into one codegen stage. ``new_value`` may reference ``__sel``.
-      The pandas-UDF editors do not come through here on this path: they
-      test eligibility on the value inside one fused UDF
-      (``edit.apply_edit_steps``).
-    - ``selected`` is a key DataFrame (exact-k path): ``new_value`` is
-      evaluated ONLY over the semi-joined selected rows, then the k-row
-      edit set joins back (broadcast under the session threshold/AQE).
-
-    Lineage: when ``df`` carries the accumulated-lineage array column
-    (Bernoulli path; see ``LINEAGE_ARRAY_COL``), the entry is appended in
-    the SAME projection and the returned lineage DataFrame is ``None``;
-    otherwise an explicit lineage DataFrame is returned.
     ``lineage_after`` overrides the recorded ``after`` value (e.g.
     ``make_missing`` records ``""`` per the reference convention).
     """
-    accumulate = LINEAGE_ARRAY_COL in df.columns
-
-    if isinstance(selected, Column):
-        tmp = df.withColumn("__sel", selected).withColumn("__after", new_value)
-        after_rec = lineage_after if lineage_after is not None else F.col("__after")
-        if accumulate:
-            entry = lineage_entry(col, error, F.col(col), after_rec, ts)
-            out = tmp.withColumn(
-                LINEAGE_ARRAY_COL,
-                F.when(F.col("__sel"),
-                       F.array_append(F.col(LINEAGE_ARRAY_COL), entry))
-                .otherwise(F.col(LINEAGE_ARRAY_COL)),
-            )
-            out = out.withColumn(
-                col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col))
-            ).drop("__sel", "__after")
-            return out, None
-        lineage_new = tmp.where(F.col("__sel")).select(
-            F.col(KEY).alias("rid"),
-            F.lit(col).alias("field"),
-            F.lit(error).alias("error"),
-            F.col(col).cast("string").alias("before"),
-            after_rec.cast("string").alias("after"),
-            F.lit(ts).cast("long").alias("ts"),
-        )
-        out = tmp.withColumn(
-            col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col))
-        ).drop("__sel", "__after")
-        return out, lineage_new
-
-    sel_rows = df.join(selected.select(KEY), KEY, "left_semi")
-    edited = sel_rows.withColumn("__after", new_value).select(
-        F.col(KEY),
-        F.col(col).cast("string").alias("__before"),
-        F.col("__after"),
+    tmp = df.withColumn("__sel", selected).withColumn("__after", new_value)
+    after_rec = lineage_after if lineage_after is not None else F.col("__after")
+    entry = lineage_entry(col, error, F.col(col), after_rec, ts)
+    out = tmp.withColumn(
+        LINEAGE_ARRAY_COL,
+        F.when(F.col("__sel"),
+               F.array_append(F.col(LINEAGE_ARRAY_COL), entry))
+        .otherwise(F.col(LINEAGE_ARRAY_COL)),
     )
-    after_rec = (lineage_after if lineage_after is not None
-                 else F.col("__after").cast("string"))
-    patch = edited.select(KEY, F.lit(True).alias("__sel"), "__after")
-    out = df.join(patch, KEY, "left")
-    if accumulate:
-        entry = lineage_entry(col, error, F.col(col), after_rec, ts)
-        out = out.withColumn(
-            LINEAGE_ARRAY_COL,
-            F.when(F.col("__sel").isNotNull(),
-                   F.array_append(F.col(LINEAGE_ARRAY_COL), entry))
-            .otherwise(F.col(LINEAGE_ARRAY_COL)),
-        )
-        lineage_new = None
-    else:
-        lineage_new = edited.select(
-            F.col(KEY).alias("rid"),
-            F.lit(col).alias("field"),
-            F.lit(error).alias("error"),
-            F.col("__before").alias("before"),
-            after_rec.alias("after"),
-            F.lit(ts).cast("long").alias("ts"),
-        )
-    out = (
-        out.withColumn(col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col)))
-        .drop("__sel", "__after")
-    )
-    return out, lineage_new
+    return out.withColumn(
+        col, F.when(F.col("__sel"), F.col("__after")).otherwise(F.col(col))
+    ).drop("__sel", "__after")

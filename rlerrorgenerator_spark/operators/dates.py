@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.operators.base import (
     KEY,
+    LINEAGE_ARRAY_COL,
     apply_cell_edit,
     register,
     select_rows,
@@ -58,7 +59,6 @@ def date_swap(df: DataFrame, lineage: DataFrame, n_errors: int,
     """Swap day↔month where ``day < 13 && month != day``
     (`R/7_dob_errors.R:28-82`)."""
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|date_swap|{col}"
         is_ts = _is_ts(df, col)
@@ -68,17 +68,16 @@ def date_swap(df: DataFrame, lineage: DataFrame, n_errors: int,
             & (F.dayofmonth(d) < 13)
             & (F.month(d) != F.dayofmonth(d))
         )
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
-        # SELF-GUARDED make_date: Catalyst may push this projection below
-        # the selection semi-join (expressions are assumed pure), so under
-        # ANSI mode the swapped date must be total over ALL rows — the
-        # lazy CASE WHEN keeps make_date off the ineligible branch.
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        # SELF-GUARDED make_date: the edit projection is evaluated on
+        # every row (selection is a flag column), so under ANSI mode the
+        # swapped date must be total over ALL rows — the lazy CASE WHEN
+        # keeps make_date off the ineligible branch.
         swapped = F.when(eligible, F.make_date(F.year(d), F.dayofmonth(d), F.month(d))) \
                    .otherwise(d)
         new = _rebuild(col, is_ts, swapped)
-        df, ln = apply_cell_edit(df, col, sel, new, "date_swap", ts)
-        lineages.append(ln)
-    return df, _union(lineages)
+        df = apply_cell_edit(df, col, sel, new, "date_swap", ts)
+    return df
 
 
 @register("date_transpose")
@@ -97,7 +96,6 @@ def date_transpose(df: DataFrame, lineage: DataFrame, n_errors: int,
         raise ValueError(f"date_transpose: unsupported token {token!r} "
                          "(month branch is a reference defect, SURVEY §2.A#22)")
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|date_tpose_{token}|{col}"
         is_ts = _is_ts(df, col)
@@ -110,8 +108,8 @@ def date_transpose(df: DataFrame, lineage: DataFrame, n_errors: int,
                 & (newday != day) & (newday >= 1)
                 & (newday <= F.dayofmonth(F.last_day(d)))
             )
-            # guarded: projection may be evaluated on ineligible rows
-            # (pushed below the selection join) — see date_swap note
+            # guarded: the projection is evaluated on ineligible rows too
+            # — see date_swap note
             new_date = F.when(eligible, F.make_date(F.year(d), F.month(d), newday)) \
                         .otherwise(d)
         else:
@@ -131,11 +129,10 @@ def date_transpose(df: DataFrame, lineage: DataFrame, n_errors: int,
             new_date = F.when(
                 eligible, F.make_date(newy, F.month(d), F.dayofmonth(d))
             ).otherwise(d)
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
         new = _rebuild(col, is_ts, new_date)
-        df, ln = apply_cell_edit(df, col, sel, new, f"date_transpose_{token}", ts)
-        lineages.append(ln)
-    return df, _union(lineages)
+        df = apply_cell_edit(df, col, sel, new, f"date_transpose_{token}", ts)
+    return df
 
 
 @register("date_replace")
@@ -155,7 +152,6 @@ def date_replace(df: DataFrame, lineage: DataFrame, n_errors: int,
     if token not in ("day", "month", "year"):
         raise ValueError(f"date_replace: bad token {token!r}")
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|date_repl_{token}|{col}"
         is_ts = _is_ts(df, col)
@@ -207,25 +203,19 @@ def date_replace(df: DataFrame, lineage: DataFrame, n_errors: int,
             newday = F.greatest(F.lit(1), F.least(cand, maxday))
             eligible = F.col(col).isNotNull()
             new_date = F.make_date(F.year(d), F.month(d), newday)
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
         new = _rebuild(col, is_ts, new_date)
-        df, ln = apply_cell_edit(df, col, sel, new, f"date_replace_{token}", ts)
-        # drop no-op lineage rows (e.g. month replace that clamped back)
-        if ln is None:
-            # accumulate mode: prune the no-op entry from the in-row array
-            from rlerrorgenerator_spark.operators.base import LINEAGE_ARRAY_COL
-            err = f"date_replace_{token}"
-            df = df.withColumn(
-                LINEAGE_ARRAY_COL,
-                F.filter(
-                    F.col(LINEAGE_ARRAY_COL),
-                    lambda e: (e["error"] != err) | (e["before"] != e["after"]),
-                ),
-            )
-        else:
-            ln = ln.where(F.col("before") != F.col("after"))
-        lineages.append(ln)
-    return df, _union(lineages)
+        err = f"date_replace_{token}"
+        df = apply_cell_edit(df, col, sel, new, err, ts)
+        # drop no-op lineage entries (e.g. month replace that clamped back)
+        df = df.withColumn(
+            LINEAGE_ARRAY_COL,
+            F.filter(
+                F.col(LINEAGE_ARRAY_COL),
+                lambda e: (e["error"] != err) | (e["before"] != e["after"]),
+            ),
+        )
+    return df
 
 
 @register("gen_birthday_from_age")
@@ -242,19 +232,5 @@ def gen_birthday_from_age(df: DataFrame, lineage: DataFrame, n_errors: int,
            if rng == MD5_RNG else _seeded_int(st, 365))
     year = F.lit(as_of_year) - F.col(age).cast("int")
     new = F.date_add(F.make_date(year, F.lit(1), F.lit(1)), doy)
-    out = df.withColumn(out_col, new)
-    ln = out.select(
-        F.col(KEY).alias("rid"),
-        F.lit(out_col).alias("field"),
-        F.lit("gen_birthday_from_age").alias("error"),
-        F.lit(None).cast("string").alias("before"),
-        F.col(out_col).cast("string").alias("after"),
-        F.lit(ts).cast("long").alias("ts"),
-    ).limit(0)  # generator: no error lineage recorded (reference does not)
-    return out, ln
-
-
-def _union(dfs):
-    from rlerrorgenerator_spark.operators.base import union_lineage
-
-    return union_lineage(dfs)
+    # generator: no error lineage recorded (reference does not)
+    return df.withColumn(out_col, new)

@@ -7,14 +7,19 @@ rows ``(error, amount, col_names, arguments)``; ``amount<1`` is a fraction
 function name via a registry; ``add_duplicates`` always held for last
 (`R/1_error.R:115-126`).
 
-Spark lifecycle (SURVEY.md §3.1), exact-k path: each config row appends
-lazy DataFrame plan (narrow ops + small joins + at most one pandas UDF per
-edited column); because each stage references its input ~3× (candidate
-scan, edit set, patch join), un-checkpointed plans grow ~3^k — the driver
-therefore checkpoints each stage (``localCheckpoint`` volatile, or durable
+Spark lifecycle (SURVEY.md §3.1): on both selection paths every cell op
+edits the dirty table in one projection and appends its lineage to the
+in-row ``__lineage`` array; the driver explodes that column once, at the
+boundary before the row-generating ops (which read the lineage table).
+
+Exact-k path: each config row adds a seeded top-k (a TakeOrderedAndProject
+over its input) left-joined back as a flag, so each stage references its
+input twice and un-checkpointed plans grow ~2^k — the driver therefore
+checkpoints each stage (``localCheckpoint`` volatile, or durable
 parquet/Iceberg via a ``CheckpointManager``), exactly the per-stage
 snapshot discipline of the reference (`benchmarking/utils.R:504-641`) and
-the north rule's resumable stages.
+the north rule's resumable stages. Each editor column is one pandas UDF
+call, so each editor runs once, in its own stage.
 
 Bernoulli path: the cell ops are one narrow projection chain, staged once
 after the last cell op. Each run of consecutive editor rows
@@ -30,20 +35,18 @@ import io
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.checkpoint import CheckpointManager
 from rlerrorgenerator_spark.operators.base import (
     LINEAGE_ARRAY_COL,
-    LINEAGE_ENTRY_TYPE,
     REGISTRY,
+    ROW_OPS,
     empty_lineage,
+    empty_lineage_col,
     explode_lineage,
     resolve_n_errors,
 )
 from rlerrorgenerator_spark.operators.edit import EDIT_STEPS, apply_edit_steps
-
-ROW_OPS = {"add_duplicates", "add_near_duplicates", "twins_generate"}
 
 
 @dataclass
@@ -143,38 +146,32 @@ def mess_data(
     ]
     dirty = clean.drop(*heavy) if heavy else clean
     lineage = empty_lineage(spark)
-    # Bernoulli scale path: lineage accumulates as an array column inside
-    # the SAME narrow projections as the edits (one pass total — no lazy
-    # per-stage lineage branches re-running the UDF chain on
-    # materialization, which was quadratic in stage count). The column is
-    # exploded into the lineage table right before the row-generating ops
-    # (which read lineage for eligibility).
-    if not exact:
-        dirty = dirty.withColumn(
-            LINEAGE_ARRAY_COL, F.expr("array()").cast(LINEAGE_ENTRY_TYPE)
-        )
+    # lineage accumulates as an array column inside the SAME projections
+    # as the edits (one pass total — no lazy per-stage lineage branches
+    # re-running the UDF chain on materialization, which was quadratic in
+    # stage count). The column is exploded into the lineage table right
+    # before the row-generating ops (which read lineage for eligibility).
+    dirty = dirty.withColumn(LINEAGE_ARRAY_COL, empty_lineage_col())
     ordered = [r for r in config if r.error not in ROW_OPS] + [
         r for r in config if r.error in ROW_OPS
     ]
     n_cell_ops = sum(1 for r in ordered if r.error not in ROW_OPS)
     ts = 0
     since_ckpt = 0
-    lineage_lazy_branches = 0
     run_steps = []  # Bernoulli path: steps of the current run of editor rows
     for i, row in enumerate(ordered):
         fn = REGISTRY.get(row.error)
         if fn is None:
             raise KeyError(f"unknown error transform {row.error!r}; "
                            f"registered: {sorted(REGISTRY)}")
-        if not exact and ts == n_cell_ops and LINEAGE_ARRAY_COL in dirty.columns:
+        if ts == n_cell_ops and LINEAGE_ARRAY_COL in dirty.columns:
             # entering ROW_OPS: materialize dirty once (single pass over
-            # the whole fused cell-edit chain) unless the last cell op
-            # already staged it, and extract the lineage table
+            # the whole cell-edit chain) unless the last cell op already
+            # staged it, and extract the lineage table
             mgr = ckpt or CheckpointManager(spark)
             if since_ckpt or not ts:
                 dirty = mgr.stage(dirty, f"dirty_cells_ts{ts:03d}")
             lineage = lineage.unionByName(explode_lineage(dirty))
-            lineage_lazy_branches += 1
             dirty = dirty.drop(LINEAGE_ARRAY_COL)
             since_ckpt = 0
         amount = row.amount * amount_mult
@@ -212,22 +209,12 @@ def mess_data(
                 kwargs[key] = lookups[key]
         if row.error == "add_duplicates":
             kwargs["clean"] = clean.drop(*heavy) if heavy else clean
-        if lineage_lazy_branches and (
-            row.error == "add_duplicates"
-            or (row.error == "make_missing" and exact)
-        ):
-            # these two transforms READ the accumulated lineage (prior-error
-            # exclusion / errored-id sampling). Left lazy, that read
-            # re-derives every per-stage lineage branch (a join off each
-            # checkpointed dirty stage) — and the final lineage staging
-            # re-derives them all AGAIN. Materialize the accumulated table
-            # once right before the first consumer; the table is tiny
-            # (rows = injected errors, ~3% of the corpus) so the extra
-            # snapshot is noise while the re-derivation it kills scales
-            # with stage count × corpus size.
+            # add_duplicates READS the lineage table (errored-id sampling)
+            # and the final lineage staging reads it again: materialize it
+            # once here; the table is tiny (rows = injected errors, ~3% of
+            # the corpus) so the extra snapshot is noise.
             mgr = ckpt or CheckpointManager(spark)
             lineage = mgr.stage(lineage, f"lineage_ts{ts:03d}")
-            lineage_lazy_branches = 0
         ts += 1
         if not exact and row.error in EDIT_STEPS:
             # consecutive editor rows share one Arrow pass: collect their
@@ -238,7 +225,7 @@ def mess_data(
             )
             ln = None
             if i + 1 == len(ordered) or ordered[i + 1].error not in EDIT_STEPS:
-                dirty, ln = apply_edit_steps(dirty, run_steps)
+                dirty = apply_edit_steps(dirty, run_steps)
                 run_steps = []
         else:
             dirty, ln = fn(
@@ -248,7 +235,6 @@ def mess_data(
             )
         if ln is not None:
             lineage = lineage.unionByName(ln)
-            lineage_lazy_branches += 1
         if verbose:
             # Bernoulli path selects by rate and leaves n_errors unset —
             # printing n=0 there misreads as "no errors injected"
@@ -258,17 +244,13 @@ def mess_data(
         since_ckpt += 1
         if since_ckpt >= checkpoint_every and (exact or ts >= n_cell_ops):
             # exact path: per-stage snapshot discipline (plans reference
-            # their input ~3x via the patch joins). Bernoulli path: the
-            # cell-edit chain is ONE fused narrow projection, staged once
-            # after the last cell op (no intermediate checkpoints).
+            # their input twice via the top-k flag join). Bernoulli path:
+            # the cell-edit chain is ONE fused narrow projection, staged
+            # once after the last cell op (no intermediate checkpoints).
             mgr = ckpt or CheckpointManager(spark)
             dirty = mgr.stage(dirty, f"dirty_ts{ts:03d}")
-            # lineage is NOT checkpointed per stage: once dirty is staged,
-            # each lineage branch is one shallow join off a materialized
-            # table, and the lazy union stays cheap — per-stage lineage
-            # materialization would double the job count.
             since_ckpt = 0
-    if not exact and LINEAGE_ARRAY_COL in dirty.columns:
+    if LINEAGE_ARRAY_COL in dirty.columns:
         # program had no row ops: extract lineage now
         mgr = ckpt or CheckpointManager(spark)
         if since_ckpt or not ts:

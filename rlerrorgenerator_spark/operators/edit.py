@@ -18,21 +18,21 @@ All three share one shape: seeded per-row string surgery on one column
 loops — the slow path we never take). Determinism: each row's draws are
 keyed on (seed, stage, rid), so the result is independent of partitioning.
 
-Bernoulli path: ``apply_edit_steps`` runs a whole list of steps — one
-editor call, or a run of consecutive editor rows in ``mess_data`` — as ONE
-pandas UDF. The JVM computes everything that does not depend on the value
-(selection flags, per-row seeds or md5 draws); the kernel tests each
-step's eligibility on the value left by the previous steps and applies
-the edit in step order. One UDF per step would cost one Python round-trip
-per step: Catalyst cannot merge UDFs whose inputs read an earlier UDF's
-output. Exact-k path: JVM eligibility picks the top-k rows, then one UDF
-per step edits them.
+``apply_edit_steps`` runs a list of steps as ONE pandas UDF. The JVM
+computes everything that does not depend on the value (selection flags,
+per-row seeds or md5 draws); the kernel tests each step's eligibility on
+the value left by the previous steps and applies the edit in step order.
+One UDF per step would cost one Python round-trip per step: Catalyst
+cannot merge UDFs whose inputs read an earlier UDF's output. Bernoulli
+path: a whole run of consecutive editor rows in ``mess_data`` is one
+call. Exact-k path: per step, JVM eligibility picks the seeded top-k
+rows, and that flag drives a one-step call.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import partial, reduce
 from operator import or_
 
@@ -44,13 +44,10 @@ from pyspark.sql import functions as F
 from rlerrorgenerator_spark.operators.base import (
     KEY,
     LINEAGE_ARRAY_COL,
-    apply_cell_edit,
-    choose_ids,
-    explode_lineage,
     lineage_entry,
     register,
+    select_rows,
     split_across_cols,
-    union_lineage,
 )
 from rlerrorgenerator_spark.operators.charsets import CHARSETS, CONFUSION_MAPS
 from rlerrorgenerator_spark.rng import (
@@ -69,8 +66,8 @@ class EditStep:
     """One editor applied to one column under one stage token.
 
     ``edit`` maps (three u64 draws, value) to the new value. ``eligible``
-    (Python, Bernoulli path) and ``eligible_col`` (JVM, exact-k path) are
-    the same predicate on a non-null value."""
+    (Python, in the kernel) and ``eligible_col`` (JVM, exact-k selection)
+    are the same predicate on a non-null value."""
 
     col: str
     error: str
@@ -92,26 +89,6 @@ def _resolve_charset(charset: str) -> tuple[str | None, dict[str, str] | None]:
 
 def _seed_series_to_u64(seed64: pd.Series):
     return seed64.to_numpy(dtype="int64", na_value=0).view("uint64")
-
-
-def _make_udf(fn):
-    """Wrap a scalar (draws, str) -> str editor as an Arrow-batched pandas
-    UDF over (value, seed64). The per-row seed is derived JVM-side
-    (``seed64_col``); the UDF mixes it into draw streams with VECTORIZED
-    splitmix64 — no per-row hashing or Generator construction (the
-    round-1 per-row blake2b+default_rng cost, ~15-20µs/row)."""
-    @F.pandas_udf("string")
-    def udf(val: pd.Series, seed64: pd.Series) -> pd.Series:
-        u0, u1, u2 = draw_streams(_seed_series_to_u64(seed64), 3)
-        out = []
-        for v, a, b, c in zip(val.to_numpy(), u0, u1, u2):
-            if v is None:
-                out.append(None)
-                continue
-            out.append(fn((int(a), int(b), int(c)), str(v)))
-        return pd.Series(out, dtype="object")
-
-    return udf
 
 
 def _step_draws(step: EditStep) -> list[Column]:
@@ -156,21 +133,23 @@ def _edit_kernel(steps: list[EditStep], cols: list[str]):
     return kernel
 
 
-def apply_edit_steps(df: DataFrame, steps: list[EditStep]
-                     ) -> tuple[DataFrame, DataFrame | None]:
-    """Bernoulli path: apply ``steps`` in order in one Arrow pass.
+def apply_edit_steps(df: DataFrame, steps: list[EditStep],
+                     flags: list[Column] | None = None) -> DataFrame:
+    """Apply ``steps`` in order in one Arrow pass.
 
-    A column's value crosses to Python only on rows where some step on it
-    has its flag set, so the exchange carries ~rate×bytes, not table
-    bytes. The JVM rebuilds each step's ``before`` (the latest earlier
-    result on its column, else the input) and each column's final value
-    from the per-step results. Lineage entries follow step order; they are
-    appended to the accumulated-lineage column when ``df`` has one,
-    otherwise returned as an explicit lineage DataFrame."""
+    Step k edits the rows where ``flags[k]`` is set (default: its
+    hash-Bernoulli selection) and its editor is eligible on the current
+    value. A column's value crosses to Python only on rows where some
+    step on it has its flag set, so the exchange carries ~rate×bytes, not
+    table bytes. The JVM rebuilds each step's ``before`` (the latest
+    earlier result on its column, else the input) and each column's final
+    value from the per-step results. Lineage entries follow step order and
+    are appended to the accumulated-lineage column."""
     if not steps:
-        return df, None
+        return df
     cols = list(dict.fromkeys(s.col for s in steps))
-    flags = [seeded_bernoulli(KEY, s.seed, s.stage, s.rate, s.rng) for s in steps]
+    if flags is None:
+        flags = [seeded_bernoulli(KEY, s.seed, s.stage, s.rate, s.rng) for s in steps]
     gated = [F.when(reduce(or_, [f for s, f in zip(steps, flags) if s.col == c]),
                     F.col(c)) for c in cols]
     inputs = [x for s, f in zip(steps, flags) for x in [f, *_step_draws(s)]]
@@ -182,40 +161,33 @@ def apply_edit_steps(df: DataFrame, steps: list[EditStep]
         entries.append(F.when(after.isNotNull(), lineage_entry(
             s.col, s.error, F.coalesce(*current[s.col]), after, s.ts)))
         current[s.col].insert(0, after)
-    new_entries = F.array_compact(F.array(*entries))
     exprs = {c: F.coalesce(*current[c]) for c in cols}
-    accumulate = LINEAGE_ARRAY_COL in df.columns
-    if accumulate:
-        exprs[LINEAGE_ARRAY_COL] = F.concat(F.col(LINEAGE_ARRAY_COL), new_entries)
-    out = tmp.select(*[exprs.get(c, F.col(c)).alias(c) for c in df.columns])
-    if accumulate:
-        return out, None
-    return out, explode_lineage(
-        tmp.select(KEY, new_entries.alias(LINEAGE_ARRAY_COL)))
+    exprs[LINEAGE_ARRAY_COL] = F.concat(
+        F.col(LINEAGE_ARRAY_COL), F.array_compact(F.array(*entries)))
+    return tmp.select(*[exprs.get(c, F.col(c)).alias(c) for c in df.columns])
 
 
 def _run_editor(df: DataFrame, steps: list[EditStep], n_errors: int,
-                exact: bool) -> tuple[DataFrame, DataFrame | None]:
+                exact: bool) -> DataFrame:
     """A registered editor's body: one fused pass (Bernoulli), or per step
-    a seeded top-k on JVM eligibility plus one UDF over the k rows."""
+    a seeded top-k on JVM eligibility flagging a one-step pass. Exact-k
+    draws are the per-row seed streams whatever ``rng`` says."""
     if not exact:
         return apply_edit_steps(df, steps)
     per_col = split_across_cols(n_errors, len(steps))
-    lineages = []
     for s in steps:
-        sel = choose_ids(df, s.eligible_col(s.col), per_col, s.seed, s.stage,
-                         True, s.rate)
-        new_value = _make_udf(s.edit)(F.col(s.col), seed64_col(KEY, s.seed, s.stage))
-        df, ln = apply_cell_edit(df, s.col, sel, new_value, s.error, s.ts)
-        lineages.append(ln)
-    return df, union_lineage(lineages)
+        df, sel = select_rows(df, s.eligible_col(s.col), per_col, s.seed,
+                              s.stage, True, s.rate)
+        df = apply_edit_steps(df, [replace(s, rng=XXHASH_RNG)], [sel]) \
+            .drop("__sel")
+    return df
 
 
 def _indel_one(u, s: str, charset: str) -> str:
     # p=0.5 insert vs delete (`R/2_edit_distance_errors.R:66-93`); a
     # 1-char string always gets an insert (delete would empty it — the
     # reference guards eligibility on non-empty only, we keep len>=1).
-    # ``u`` = three independent 64-bit draws (see _make_udf).
+    # ``u`` = three independent 64-bit draws (see _edit_kernel).
     u0, u1, u2 = u
     do_insert = (u0 & 1 == 0) or len(s) <= 1
     if do_insert:

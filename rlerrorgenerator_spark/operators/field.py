@@ -7,13 +7,13 @@ Python on the executor hot path (whole-stage codegen end to end).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.operators.base import (
-    KEY,
+    LINEAGE_ARRAY_COL,
     apply_cell_edit,
-    choose_ids,
+    lineage_entry,
     register,
     select_rows,
     split_across_cols,
@@ -29,17 +29,15 @@ def first_letter_abbreviate(df: DataFrame, lineage: DataFrame, n_errors: int,
                             rng: str = "xxhash"):
     """Truncate value to its first character (`R/4_abbreviations.R:1-27`)."""
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|abbr|{col}"
         eligible = F.col(col).isNotNull() & (F.length(col) > 1)
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
-        df, ln = apply_cell_edit(
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        df = apply_cell_edit(
             df, col, sel, F.substring(F.col(col), 1, 1),
             "first_letter_abbreviate", ts,
         )
-        lineages.append(ln)
-    return df, _union(lineages)
+    return df
 
 
 @register("ch1_to_ch2")
@@ -53,11 +51,10 @@ def ch1_to_ch2(df: DataFrame, lineage: DataFrame, n_errors: int,
     per_col = split_across_cols(n_errors, len(col_names))
     q1 = _re.escape(ch1)
     flanked = f"[a-z0-9A-Z]{q1}[a-z0-9A-Z]"
-    lineages = []
     for col in col_names:
         st = f"{stage}|ch1ch2|{col}"
         eligible = F.col(col).isNotNull() & F.col(col).rlike(flanked)
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
         if all:
             new = F.regexp_replace(F.col(col), q1, ch2)
         else:
@@ -69,9 +66,8 @@ def ch1_to_ch2(df: DataFrame, lineage: DataFrame, n_errors: int,
                 F.lit(ch2),
                 F.col(col).substr(pos + len(ch1), F.length(col)),
             )
-        df, ln = apply_cell_edit(df, col, sel, new, "ch1_to_ch2", ts)
-        lineages.append(ln)
-    return df, _union(lineages)
+        df = apply_cell_edit(df, col, sel, new, "ch1_to_ch2", ts)
+    return df
 
 
 @register("blanks_to_hyphens")
@@ -81,7 +77,7 @@ def blanks_to_hyphens(df, lineage, n_errors, col_names, *, seed, stage, ts,
     """`R/4_abbreviations.R:29-31` — delegates to ch1_to_ch2(' ', '-')."""
     return ch1_to_ch2(df, lineage, n_errors, col_names, seed=seed, stage=stage,
                       ts=ts, ch1=" ", ch2="-", all=True, exact=exact, rate=rate,
-                      rng=rng)
+                      rng=rng)[0]
 
 
 @register("hyphens_to_blanks")
@@ -91,7 +87,7 @@ def hyphens_to_blanks(df, lineage, n_errors, col_names, *, seed, stage, ts,
     """`R/4_abbreviations.R:33-35` — delegates to ch1_to_ch2('-', ' ')."""
     return ch1_to_ch2(df, lineage, n_errors, col_names, seed=seed, stage=stage,
                       ts=ts, ch1="-", ch2=" ", all=True, exact=exact, rate=rate,
-                      rng=rng)
+                      rng=rng)[0]
 
 
 @register("make_missing")
@@ -102,43 +98,25 @@ def make_missing(df: DataFrame, lineage: DataFrame, n_errors: int,
     """Null out the field on rows not already errored on that field.
 
     The reference reads its own lineage to exclude prior-errored ids
-    (`R/4_abbreviations.R:112-117`) — here an anti-join against the
-    accumulated lineage table; records ``after=""``  (`:120-127`).
+    (`R/4_abbreviations.R:112-117`) — here read straight off the
+    accumulated-lineage column, so the edit stays one narrow projection;
+    records ``after=""``  (`:120-127`).
     """
-    from rlerrorgenerator_spark.operators.base import LINEAGE_ARRAY_COL
-    from rlerrorgenerator_spark.rng import seeded_bernoulli
-
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|missing|{col}"
         col_type = dict(df.dtypes)[col]
-        if not exact and LINEAGE_ARRAY_COL in df.columns:
-            # scale path: prior-error exclusion read straight off the
-            # accumulated-lineage column — no anti-join, stays one fused
-            # narrow projection like every other Bernoulli-path edit
-            eligible = (
-                F.col(col).isNotNull()
-                & ~F.exists(LINEAGE_ARRAY_COL, lambda e: e["field"] == col)
-                & seeded_bernoulli(KEY, seed, st, rate, rng)
-            )
-            df, ln = apply_cell_edit(
-                df, col, eligible, F.lit(None).cast(col_type), "make_missing",
-                ts, lineage_after=F.lit(""),
-            )
-        else:
-            prior = lineage.where(F.col("field") == col) \
-                           .select(F.col("rid").alias(KEY)).distinct()
-            cand = df.join(prior, KEY, "left_anti")
-            eligible = F.col(col).isNotNull()
-            sel = choose_ids(cand, eligible, per_col, seed, st, exact, rate, rng=rng)
-            # reference logs after="" rather than NA (`R/4_abbreviations.R:123`)
-            df, ln = apply_cell_edit(
-                df, col, sel, F.lit(None).cast(col_type), "make_missing",
-                ts, lineage_after=F.lit(""),
-            )
-        lineages.append(ln)
-    return df, _union(lineages)
+        eligible = (
+            F.col(col).isNotNull()
+            & ~F.exists(LINEAGE_ARRAY_COL, lambda e: e["field"] == col)
+        )
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        # reference logs after="" rather than NA (`R/4_abbreviations.R:123`)
+        df = apply_cell_edit(
+            df, col, sel, F.lit(None).cast(col_type), "make_missing",
+            ts, lineage_after=F.lit(""),
+        )
+    return df
 
 
 @register("swap_fields")
@@ -153,72 +131,29 @@ def swap_fields(df: DataFrame, lineage: DataFrame, n_errors: int,
     """
     pairs = [(col_names[i], col_names[i + 1]) for i in range(0, len(col_names), 2)]
     per_pair = split_across_cols(n_errors, len(pairs))
-    lineages = []
     for c1, c2 in pairs:
         st = f"{stage}|swap|{c1}|{c2}"
         eligible = (
             F.col(c1).isNotNull() & F.col(c2).isNotNull()
             & (F.col(c1).cast("string") != F.col(c2).cast("string"))
         )
-        sel = select_rows(df, eligible, per_pair, seed, st, exact, rate, rng=rng)
-        if isinstance(sel, Column):
-            from rlerrorgenerator_spark.operators.base import (
+        df, sel = select_rows(df, eligible, per_pair, seed, st, exact, rate, rng=rng)
+        # both swap entries appended in the same projection as the swap
+        e1 = lineage_entry(c1, "swap_fields", F.col(c1), F.col(c2), ts)
+        e2 = lineage_entry(c2, "swap_fields", F.col(c2), F.col(c1), ts)
+        df = (
+            df.withColumn("__sel", sel)
+            .withColumn(
                 LINEAGE_ARRAY_COL,
-                lineage_entry,
+                F.when(F.col("__sel"),
+                       F.concat(F.col(LINEAGE_ARRAY_COL), F.array(e1, e2)))
+                .otherwise(F.col(LINEAGE_ARRAY_COL)),
             )
-
-            flagged = df.withColumn("__sel", sel)
-            if LINEAGE_ARRAY_COL in df.columns:
-                # accumulate mode: both swap entries appended in-projection
-                e1 = lineage_entry(c1, "swap_fields", F.col(c1), F.col(c2), ts)
-                e2 = lineage_entry(c2, "swap_fields", F.col(c2), F.col(c1), ts)
-                flagged = flagged.withColumn(
-                    LINEAGE_ARRAY_COL,
-                    F.when(F.col("__sel"),
-                           F.concat(F.col(LINEAGE_ARRAY_COL), F.array(e1, e2)))
-                    .otherwise(F.col(LINEAGE_ARRAY_COL)),
-                )
-                patch = None
-            else:
-                patch = flagged.where("__sel").select(
-                    KEY, F.col(c1).alias("__v1"), F.col(c2).alias("__v2")
-                )
-            out = (
-                flagged.withColumn(
-                    "__n1", F.when(F.col("__sel"), F.col(c2)).otherwise(F.col(c1))
-                )
-                .withColumn(c2, F.when(F.col("__sel"), F.col(c1)).otherwise(F.col(c2)))
-                .withColumn(c1, F.col("__n1"))
-                .drop("__sel", "__n1")
+            .withColumn(
+                "__n1", F.when(F.col("__sel"), F.col(c2)).otherwise(F.col(c1))
             )
-        else:
-            patch = (
-                df.join(sel.select(KEY), KEY, "left_semi")
-                .select(KEY, F.col(c1).alias("__v1"), F.col(c2).alias("__v2"))
-            )
-            out = (
-                df.join(patch, KEY, "left")
-                .withColumn(c1, F.coalesce(F.col("__v2"), F.col(c1)))
-                .withColumn(c2, F.coalesce(F.col("__v1"), F.col(c2)))
-                .drop("__v1", "__v2")
-            )
-        if patch is not None:
-            for fld, before, after in ((c1, "__v1", "__v2"), (c2, "__v2", "__v1")):
-                lineages.append(
-                    patch.select(
-                        F.col(KEY).alias("rid"),
-                        F.lit(fld).alias("field"),
-                        F.lit("swap_fields").alias("error"),
-                        F.col(before).cast("string").alias("before"),
-                        F.col(after).cast("string").alias("after"),
-                        F.lit(ts).cast("long").alias("ts"),
-                    )
-                )
-        df = out
-    return df, _union(lineages)
-
-
-def _union(dfs):
-    from rlerrorgenerator_spark.operators.base import union_lineage
-
-    return union_lineage(dfs)
+            .withColumn(c2, F.when(F.col("__sel"), F.col(c1)).otherwise(F.col(c2)))
+            .withColumn(c1, F.col("__n1"))
+            .drop("__sel", "__n1")
+        )
+    return df

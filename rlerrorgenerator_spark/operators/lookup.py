@@ -44,7 +44,6 @@ def _pick_one_alternate(lookup: DataFrame, seed: int, stage: str,
 def _lookup_substitute(df, n_errors, col_names, lookup, *, seed, stage, ts,
                        error_name, exact=True, rate=None, rng="xxhash"):
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|{error_name}|{col}"
         pick = _pick_one_alternate(lookup, seed, st, rng)
@@ -52,11 +51,10 @@ def _lookup_substitute(df, n_errors, col_names, lookup, *, seed, stage, ts,
             F.broadcast(pick), df[col] == pick["lookup_name"], "left"
         ).drop("lookup_name").withColumnRenamed("lookup_alternate", "__alt")
         eligible = F.col("__alt").isNotNull() & (F.col("__alt") != F.col(col))
-        sel = select_rows(tmp, eligible, per_col, seed, st, exact, rate, rng=rng)
-        tmp, ln = apply_cell_edit(tmp, col, sel, F.col("__alt"), error_name, ts)
+        tmp, sel = select_rows(tmp, eligible, per_col, seed, st, exact, rate, rng=rng)
+        tmp = apply_cell_edit(tmp, col, sel, F.col("__alt"), error_name, ts)
         df = tmp.drop("__alt")
-        lineages.append(ln)
-    return df, _union(lineages)
+    return df
 
 
 @register("real_to_nicknames")
@@ -127,13 +125,12 @@ def add_name_suffix(df: DataFrame, lineage: DataFrame, n_errors: int,
         cum.append(acc)
 
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|suffix|{col}"
         eligible = F.col(col).isNotNull()
         if sex is not None:
             eligible = eligible & (F.col(sex) == sex_value)
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
         if rng == MD5_RNG:
             # exact-integer weighted pick over cumulative int weights —
             # reproducible in DuckDB with the same modulus (oracle_er)
@@ -153,9 +150,8 @@ def add_name_suffix(df: DataFrame, lineage: DataFrame, n_errors: int,
             for sfx, bound in reversed(list(zip(suffixes[:-1], cum[:-1]))):
                 pick = F.when(u < bound, F.lit(sfx)).otherwise(pick)
         new = F.concat_ws(" ", F.col(col), pick)
-        df, ln = apply_cell_edit(df, col, sel, new, "add_name_suffix", ts)
-        lineages.append(ln)
-    return df, _union(lineages)
+        df = apply_cell_edit(df, col, sel, new, "add_name_suffix", ts)
+    return df
 
 
 @register("married_name_change")
@@ -178,7 +174,6 @@ def married_name_change(df: DataFrame, lineage: DataFrame, n_errors: int,
     )
     n_names = idx.count()
     per_col = split_across_cols(n_errors, len(col_names))
-    lineages = []
     for col in col_names:
         st = f"{stage}|married|{col}"
         eligible = F.col(col).isNotNull()
@@ -186,20 +181,13 @@ def married_name_change(df: DataFrame, lineage: DataFrame, n_errors: int,
             eligible = eligible & (F.col(sex) == sex_value)
         if age is not None:
             eligible = eligible & (F.col(age) > 20)
-        sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
+        df, sel = select_rows(df, eligible, per_col, seed, st, exact, rate, rng=rng)
         sidx = (md5_mod(draw_token(seed, st, "sidx"), KEY, n_names)
                 if rng == MD5_RNG
                 else F.pmod(F.xxhash64(F.lit(st), F.col(KEY)), F.lit(n_names)).cast("int"))
         tmp = df.withColumn("__sidx", sidx) \
                 .join(F.broadcast(idx), "__sidx", "left").drop("__sidx")
-        tmp, ln = apply_cell_edit(tmp, col, sel, F.col("__sname"),
-                                  "married_name_change", ts)
+        tmp = apply_cell_edit(tmp, col, sel, F.col("__sname"),
+                              "married_name_change", ts)
         df = tmp.drop("__sname")
-        lineages.append(ln)
-    return df, _union(lineages)
-
-
-def _union(dfs):
-    from rlerrorgenerator_spark.operators.base import union_lineage
-
-    return union_lineage(dfs)
+    return df

@@ -10,7 +10,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rlerrorgenerator_spark.operators.base import KEY, choose_ids, register
+from rlerrorgenerator_spark.operators.base import (
+    KEY,
+    apply_cell_edit,
+    choose_ids,
+    flag_keys,
+    register,
+)
 from rlerrorgenerator_spark.rng import (
     MD5_RNG,
     draw_token,
@@ -118,17 +124,17 @@ def make_twins(df: DataFrame, lineage: DataFrame, n_errors: int,
         & F.col("bday_twin").isNotNull()
         & (F.col("dob") != F.col("bday_twin"))
     )
-    # sample twin GROUPS: rank distinct twin_ids, keep members of chosen
-    # groups (`utils.R:673-680` samples group ids)
-    groups = df.where(eligible).select("twin_id").distinct()
+    # sample twin GROUPS, keep eligible members of chosen groups
+    # (`utils.R:673-680` samples group ids)
     if exact:
-        sel_groups = groups.orderBy(rank_col("twin_id", seed, st)).limit(int(n_errors))
+        groups = df.where(eligible).select("twin_id").distinct()
+        df, chosen = flag_keys(
+            df, groups.orderBy(rank_col("twin_id", seed, st)).limit(int(n_errors)),
+            on="twin_id")
     else:
-        sel_groups = groups.where(seeded_bernoulli("twin_id", seed, st, rate, rng))
-    chosen = df.where(eligible).join(F.broadcast(sel_groups), "twin_id", "left_semi") \
-               .select(KEY)
-    from rlerrorgenerator_spark.operators.base import apply_cell_edit
-    return apply_cell_edit(df, "dob", chosen, F.col("bday_twin"), "make_twins", ts)
+        chosen = seeded_bernoulli("twin_id", seed, st, rate, rng)
+    return apply_cell_edit(df, "dob", eligible & chosen, F.col("bday_twin"),
+                           "make_twins", ts)
 
 
 @register("twins_generate")

@@ -182,12 +182,3 @@ def seeded_bernoulli(key_col: str | Column, seed: int, stage: str, rate: float,
     if rng == MD5_RNG:
         return md5_bernoulli(draw_token(seed, stage, "sel"), key_col, rate)
     return bernoulli_col(key_col, seed, stage, rate)
-
-
-def seeded_mod(key_col: str | Column, seed: int, stage: str, purpose: str,
-               mod: int, rng: str = XXHASH_RNG) -> Column:
-    """Dispatch for small uniform integer draws inside transforms."""
-    if rng == MD5_RNG:
-        return md5_mod(draw_token(seed, stage, purpose), key_col, mod)
-    tok = f"{stage}|{purpose}" if purpose else stage
-    return F.pmod(F.xxhash64(F.lit(tok), _as_col(key_col)), F.lit(mod)).cast("int")

@@ -52,8 +52,7 @@ def get_spark(
         # uses 3 of 4 cores, then 0). 16MB keeps ≥3×cores tasks in
         # flight at sandbox scale; at 100 TB shuffles are far above
         # either value and the advisory is moot.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "16m"))
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # 4MB: true dims (nation/region, lookup tables, hot-key lists)

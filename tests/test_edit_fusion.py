@@ -1,12 +1,13 @@
-"""The fused editor pass (``edit.apply_edit_steps``) on the Bernoulli path.
+"""The editor pass (``edit.apply_edit_steps``) on both selection paths.
 
 - Each editor's Python eligibility (tested in the kernel on the current
   value) equals the JVM eligibility expression the exact-k path uses.
 - ``mess_data`` applying a run of editor rows in one Arrow pass gives the
   same dirty table and lineage as applying the registered editors one
   config row at a time, in both rng modes.
-- The default program's output at a fixed seed is pinned, and its
-  cell-edit stage holds one ``ArrowEvalPython``.
+- The default program's output at a fixed seed is pinned on both paths.
+  Its Bernoulli cell-edit stage holds one ``ArrowEvalPython``; on the
+  exact-k path each editor row runs its UDF once.
 """
 
 from __future__ import annotations
@@ -88,15 +89,27 @@ def _digest(df) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
 
-def test_default_program_output_is_pinned(spark, pages_1k):
-    """Digests of the output of the per-row chained editor UDFs this pass
-    replaced: the fused pass must reproduce them bit for bit."""
-    dirty, lineage = mess_data(pages_1k, default_error_config(), seed=1, exact=False)
-    assert (dirty.count(), lineage.count()) == (1024, 329)
-    assert _digest(dirty) == (
-        "aecbb1833db4749fd47314cfbec3997a38d9ce025a0adb54f9de4be322a8fd60")
-    assert _digest(lineage) == (
-        "412e1a3eee383afecd7d1a05e15a49bbfb2fcb6e82e80cd74b600b70d4505816")
+# (counts, dirty digest, lineage digest) of the default program at seed 1
+_PINNED = {
+    False: ((1024, 329),
+            "aecbb1833db4749fd47314cfbec3997a38d9ce025a0adb54f9de4be322a8fd60",
+            "412e1a3eee383afecd7d1a05e15a49bbfb2fcb6e82e80cd74b600b70d4505816"),
+    True: ((1040, 323),
+           "7b6dc33da5b73eb538f4624fd215d5425307a7b30424d657b2da6e69ca97421b",
+           "69b15195426c2a08f380392974b394d322691b13d20a07418a1949b6f367e148"),
+}
+
+
+@pytest.mark.parametrize("exact", [False, True], ids=["bernoulli", "exact_k"])
+def test_default_program_output_is_pinned(spark, pages_1k, exact):
+    """Digests of the default program's output on both selection paths:
+    a change to how edits are selected, fused or recorded must reproduce
+    them bit for bit."""
+    dirty, lineage = mess_data(pages_1k, default_error_config(), seed=1, exact=exact)
+    counts, dirty_digest, lineage_digest = _PINNED[exact]
+    assert (dirty.count(), lineage.count()) == counts
+    assert _digest(dirty) == dirty_digest
+    assert _digest(lineage) == lineage_digest
 
 
 @pytest.mark.parametrize("rng", ["xxhash", "md5"])
@@ -137,3 +150,15 @@ def test_cell_edit_stage_has_one_python_pass(spark, pages_1k, monkeypatch, rng):
     assert arrow_evals() == 1
     monkeypatch.setattr(driver, "EDIT_STEPS", {})
     assert arrow_evals() == 3  # one per editor row the JVM cannot merge
+
+
+def test_exact_path_runs_each_editor_once(spark, pages_1k):
+    """Exact-k: each editor row crosses into Python once, in its own
+    dirty stage; lineage rides in the staged rows, so no lineage stage is
+    built (re-running the editors) before the row ops."""
+    mgr = _RecordingManager(spark)
+    mess_data(pages_1k, default_error_config(), seed=1, exact=True, ckpt=mgr)
+    assert sum(p.count("ArrowEvalPython") for p in mgr.plans.values()) == 4
+    names = list(mgr.plans)
+    last_cell_op = names.index("dirty_ts007")  # the program has 7 cell ops
+    assert not any(n.startswith("lineage_ts") for n in names[:last_cell_op])
