@@ -16,7 +16,8 @@ Float discipline for cross-engine value-hash parity: every double
 aggregate is ``round``-ed identically on both sides, embeddings are cast
 to DOUBLE before cosine (DuckDB's list_cosine_similarity is float32
 natively), and MinHash uses an md5-derived u64 computed bit-identically
-in both engines (see rlerrorgenerator_spark/plans/dedup.py::_md5_u64).
+in both engines (see the md5 mode of
+rlerrorgenerator_spark/linkage/blocking.py::minhash_signature).
 """
 
 from __future__ import annotations
@@ -585,7 +586,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing uses md5-Rademacher fixed centroids (plans/ann.py::
     ivf_topk_verified — integer dot-product argmax assignment + top-6
     probe list, all replayed bit-identically by the DuckDB oracle, the
-    same ``_verified`` discipline as minhash_blocks_verified), then the
+    same discipline as minhash_blocks' md5 mode), then the
     usual exact-cosine re-rank inside the probed buckets. The driver
     embeddings are near-RANDOM vectors — the worst case for any
     space-partitioning index — so the operating point probes 6 of 8
@@ -998,16 +999,17 @@ def er_blocking_snm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_blocking_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH blocking over the md5 fixture — the full candidate
     pair list (with per-pair agreeing-band counts) oracle-checked against
-    a DuckDB re-derivation. Verification mode: md5-u64 signature hashes
-    (``minhash_blocks_verified``) replace the xxhash64 fast path so both
-    engines derive identical bucket keys; the PLAN shape (signatures →
-    single band explode → band equi-join → hot-bucket cap → pair dedup)
-    is the production ``minhash_blocks`` plan."""
-    from rlerrorgenerator_spark.linkage.blocking import minhash_blocks_verified
+    a DuckDB re-derivation. Runs the production ``minhash_blocks`` in its
+    md5 mode: md5-u64 signatures and ``|``-joined band keys replace the
+    xxhash kernel so both engines derive identical bucket keys; the plan
+    (signatures → single band explode → hot-bucket cap → band equi-join
+    → pair count) is the production one."""
+    from rlerrorgenerator_spark.linkage.blocking import minhash_blocks
 
     clean, dirty = _blocking_fixture(spark, sf_dir)
     return (
-        minhash_blocks_verified(clean, dirty)
+        minhash_blocks(clean, dirty, n_hashes=12, bands=6, shingle_k=5,
+                       signature="md5")
         .orderBy("rid_a", "rid_b")
     )
 
@@ -1196,7 +1198,7 @@ def _minhash_sql(n_hashes: int = 12, bands: int = 6) -> str:
 def _minhash_block_sql(n_hashes: int = 12, bands: int = 6,
                        max_block_size: int = 200) -> str:
     """Cross-side (clean × dirty) variant of ``_minhash_sql`` over the
-    md5 blocking fixture — re-derives ``minhash_blocks_verified``:
+    md5 blocking fixture — re-derives ``minhash_blocks(signature="md5")``:
     signatures per side, band keys, the (band, bkey) hot-bucket cap, and
     the agreeing-band counts per candidate pair."""
     mins = ",\n      ".join(

@@ -24,8 +24,8 @@ invariant to WHICH injective 64-bit hash is used. ``exact_shingles``
 scoring runs this same kernel with ``exact=True`` (full sorted-distinct
 64-bit sets), so its Jaccard equals the string-shingle Jaccard an
 independent SQL engine re-derives. Only the md5-mode plans
-(``minhash_blocks_verified``, the dedup plans) hash differently: their
-oracles reproduce bucket KEYS, not just set semantics.
+(``minhash_blocks(signature="md5")``, the dedup plans) hash differently:
+their oracles reproduce bucket KEYS, not just set semantics.
 
 Determinism: pure per-row functions of the text bytes — identical
 results at any partitioning/core count (the partition-invariance tests

@@ -130,7 +130,8 @@ def with_winnow_fps(df: DataFrame, text_col: str = "text",
 
     Engine notes:
     - gram hashes use the md5→u64 zero-padded-decimal-string discipline
-      (see plans/dedup.py::_md5_u64) so DuckDB reproduces them exactly;
+      (see linkage/blocking.py::minhash_signature) so DuckDB reproduces
+      them exactly;
     - the hash array is projected as a BOUND attribute before the window
       ``transform`` — an inline expression would re-evaluate the whole
       gram hashing once per window position (no CSE across higher-order-

@@ -12,6 +12,9 @@ generalize to three strategies over the pages domain, unioned + deduped:
 3. MinHash-LSH on word shingles — signatures from one vectorized Arrow
    kernel per side (``functions/arrowhash.py``, a narrow map), band keys
    and the bucket join as built-in expressions; deterministic per row.
+   ``signature="md5"`` runs the same plan on md5 signatures, which the
+   cross-engine oracle reproduces; the dedup plans reuse
+   :func:`minhash_signature` and :func:`band_keys` in that mode.
 
 Skew: pathological blocks (empty/boilerplate text → one giant LSH bucket)
 are capped at ``max_block_size`` before the pair join — the explicit
@@ -19,7 +22,9 @@ skew-key handling the north rule asks for (AQE skew-join splitting covers
 residual imbalance).
 
 Conventions: the clean side exposes ``rid_a`` (its url), the dirty side
-``rid_b`` (its row key). Output: ``(rid_a, rid_b, block)``.
+``rid_b`` (its row key). Output: ``(rid_a, rid_b, block)``;
+:func:`minhash_blocks` returns ``(rid_a, rid_b, n_bands)`` and
+:func:`build_candidates` labels its pairs ``minhash``.
 """
 
 from __future__ import annotations
@@ -32,6 +37,8 @@ from pyspark.sql import Column
 from pyspark.sql.types import LongType, StructField, StructType
 
 from rlerrorgenerator_spark.functions.arrowhash import minhash_signature_batches
+from rlerrorgenerator_spark.functions.textops import exploded_shingles
+from rlerrorgenerator_spark.rng import md5_u64_str
 
 
 def normalize_url(col) -> Column:
@@ -206,19 +213,32 @@ def sorted_neighborhood_blocks(clean: DataFrame, dirty: DataFrame,
 
 
 def minhash_signature(df: DataFrame, text_col: str, id_col: str,
-                      n_hashes: int = 16, shingle_k: int = 5,
-                      seed: int = 1) -> DataFrame:
-    """MinHash signature per row over word (shingle_k−1)-shingles of
-    lower(text) split on whitespace runs: ``__id`` plus ``mh_0`` …
-    ``mh_{n_hashes-1}`` (bigint).
+                      n_hashes: int = 16, shingle_k: int = 4, seed: int = 1,
+                      signature: str = "xxhash") -> DataFrame:
+    """MinHash signature per row over word ``shingle_k``-shingles:
+    ``__id`` plus ``mh_0`` … ``mh_{n_hashes-1}``.
 
-    One ``mapInArrow`` (``arrowhash.minhash_signature_batches``) per
-    side: token hashes, shingle hashes and all n_hashes segment-mins are
-    numpy passes over the Arrow buffers — a narrow map with no shuffle
-    and no per-element interpreted evaluation. (Spark's higher-order
-    array functions are CodegenFallback; as expressions the same work was
-    ~18 interpreted passes per row, ~35% of a 4-core profile's samples.)"""
-    k = max(2, shingle_k - 1)  # tokens per word shingle
+    ``signature="xxhash"`` (production): one ``mapInArrow``
+    (``arrowhash.minhash_signature_batches``) over lower(text) split on
+    whitespace runs — numpy passes over the Arrow buffers, a narrow map;
+    ``mh_i`` are bigint.
+
+    ``signature="md5"`` (verification): text split on single spaces
+    (DuckDB's ``string_split``), an exploded shingle posting list and one
+    groupBy of n_hashes mins of md5-u64(``mh{i}|`` || shingle) as
+    zero-padded 20-digit strings (string min == numeric min), which
+    DuckDB reproduces bit for bit. It ignores ``seed``: the salts are
+    what the oracle SQL hardcodes."""
+    if signature == "md5":
+        # explode + one groupBy of n min-aggs: the array-expression form
+        # (array_min(transform(...)) per hash) lets Catalyst inline the
+        # shingle construction into each of the n expressions
+        sh = exploded_shingles(df.select(F.col(id_col).alias("__id"), text_col),
+                               text_col, ["__id"], shingle_k)
+        return sh.groupBy("__id").agg(*[
+            F.min(F.lpad(md5_u64_str(f"mh{i}|", "g"), 20, "0")).alias(f"mh_{i}")
+            for i in range(n_hashes)
+        ])
     pre = df.select(F.col(id_col).alias("__id"),
                     F.coalesce(text_col, F.lit("")).alias("__text"))
     out_schema = StructType(
@@ -227,97 +247,50 @@ def minhash_signature(df: DataFrame, text_col: str, id_col: str,
     )
     return pre.mapInArrow(
         lambda it: minhash_signature_batches(
-            it, text_col="__text", n_hashes=n_hashes, shingle_k=k, seed=seed),
+            it, text_col="__text", n_hashes=n_hashes, shingle_k=shingle_k,
+            seed=seed),
         out_schema,
     )
 
 
+def band_keys(sig: DataFrame, rid_alias: str, bands: int,
+              signature: str = "xxhash") -> DataFrame:
+    """``(rid_alias, band, bkey)`` per signature row and band, from ONE
+    explode over an array of (band, bkey) structs: a per-band union would
+    re-evaluate the signature subtree once per band (Catalyst does not
+    share it across union branches). xxhash keys are
+    ``xxhash64(band, mh…)``; md5 keys are ``concat_ws('|', mh…)``, as the
+    oracle SQL builds them, and carry no band salt, so join and cap on
+    (band, bkey)."""
+    rows = (len(sig.columns) - 1) // bands
+
+    def key(b: int) -> Column:
+        mh = [F.col(f"mh_{b * rows + r}") for r in range(rows)]
+        return F.concat_ws("|", *mh) if signature == "md5" else F.xxhash64(F.lit(b), *mh)
+
+    structs = F.array(*[F.struct(F.lit(b).alias("band"), key(b).alias("bkey"))
+                        for b in range(bands)])
+    return sig.select(F.col("__id").alias(rid_alias), F.explode(structs).alias("bk")) \
+        .select(rid_alias, "bk.band", "bk.bkey")
+
+
 def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
-                   n_hashes: int = 16, bands: int = 8, shingle_k: int = 5,
-                   seed: int = 1, max_block_size: int = 200) -> DataFrame:
+                   n_hashes: int = 16, bands: int = 8, shingle_k: int = 4,
+                   seed: int = 1, max_block_size: int = 200,
+                   signature: str = "xxhash") -> DataFrame:
     """MinHash-LSH banding: rows agreeing on all rows of any band become
-    candidates. bands × rows_per_band = n_hashes; with 8 bands × 2 rows a
-    pair at Jaccard s collides w.p. 1−(1−s²)⁸ (≥0.99 for s≥0.6)."""
-    rows_per_band = n_hashes // bands
-    sig_a = minhash_signature(clean.select(F.col("url").alias("rid"), text_col),
-                              text_col, "rid", n_hashes, shingle_k, seed)
-    sig_b = minhash_signature(dirty.select("rid", text_col),
-                              text_col, "rid", n_hashes, shingle_k, seed)
+    candidates ``(rid_a, rid_b, n_bands)``. bands × rows_per_band =
+    n_hashes; with 8 bands × 2 rows a pair at Jaccard s collides w.p.
+    1−(1−s²)⁸ (≥0.99 for s≥0.6). ``signature="md5"`` is the verification
+    mode the cross-engine oracle ``er_blocking_minhash`` runs: same plan,
+    md5 signatures and band keys (see :func:`minhash_signature`)."""
+    def keys(side: DataFrame, id_col: str, rid_alias: str) -> DataFrame:
+        sig = minhash_signature(side, text_col, id_col, n_hashes, shingle_k,
+                                seed, signature)
+        return band_keys(sig, rid_alias, bands, signature)
 
-    def band_keys(sig: DataFrame, rid_alias: str) -> DataFrame:
-        # ONE explode over an array of (band, bkey) structs — a per-band
-        # union would re-evaluate the whole signature subtree once per
-        # band (8× the cost; Catalyst does not share it across union
-        # branches).
-        structs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.lit(b),
-                    *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)],
-                ).alias("bkey"),
-            )
-            for b in range(bands)
-        ])
-        return sig.select(
-            F.col("__id").alias(rid_alias), F.explode(structs).alias("bk")
-        ).select(rid_alias, F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-
-    # (band, bkey) grouping ≡ bkey grouping here (bkey is band-salted)
-    ka, kb = _cap_blocks_two_sided(band_keys(sig_a, "rid_a"),
-                                   band_keys(sig_b, "rid_b"),
-                                   ["band", "bkey"], max_block_size)
-    return (
-        ka.join(kb, ["band", "bkey"])
-        .select("rid_a", "rid_b", F.lit("minhash").alias("block"))
-        .dropDuplicates(["rid_a", "rid_b"])
-    )
-
-
-def minhash_blocks_verified(clean: DataFrame, dirty: DataFrame,
-                            text_col: str = "text", n_hashes: int = 12,
-                            bands: int = 6, shingle_k: int = 5,
-                            max_block_size: int = 200) -> DataFrame:
-    """MinHash-LSH blocking in VERIFICATION mode: the same plan shape as
-    :func:`minhash_blocks` (per-side signatures → one band-struct explode
-    → band equi-join → hot-bucket cap → pair dedup), but hashing with the
-    md5-u64 discipline of ``plans.dedup.minhash_signatures`` so an
-    independent SQL engine reproduces every bucket key bit-identically.
-    The Arrow-kernel :func:`minhash_blocks` stays the production
-    blocking; this variant is what the driver's cross-engine oracle
-    exercises (``er_blocking_minhash``).
-
-    The hot-bucket cap is the shared :func:`_cap_blocks_two_sided` on
-    (band, bkey) — the md5 band keys carry no band salt, so capping on
-    ``bkey`` alone (safe for the salted xxhash keys) could conflate
-    buckets across bands here."""
-    from rlerrorgenerator_spark.plans.dedup import minhash_signatures
-
-    rows_per_band = n_hashes // bands
-    sig_a = minhash_signatures(
-        clean.select(F.col("url").alias("rid"), text_col),
-        text_col, "rid", n_hashes, shingle_k)
-    sig_b = minhash_signatures(
-        dirty.select("rid", text_col), text_col, "rid", n_hashes, shingle_k)
-
-    def band_keys(sig: DataFrame, rid_alias: str) -> DataFrame:
-        structs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("|", *[
-                    F.col(f"mh_{b * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ]).alias("bkey"),
-            )
-            for b in range(bands)
-        ])
-        return sig.select(
-            F.col("id").alias(rid_alias), F.explode(structs).alias("bk")
-        ).select(rid_alias, F.col("bk.band").alias("band"),
-                 F.col("bk.bkey").alias("bkey"))
-
-    ka, kb = _cap_blocks_two_sided(band_keys(sig_a, "rid_a"),
-                                   band_keys(sig_b, "rid_b"),
+    ka, kb = _cap_blocks_two_sided(keys(clean, "url", "rid_a"),
+                                   keys(dirty, "rid", "rid_b"),
                                    ["band", "bkey"], max_block_size)
     return (
         ka.join(kb, ["band", "bkey"])
@@ -345,7 +318,8 @@ def build_candidates(clean: DataFrame, dirty: DataFrame,
     if use_minhash:
         parts.append(minhash_blocks(clean, dirty, n_hashes=minhash_hashes,
                                     bands=minhash_bands,
-                                    max_block_size=max_block_size))
+                                    max_block_size=max_block_size)
+                     .select("rid_a", "rid_b", F.lit("minhash").alias("block")))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

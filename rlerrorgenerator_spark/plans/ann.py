@@ -288,8 +288,8 @@ def ivf_topk_verified(queries: DataFrame, corpus: DataFrame, k: int = 5,
     centroids (``ivf_centroids``) replace the trained k-means of
     ``ivf_topk``, so corpus bucket assignment (argmax key) and the
     query's ``n_probe`` probe list (top keys) are exact integer
-    arithmetic DuckDB replays bit-identically — the same ``_verified``
-    discipline as ``minhash_blocks_verified``. Same probe-join shape and
+    arithmetic DuckDB replays bit-identically — the same discipline as
+    ``minhash_blocks(signature="md5")``. Same probe-join shape and
     exact-cosine re-rank as the production ``ivf_topk``; only the
     centroid source differs (fixed projections vs trained means)."""
     cents = ivf_centroids(n_centroids, dim)

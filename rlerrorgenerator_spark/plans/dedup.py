@@ -8,9 +8,9 @@ runs, each as a DataFrame plan:
 2. n-gram Jaccard: word-k-shingles, inverted-index self-join on shingle,
    jaccard = |∩| / (|A|+|B|−|∩|). Selective shingles (k=5 words) keep the
    join sparse; hot shingles capped like hot blocks.
-3. MinHash-LSH: signature bands → bucket join (see linkage/blocking.py
-   for the pages-table variant; this one hashes with md5 so DuckDB can
-   oracle it bit-for-bit).
+3. MinHash-LSH: signature bands → bucket self-join, on the md5 mode of
+   the linkage signatures and band keys (linkage/blocking.py) so DuckDB
+   can oracle it bit-for-bit.
 4. SimHash: 64-bit sketch, hamming-distance pairs via band join.
 
 Embedding near-dup (cosine) lives in plans/ann.py.
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from rlerrorgenerator_spark.functions.textops import (
     exploded_shingles, fingerprint, tokens)
+from rlerrorgenerator_spark.linkage.blocking import band_keys, minhash_signature
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text",
@@ -93,62 +94,19 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
-def _md5_u64(col, salt: str):
-    """Bytes 8..16 of md5(salt || value), big-endian, as a zero-padded
-    20-digit decimal STRING — bit-identical to DuckDB's
-    ``lpad((('0x' || substring(md5(salt || g), 17, 16))::UBIGINT)::varchar,
-    20, '0')``, which is what makes the MinHash signature oracle-checkable
-    cross-engine. String min == numeric min due to fixed-width padding."""
-    return F.lpad(
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), col)), 17, 16), 16, 10),
-        20, "0",
-    )
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n_hashes: int = 12,
-                       k: int = 5) -> DataFrame:
-    """(id, mh_0..mh_{n-1}) MinHash signature over word-k-shingles."""
-    # explode + one groupBy with n min-aggs: the array-expression form
-    # (array_min(transform(...)) per hash) triggers Catalyst projection
-    # collapse, inlining the shingle construction into each of the n
-    # expressions (n× recompute per row).
-    sh = exploded_shingles(
-        df.select(F.col(id_col).alias("id"), text_col), text_col, ["id"], k
-    )
-    aggs = [
-        F.min(_md5_u64(F.col("g"), f"mh{i}|")).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
-
-
 def minhash_dup_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_hashes: int = 12,
                       bands: int = 6, k: int = 5) -> DataFrame:
-    """LSH banding over MinHash signatures → candidate pairs (id_a<id_b,
-    n_bands agreeing). bands × rows = n_hashes."""
-    rows_per_band = n_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, k)
-    # single explode of (band, bkey) structs — a per-band union would
-    # re-evaluate the signature aggregation once per band
-    structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "|", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bkey"),
-        )
-        for b in range(bands)
-    ])
-    out = sig.select("id", F.explode(structs).alias("bk")).select(
-        "id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    )
+    """LSH banding over md5 MinHash signatures of word-k-shingles →
+    candidate pairs (id_a<id_b, n_bands agreeing). bands × rows =
+    n_hashes. Signatures and band keys are the md5 mode of the linkage
+    MinHash (``linkage/blocking.py``); no hot-bucket cap."""
+    sig = minhash_signature(df, text_col, id_col, n_hashes, k, signature="md5")
     # materialize band keys before the self-join: Catalyst does not reuse
     # the exchange across the two renamed sides, so without this the
     # whole upstream (scan + shingle + n_hashes md5-min aggs) runs TWICE.
     # At corpus scale this is the signatures table you'd persist anyway.
-    out = out.localCheckpoint(eager=False)
+    out = band_keys(sig, "id", bands, signature="md5").localCheckpoint(eager=False)
     a = out.toDF("id_a", "band", "bkey")
     b2 = out.toDF("id_b", "band", "bkey")
     return (
@@ -167,9 +125,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     per-bit majority vote — zero shuffles. The md5-derived 32-bit halves
     (``('0x'||substr(md5(t),17,8))::BIGINT`` in DuckDB ==
     ``conv(substring(md5(t),17,8),16,10)`` here) make the sketch
-    bit-identical cross-engine — the same oracle discipline as
-    ``_md5_u64`` — and two 32-bit words avoid the sign-bit divergence a
-    single int64 sketch would have at bit 63.
+    bit-identical cross-engine — the same oracle discipline as the md5
+    MinHash signatures — and two 32-bit words avoid the sign-bit
+    divergence a single int64 sketch would have at bit 63.
     """
     # md5 + hex→long stay JVM-side (one md5 per token — the oracle-parity
     # discipline); the per-bit ±1 sums run in ONE Arrow-batched numpy UDF.

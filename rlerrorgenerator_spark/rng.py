@@ -120,8 +120,9 @@ def bernoulli_col(key_col: str | Column, seed: int, stage: str, rate: float) -> 
 # (``conv(substring(md5(..),17,16),16,10)``), DuckDB
 # (``('0x'||substring(md5(..),17,16))::UBIGINT``) and Python
 # (``hashlib.md5``). The same trick that made ``dup_minhash``
-# oracle-checkable (plans/dedup.py::_md5_u64) applied to the §2.A error
-# transforms: a transform run with ``rng='md5'`` is a deterministic
+# oracle-checkable (linkage/blocking.py::minhash_signature, md5 mode)
+# applied to the §2.A error transforms: a transform run with
+# ``rng='md5'`` is a deterministic
 # function a DuckDB oracle can reproduce END TO END — selection, draw
 # positions, replacement chars (see rlerrorgenerator_spark/oracle_er.py).
 #

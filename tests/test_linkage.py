@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -267,10 +270,39 @@ def test_shingle_jaccard_mixed_sample_boundary(spark):
     assert row2["metric_text_jaccard"] == 1.0
 
 
+def _pairs_digest(rows) -> str:
+    return hashlib.sha256("\n".join(sorted(map(repr, rows))).encode()).hexdigest()
+
+
+def test_production_blocking_is_pinned(spark):
+    """Digests of the production (xxhash) MinHash pair set and of the
+    full ``build_candidates`` rows on a fixed Bernoulli-injected fixture:
+    a refactor of the blocking plans must reproduce them bit for bit."""
+    from rlerrorgenerator_spark.linkage.blocking import build_candidates, minhash_blocks
+    from rlerrorgenerator_spark.operators import mess_data
+    from rlerrorgenerator_spark.sources.pages import prep_pages, synth_pages
+
+    clean = prep_pages(synth_pages(spark, 2000, seed=42)).localCheckpoint(eager=True)
+    dirty, _ = mess_data(clean, default_error_config(), seed=42, exact=False)
+    dirty = dirty.localCheckpoint(eager=True)
+
+    mh = [(r.rid_a, r.rid_b) for r in minhash_blocks(clean, dirty).collect()]
+    assert len(mh) == 1979
+    assert _pairs_digest(mh) == (
+        "3d7b05973f310c37c326c2e80ca2a1a230a3dfe826c2bdfa75eb079f9585ad3e")
+
+    cand = [(r.rid_a, r.rid_b, r.block) for r in build_candidates(clean, dirty).collect()]
+    assert Counter(b for _, _, b in cand) == {
+        "exact:text_prefix": 1964, "exact:url_norm": 63, "minhash": 2, "snm": 5779}
+    assert _pairs_digest(cand) == (
+        "59d066c051647270ce1f5cbb78e960a6103227a58186d546e17eccae545731c6")
+
+
 def test_cap_forms_produce_identical_pairs(spark, monkeypatch):
     """The window-count cap (default) and the broadcast-blacklist cap
     (SPARK_GRAFT_WINDOW_CAPS=0) must yield the SAME candidate pair set —
-    the two physical strategies implement one logical skew guard."""
+    the two physical strategies implement one logical skew guard — under
+    both MinHash signature modes."""
     from rlerrorgenerator_spark.linkage.blocking import (
         exact_blocks,
         minhash_blocks,
@@ -288,8 +320,10 @@ def test_cap_forms_produce_identical_pairs(spark, monkeypatch):
     def pairs():
         ex = {(r.rid_a, r.rid_b) for r in
               exact_blocks(clean, dirty, max_block_size=5).collect()}
-        mh = {(r.rid_a, r.rid_b) for r in
-              minhash_blocks(clean, dirty, max_block_size=5).collect()}
+        mh = {sig: {(r.rid_a, r.rid_b) for r in
+                    minhash_blocks(clean, dirty, max_block_size=5,
+                                   signature=sig).collect()}
+              for sig in ("xxhash", "md5")}
         return ex, mh
 
     monkeypatch.setenv("SPARK_GRAFT_WINDOW_CAPS", "1")
@@ -297,19 +331,19 @@ def test_cap_forms_produce_identical_pairs(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_WINDOW_CAPS", "0")
     ex_b, mh_b = pairs()
     assert ex_w == ex_b and mh_w == mh_b
-    assert ex_w and mh_w  # non-degenerate fixture
+    assert ex_w and all(mh_w.values())  # non-degenerate fixture
 
 
 def test_hot_block_cap_drops_giant_buckets(spark):
     """Skew guard: a block key shared by > max_block_size rows on either
     side is dropped entirely (boilerplate/empty-text protection), while
     normal-sized blocks keep their pairs — for the exact strategy and the
-    md5-verified MinHash-LSH strategy alike."""
+    MinHash-LSH strategy in its md5 mode alike."""
     from pyspark.sql import types as T
 
     from rlerrorgenerator_spark.linkage.blocking import (
         exact_blocks,
-        minhash_blocks_verified,
+        minhash_blocks,
     )
 
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit"
@@ -323,7 +357,7 @@ def test_hot_block_cap_drops_giant_buckets(spark):
     clean = spark.createDataFrame(rows_c, "url string, text string")
     dirty = spark.createDataFrame(rows_d, "rid string, url string, text string")
 
-    mh = minhash_blocks_verified(clean, dirty, max_block_size=8).collect()
+    mh = minhash_blocks(clean, dirty, max_block_size=8, signature="md5").collect()
     got = {(r.rid_a, r.rid_b) for r in mh}
     assert ("https://h.com/uniq", "d:uniq") in got
     assert not any("boiler" in a for a, _ in got)

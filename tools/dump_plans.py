@@ -52,30 +52,6 @@ def main() -> None:
     cand = build_candidates(clean, dirty).localCheckpoint(eager=True)
     explain(score_pairs(cand, clean, dirty), "score_pairs (pairwise features)", out)
 
-    # The production blocking plans materialize their block-key subtree
-    # once via lazy localCheckpoint (Catalyst re-derives a subtree
-    # consumed by both the hot-key count and the anti-join probe — see
-    # blocking.py::_cap_blocks), which shows up above as an opaque
-    # `Scan ExistingRDD` barrier. For auditability, dump the SAME plans
-    # with the barrier disabled so pushdown/codegen/join choices inside
-    # the blocking subtree stay reviewable.
-    from pyspark.sql import DataFrame
-
-    out.append(
-        "# Expanded variants (localCheckpoint barriers disabled)\n\n"
-        "Audit-only view: production keeps the barrier to evaluate the\n"
-        "block-key subtree once; these dumps disable it to expose the\n"
-        "full subtree Catalyst plans underneath.\n")
-    real_ckpt = DataFrame.localCheckpoint
-    DataFrame.localCheckpoint = lambda self, eager=True: self  # type: ignore[assignment]
-    try:
-        explain(exact_blocks(clean, dirty),
-                "exact_blocks — expanded", out)
-        explain(minhash_blocks(clean, dirty),
-                "minhash_blocks — expanded", out)
-    finally:
-        DataFrame.localCheckpoint = real_ckpt  # type: ignore[assignment]
-
     # parquet pushdown check on the driver tables
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     li = spark.read.parquet(f"{sf}/lineitem.parquet")
