@@ -23,6 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem that
+    writes it, so ``file://``, ``hdfs://`` or object store URIs resolve
+    the same way the write did (``os.path`` sees only plain paths)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 class CheckpointManager:
     """Write-once staged tables under ``base_dir``; resume = read-back.
 
@@ -43,19 +51,14 @@ class CheckpointManager:
         return os.path.join(self.base_dir, name)
 
     def exists(self, name: str) -> bool:
-        """Whether stage ``name`` was committed, asked of the Hadoop
-        FileSystem that writes it, so ``file://``, ``hdfs://`` or object
-        store URIs resolve the same way the write did."""
+        """Whether stage ``name`` was committed (:func:`path_exists` on
+        its commit marker)."""
         if self.base_dir is None:
             return False
         # path-based Iceberg tables mark commit state in metadata/, not a
         # _SUCCESS flag
         marker = "metadata" if self.fmt == "iceberg" else "_SUCCESS"
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(self._path(name), marker))
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs.exists(path)
+        return path_exists(self.spark, os.path.join(self._path(name), marker))
 
     def load(self, name: str) -> DataFrame:
         return self.spark.read.format(self.fmt).load(self._path(name))

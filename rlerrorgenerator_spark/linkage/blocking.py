@@ -18,8 +18,10 @@ generalize to three strategies over the pages domain, unioned + deduped:
 
 Skew: pathological blocks (empty/boilerplate text → one giant LSH bucket)
 are capped at ``max_block_size`` before the pair join — the explicit
-skew-key handling the north rule asks for (AQE skew-join splitting covers
-residual imbalance).
+skew-key handling the north rule asks for. The cap counts keys with a
+map-side-combined aggregate and drops the hot ones with a broadcast
+anti-join, so no row of a mega-block is ever shuffled into one task
+(AQE skew-join splitting covers residual imbalance).
 
 Conventions: the clean side exposes ``rid_a`` (its url), the dirty side
 ``rid_b`` (its row key). Output: ``(rid_a, rid_b, block)``;
@@ -28,8 +30,6 @@ Conventions: the clean side exposes ``rid_a`` (its url), the dirty side
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -59,49 +59,36 @@ def _cap_blocks_two_sided(a: DataFrame, b: DataFrame, keys: list[str],
     """Drop keys whose group exceeds ``max_block_size`` on either side —
     the explicit skew guard in front of every block equi-join.
 
-    Default (window form): each side filters itself with a per-key count
-    window — ``count() OVER (PARTITION BY keys)`` then
-    ``count ≤ max_block_size``. No driver participation at all: no
-    hot-list collect, no broadcast build, no checkpoint, and the window's
-    hash exchange on ``keys`` is exactly the partitioning the downstream
-    pair join needs, so Catalyst reuses it (one exchange per side total).
-    Each side has a single consumer, so the double-evaluation trap that
-    forced lazy localCheckpoints on the broadcast form (signature
-    aggregation re-run under the build AND probe sides) cannot occur.
-    Per-side capping also matches the cross-engine oracles' SQL
-    (``bkey NOT IN (SELECT … HAVING count > N)`` per side) row-for-row.
+    One map-side-combined ``groupBy(*keys, "__side").count()`` over the
+    union of both sides yields the hot list (keys over the cap on either
+    side); a broadcast ``left_anti`` join of it then filters each side.
+    Hot rows are dropped where they are produced, so none of them ever
+    reaches a shuffle: the count exchange carries at most one narrow
+    row per (key, side) per map task, and the pair join's exchanges carry
+    only the surviving rows. Duplicate keys in the broadcast build side
+    change nothing, so the hot list is not deduplicated.
 
-    ``SPARK_GRAFT_WINDOW_CAPS=0`` restores the broadcast-blacklist form
-    (one union-side count + one broadcast + anti-joins, lazy-checkpointed
-    per side) for A/B measurement. Pair-set equivalence of the two forms:
-    a key hot on one side contributes no pairs either way, because its
-    rows vanish from that side of the equi-join."""
-    if os.environ.get("SPARK_GRAFT_WINDOW_CAPS", "1") == "1":
-        def cap(side: DataFrame) -> DataFrame:
-            w = Window.partitionBy(*keys)
-            return (
-                side.withColumn("__bc", F.count(F.lit(1)).over(w))
-                .where(F.col("__bc") <= max_block_size)
-                .drop("__bc")
-            )
-
-        return cap(a), cap(b)
+    Each side feeds both the count and its own anti-join, so it is lazily
+    ``localCheckpoint``ed: the MinHash signature kernel runs once per side
+    instead of once per consumer. A key hot on one side contributes no
+    pairs, because its rows vanish from that side of the equi-join; so
+    the pairs equal those of the cross-engine oracles' per-side
+    ``bkey NOT IN (SELECT … HAVING count > N)``."""
     a = a.localCheckpoint(eager=False)
     b = b.localCheckpoint(eager=False)
     u = (
         a.select(*keys).withColumn("__side", F.lit("a"))
         .unionByName(b.select(*keys).withColumn("__side", F.lit("b")))
     )
-    hot = (
+    hot = F.broadcast(
         u.groupBy(*keys, "__side").count()
         .where(F.col("count") > max_block_size)
-        .select(*keys).distinct()
+        .select(*keys)
     )
-    hot = F.broadcast(hot)
     return (a.join(hot, keys, "left_anti"), b.join(hot, keys, "left_anti"))
 
 
-def exact_blocks(clean: DataFrame, dirty: DataFrame, key_exprs: dict[str, Column] | None = None,
+def exact_blocks(clean: DataFrame, dirty: DataFrame,
                  max_block_size: int = 100) -> DataFrame:
     """Equi-join candidates on each normalized key (reference's single-field
     blocking unions, `utils.R:548-586`).
@@ -111,20 +98,19 @@ def exact_blocks(clean: DataFrame, dirty: DataFrame, key_exprs: dict[str, Column
     equi-join on (kname, bkey) replace the per-key pipelines — the same
     pairs, with one scan of each input instead of one per key and ~4×
     fewer serial job launches (checkpoint/broadcast barriers)."""
-    if key_exprs is None:
-        key_exprs = {
-            "url_norm": normalize_url("url"),
-            # pre-truncate before the whitespace-collapse regex: the key is
-            # 24 chars, so running the regex over the full multi-KB text
-            # burns ~3x the whole strategy's cost for bytes the key never
-            # sees (measured 28s -> 10s at 240k rows). 1000 raw chars
-            # always cover 24 collapsed chars unless a text opens with
-            # >976 whitespace chars — and such a text has no meaningful
-            # 24-char prefix to block on anyway.
-            "text_prefix": F.substring(
-                F.regexp_replace(F.substring("text", 1, 1000), r"\s+", " "),
-                1, 24),
-        }
+    key_exprs = {
+        "url_norm": normalize_url("url"),
+        # pre-truncate before the whitespace-collapse regex: the key is
+        # 24 chars, so running the regex over the full multi-KB text
+        # burns ~3x the whole strategy's cost for bytes the key never
+        # sees (measured 28s -> 10s at 240k rows). 1000 raw chars
+        # always cover 24 collapsed chars unless a text opens with
+        # >976 whitespace chars — and such a text has no meaningful
+        # 24-char prefix to block on anyway.
+        "text_prefix": F.substring(
+            F.regexp_replace(F.substring("text", 1, 1000), r"\s+", " "),
+            1, 24),
+    }
 
     def keyed(side: DataFrame, rid_col: str, alias: str) -> DataFrame:
         structs = F.array(*[
@@ -149,19 +135,16 @@ def exact_blocks(clean: DataFrame, dirty: DataFrame, key_exprs: dict[str, Column
 
 
 def sorted_neighborhood_blocks(clean: DataFrame, dirty: DataFrame,
-                               sort_expr: Column | None = None,
                                window: int = 3) -> DataFrame:
     """Sorted-neighborhood: union both sides, range-sort on the key, pair
-    rows within ``window`` positions across sides.
+    rows within ``window`` positions across sides; the sort key is the
+    normalized url.
 
     Spark's ``row_number`` over a global order requires a single-partition
-    window — instead we band by ``floor(rank / window)`` computed from a
-    range-partitioned sort (zipWithIndex-style via partition offsets would
-    also work); adjacent bands are joined so every ≤window neighborhood is
-    covered by (band, band+1).
+    window — instead a distributed global rank (range-partitioned sort)
+    feeds lag windows over blocks of consecutive ranks (below).
     """
-    if sort_expr is None:
-        sort_expr = normalize_url("url")
+    sort_expr = normalize_url("url")
     a = clean.select(F.col("url").alias("rid"), sort_expr.alias("skey"),
                      F.lit("a").alias("side"))
     b = dirty.select(F.col("rid").alias("rid"), sort_expr.alias("skey"),
@@ -300,27 +283,19 @@ def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
 
 
 def build_candidates(clean: DataFrame, dirty: DataFrame,
-                     use_exact: bool = True, use_snm: bool = True,
-                     use_minhash: bool = True, snm_window: int = 3,
-                     minhash_hashes: int = 16, minhash_bands: int = 8,
-                     max_block_size: int = 200) -> DataFrame:
-    """Union of all blocking strategies, deduped to (rid_a, rid_b).
+                     use_minhash: bool = True) -> DataFrame:
+    """Union of the exact (capped at 200 rows per key), SNM and, with
+    ``use_minhash``, MinHash (capped at 200) strategies, deduped to
+    (rid_a, rid_b).
 
     ``block`` keeps the first strategy that produced the pair (for
     diagnostics); dedup is a groupBy on the pair key — map-side partial
     aggregation keeps the shuffle small.
     """
-    parts = []
-    if use_exact:
-        parts.append(exact_blocks(clean, dirty, max_block_size=max_block_size))
-    if use_snm:
-        parts.append(sorted_neighborhood_blocks(clean, dirty, window=snm_window))
+    out = exact_blocks(clean, dirty, max_block_size=200).unionByName(
+        sorted_neighborhood_blocks(clean, dirty))
     if use_minhash:
-        parts.append(minhash_blocks(clean, dirty, n_hashes=minhash_hashes,
-                                    bands=minhash_bands,
-                                    max_block_size=max_block_size)
-                     .select("rid_a", "rid_b", F.lit("minhash").alias("block")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        out = out.unionByName(
+            minhash_blocks(clean, dirty)
+            .select("rid_a", "rid_b", F.lit("minhash").alias("block")))
     return out.groupBy("rid_a", "rid_b").agg(F.min("block").alias("block"))

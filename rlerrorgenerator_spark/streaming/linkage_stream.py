@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame
 
+from rlerrorgenerator_spark.checkpoint import path_exists
 from rlerrorgenerator_spark.linkage.incremental import link_increment
 
 _EMPTY_CLUSTERS = "id string, cluster_id string"
@@ -35,7 +36,7 @@ def fold_batch(clean: DataFrame, batch: DataFrame, clusters_dir: str,
     first batch), link the batch against clean, atomically replace the
     clusters table. Pure batch function — usable outside streaming."""
     spark = batch.sparkSession
-    if os.path.exists(os.path.join(clusters_dir, "_SUCCESS")):
+    if path_exists(spark, os.path.join(clusters_dir, "_SUCCESS")):
         prior = spark.read.parquet(clusters_dir)
     else:
         prior = spark.createDataFrame([], _EMPTY_CLUSTERS)

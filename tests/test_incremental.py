@@ -103,6 +103,27 @@ def test_stream_increment_equals_full(spark, tmp_path):
     assert got == want
 
 
+def test_fold_batch_resumes_uri_clusters_dir(spark, tmp_path):
+    # a file:// clusters_dir must see the prior batch's table exactly
+    # like a plain path does, not restart every fold from an empty prior
+    from rlerrorgenerator_spark.streaming.linkage_stream import fold_batch
+
+    clean = prep_pages(
+        synth_pages(spark, 200, seed=14, body_tokens=(20, 120))
+    ).localCheckpoint(eager=True)
+    dirty, _ = mess_data(clean, default_error_config(), seed=14)
+    dirty = dirty.localCheckpoint(eager=True)
+    b1 = dirty.where(F.crc32(F.col("rid")) % 2 == 0).localCheckpoint(eager=True)
+    b2 = dirty.subtract(b1).localCheckpoint(eager=True)
+
+    tables = []
+    for clusters_dir in (str(tmp_path / "plain"), (tmp_path / "uri").as_uri()):
+        fold_batch(clean, b1, clusters_dir)
+        fold_batch(clean, b2, clusters_dir)
+        tables.append(_labels(spark.read.parquet(clusters_dir)))
+    assert tables[0] == tables[1]
+
+
 def test_increment_bridges_prior_clusters(spark):
     # two singleton prior clusters merged by one new edge: min-id label
     # must re-minimize over BOTH prior memberships

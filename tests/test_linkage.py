@@ -298,11 +298,12 @@ def test_production_blocking_is_pinned(spark):
         "59d066c051647270ce1f5cbb78e960a6103227a58186d546e17eccae545731c6")
 
 
-def test_cap_forms_produce_identical_pairs(spark, monkeypatch):
-    """The window-count cap (default) and the broadcast-blacklist cap
-    (SPARK_GRAFT_WINDOW_CAPS=0) must yield the SAME candidate pair set —
-    the two physical strategies implement one logical skew guard — under
-    both MinHash signature modes."""
+def test_cap_fixture_pairs_are_pinned(spark):
+    """The hot-key cap on a fixture where a third of the pages share one
+    boilerplate text: ``exact_blocks`` and ``minhash_blocks`` under both
+    signature modes reproduce pinned digests. The digests were computed
+    with the per-key count-window cap this guard replaced, so they also
+    pin that the two forms give the same pairs."""
     from rlerrorgenerator_spark.linkage.blocking import (
         exact_blocks,
         minhash_blocks,
@@ -317,21 +318,83 @@ def test_cap_forms_produce_identical_pairs(spark, monkeypatch):
     clean = spark.createDataFrame(rows_c, "url string, text string")
     dirty = spark.createDataFrame(rows_d, "rid string, url string, text string")
 
-    def pairs():
-        ex = {(r.rid_a, r.rid_b) for r in
-              exact_blocks(clean, dirty, max_block_size=5).collect()}
-        mh = {sig: {(r.rid_a, r.rid_b) for r in
-                    minhash_blocks(clean, dirty, max_block_size=5,
-                                   signature=sig).collect()}
-              for sig in ("xxhash", "md5")}
-        return ex, mh
+    ex = [(r.rid_a, r.rid_b, r.block) for r in
+          exact_blocks(clean, dirty, max_block_size=5).collect()]
+    assert len(ex) == 30
+    assert _pairs_digest(ex) == (
+        "fcdc4f0a7fe4ae9b9552376a9badbef30c331b15d49faa5301f760653d5d043f")
+    want = {
+        "xxhash": (20, "7c9881a0c93e04fdcf733ee082a5571863ca8d8f61659dd8ce672d25342d7573"),
+        "md5": (26, "709c8572748d5744a3ca92b5dffc9fbe51b37cecaa0d4864845a54a9e92dd6c4"),
+    }
+    for sig, (n, digest) in want.items():
+        mh = [(r.rid_a, r.rid_b, r.n_bands) for r in
+              minhash_blocks(clean, dirty, max_block_size=5,
+                             signature=sig).collect()]
+        assert (len(mh), _pairs_digest(mh)) == (n, digest), sig
 
-    monkeypatch.setenv("SPARK_GRAFT_WINDOW_CAPS", "1")
-    ex_w, mh_w = pairs()
-    monkeypatch.setenv("SPARK_GRAFT_WINDOW_CAPS", "0")
-    ex_b, mh_b = pairs()
-    assert ex_w == ex_b and mh_w == mh_b
-    assert ex_w and all(mh_w.values())  # non-degenerate fixture
+
+def _exchanges(df):
+    """``(simpleString, shuffleRecordsWritten)`` of every Exchange
+    in ``df``'s final adaptive plan; call after an action on ``df``."""
+    out = []
+
+    def walk(p):
+        if p.nodeName() == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        if p.getClass().getSimpleName().endswith("QueryStageExec"):
+            return walk(p.plan())
+        if p.nodeName() == "Exchange":
+            out.append((p.simpleString(100),
+                        p.metrics().get("shuffleRecordsWritten").get().value()))
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_cap_never_shuffles_hot_rows(spark):
+    """The hot-key cap drops a mega-block's rows before any block-key
+    exchange: every ``Exchange hashpartitioning(kname, bkey)`` /
+    ``(band, bkey)`` writes at most its side's non-hot row count. A cap
+    that counts per key inside such an exchange (a count window) would
+    shuffle every hot row into one task first."""
+    from rlerrorgenerator_spark.linkage.blocking import (
+        exact_blocks,
+        minhash_blocks,
+    )
+
+    n, n_hot = 400, 40  # 10% of each side share one text
+    rows_c, rows_d = [], []
+    for i in range(n):
+        txt = ("boiler plate footer text shared by many pages" if i < n_hot
+               else f"page {i} body words t{i} u{i} v{i} w{i}")
+        rows_c.append((f"https://h{i % 13}.com/p/{i}", txt))
+        rows_d.append((f"d:{i:04d}", f"https://h{i % 13}.com/p/{i}", txt))
+    clean = spark.createDataFrame(rows_c, "url string, text string")
+    dirty = spark.createDataFrame(rows_d, "rid string, url string, text string")
+
+    # sort-merge pair joins, so the block-key exchanges exist at this size
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        # exact: url_norm + text_prefix per row, the text key hot;
+        # MinHash: 8 bands per row, all 8 of the shared text hot
+        for df, keys, non_hot in (
+            (exact_blocks(clean, dirty, max_block_size=8), "kname", 2 * n - n_hot),
+            (minhash_blocks(clean, dirty, max_block_size=8), "band", 8 * (n - n_hot)),
+        ):
+            assert df.collect()
+            key_ex = [e for e in _exchanges(df)
+                      if f"hashpartitioning({keys}#" in e[0]
+                      and ", bkey#" in e[0] and "__side" not in e[0]]
+            assert len(key_ex) == 2, key_ex  # one per side
+            for s, written in key_ex:
+                assert written <= non_hot, (s, written, non_hot)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_hot_block_cap_drops_giant_buckets(spark):
