@@ -9,8 +9,7 @@ the er_op_* queries are ORACLE-CHECKED: each runs the real transform in
 (selection, draws, edits) bit-identically — see
 rlerrorgenerator_spark/oracle_er.py. Rows-only remainders per the driver
 contract: the er_pipeline family, er_op_calibration and
-er_audit_violations (iterative seeded-RNG programs, self-checking rows),
-and ann_ivf_topk (iterative float k-means).
+er_audit_violations (iterative seeded-RNG programs, self-checking rows).
 
 Float discipline for cross-engine value-hash parity: every double
 aggregate is ``round``-ed identically on both sides, embeddings are cast
@@ -414,9 +413,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100TB ANN path (sign-LSH bucket join), checked two ways: the
     row itself reports top-1 recall vs the exact brute-force baseline
     (target >= 0.9), AND the whole computation now has a full DuckDB
-    oracle — the LSH planes are md5-derived Rademacher signs over
-    floor-quantized integer vectors (plans/ann.py::rademacher_planes),
-    so the candidate sets are bit-identical cross-engine."""
+    oracle — the LSH planes are md5-derived Rademacher signs
+    (plans/ann.py::md5_signs, tags 'lsh|t') dotted against
+    floor-quantized integer vectors, so the candidate sets are
+    bit-identical cross-engine."""
     from rlerrorgenerator_spark.plans.ann import cosine_topk, lsh_topk
 
     emb = _load(spark, sf_dir, "embeddings")
@@ -582,26 +582,26 @@ def _er_result(spark: SparkSession, sf_dir: str):
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-routed ANN, now FULLY ORACLE-CHECKED (VERDICT r3 fix #7):
-    routing uses md5-Rademacher fixed centroids (plans/ann.py::
-    ivf_topk_verified — integer dot-product argmax assignment + top-6
-    probe list, all replayed bit-identically by the DuckDB oracle, the
-    same discipline as minhash_blocks' md5 mode), then the
-    usual exact-cosine re-rank inside the probed buckets. The driver
-    embeddings are near-RANDOM vectors — the worst case for any
-    space-partitioning index — so the operating point probes 6 of 8
-    buckets for recall ≈ 0.86; the PRODUCTION trained-k-means router
-    (plans/ann.py::ivf_topk) reaches ≥ 0.9 probing < 1/4 of a clustered
-    corpus (tests/test_dedup_ann.py::test_ivf_topk_clustered) and stays
-    exercised by tests — only the centroid source differs."""
-    from rlerrorgenerator_spark.plans.ann import cosine_topk, ivf_topk_verified
+    """IVF-routed ANN, fully oracle-checked: the production
+    plans/ann.py::ivf_topk with ``centroids="md5"`` — fixed md5-Rademacher
+    centroids, integer dot-product argmax assignment and a top-6 probe
+    list, all replayed bit-identically by the DuckDB oracle (the same
+    discipline as minhash_blocks' md5 mode) — then the exact-cosine
+    re-rank every ANN plan shares. The driver embeddings are near-RANDOM
+    vectors — the worst case for any space-partitioning index — so the
+    operating point probes 6 of 8 buckets for recall ≈ 0.86; the default
+    trained-k-means router (``centroids="kmeans"``) reaches ≥ 0.9 probing
+    < 1/4 of a clustered corpus
+    (tests/test_dedup_ann.py::test_ivf_topk_clustered). Only the centroid
+    source differs between the two modes."""
+    from rlerrorgenerator_spark.plans.ann import cosine_topk, ivf_topk
 
     emb = _load(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 50)
     exact = cosine_topk(queries_df, emb, k=1).select(
         "query_id", F.col("neighbor_id").alias("exact_nn"))
-    approx = ivf_topk_verified(queries_df, emb, k=1,
-                               n_centroids=8, n_probe=6) \
+    approx = ivf_topk(queries_df, emb, k=1, centroids="md5",
+                      n_centroids=8, n_probe=6) \
         .select("query_id", F.col("neighbor_id").alias("ivf_nn"))
     j = exact.join(approx, "query_id", "left")
     return j.agg(
@@ -1596,7 +1596,7 @@ def oracle_sql() -> dict[str, str]:
             FROM ex1 LEFT JOIN lsh1 USING (query_id)
         """,
         # IVF routing replayed end-to-end: md5-Rademacher centroids
-        # (the 'ivf|c|d' sign stream, plans/ann.py::ivf_centroids),
+        # (the 'ivf|c|d' sign stream, plans/ann.py::md5_signs),
         # integer routing keys dot·8 + (7-c) so ties break toward the
         # lower centroid id, argmax assignment, top-6 probes, exact
         # cosine re-rank, recall vs the brute-force baseline.

@@ -89,17 +89,47 @@ def _prob_buckets(labeled: DataFrame, prob_col: str, decimals: int = 5) -> DataF
     )
 
 
+def _cumulative(labeled: DataFrame, prob_col: str) -> DataFrame:
+    """The bucketed cumulative table every threshold scan reads, one row
+    per ``_prob_buckets`` bucket ``(p, n, ny)`` plus:
+
+    - ``cum_ge`` / ``ctp`` / ``cfp``: pairs / positives / negatives with
+      prob ≥ p, and ``ppv`` = ctp / cum_ge;
+    - ``cum_le``: pairs with prob ≤ p, and ``npv`` = negatives with
+      prob ≤ p over cum_le;
+    - ``tot_pos`` / ``tot_neg``: table-wide positives / negatives.
+
+    The windows run over distinct probabilities only (bounded), and
+    Catalyst prunes the ones a caller does not read."""
+    from pyspark.sql import Window
+
+    wd = Window.orderBy(F.desc("p"))
+    wa = Window.orderBy(F.asc("p"))
+    wall = Window.partitionBy()
+    neg = F.col("n") - F.col("ny")
+    return (
+        _prob_buckets(labeled, prob_col).select(
+            "p", "n", "ny",
+            F.sum("n").over(wd).alias("cum_ge"),
+            F.sum("ny").over(wd).alias("ctp"),
+            F.sum("n").over(wa).alias("cum_le"),
+            F.sum(neg).over(wa).alias("cneg_le"),
+            F.sum("ny").over(wall).alias("tot_pos"),
+            F.sum(neg).over(wall).alias("tot_neg"),
+        )
+        .withColumn("cfp", F.col("cum_ge") - F.col("ctp"))
+        .withColumn("ppv", F.col("ctp") / F.col("cum_ge"))
+        .withColumn("npv", F.col("cneg_le") / F.col("cum_le"))
+    )
+
+
 def auc_metrics(labeled: DataFrame, prob_col: str = "match_prob") -> DataFrame:
     """One-row (auc, gini): tie-corrected rank-statistic AUC
     (`utils.R:1005-1047` computes AUC via ROCR; the Mann-Whitney form is
     the same quantity in one aggregation + one bounded window)."""
-    from pyspark.sql import Window
-
-    per = _prob_buckets(labeled, prob_col)
-    w = Window.orderBy("p").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per.withColumn(
-        "before", F.coalesce(F.sum("n").over(w), F.lit(0))
-    ).withColumn("avg_rank", F.col("before") + (F.col("n") + 1) / 2.0)
+    # pairs ranked below bucket p: cum_le − n
+    ranked = _cumulative(labeled, prob_col).withColumn(
+        "avg_rank", F.col("cum_le") - F.col("n") + (F.col("n") + 1) / 2.0)
     agg = ranked.agg(
         F.sum(F.col("ny") * F.col("avg_rank")).alias("rank_sum"),
         F.sum("ny").alias("npos"),
@@ -139,21 +169,12 @@ def calc_review_pct(labeled: DataFrame, ppv_target: float = 0.95,
     highest lower threshold whose reject-set NPV ≥ npv_target; pairs with
     probability between the two need human review.
 
-    Two actions over the BUCKETED probability table (see ``_prob_buckets``
-    — no partition-less window over raw pairs): one collect for the
+    Two actions over the bucketed cumulative table (``_cumulative`` — no
+    partition-less window over raw pairs): one collect for the
     thresholds, one for the review count.
     """
-    from pyspark.sql import Window
-
-    per = _prob_buckets(labeled, prob_col).localCheckpoint(eager=False)
-    wd = Window.orderBy(F.desc("p"))  # bounded: distinct probs only
-    wa = Window.orderBy(F.asc("p"))
-    cum = (
-        per.withColumn("ppv", F.sum("ny").over(wd) / F.sum("n").over(wd))
-        .withColumn(
-            "npv", F.sum(F.col("n") - F.col("ny")).over(wa) / F.sum("n").over(wa)
-        )
-    )
+    cum = _cumulative(labeled, prob_col).select("p", "n", "ppv", "npv") \
+        .localCheckpoint(eager=False)
     row = cum.agg(
         F.min(F.when(F.col("ppv") >= ppv_target, F.col("p"))).alias("upper"),
         F.max(F.when(F.col("npv") >= npv_target, F.col("p"))).alias("lower"),
@@ -163,7 +184,7 @@ def calc_review_pct(labeled: DataFrame, ppv_target: float = 0.95,
     lower = row["lower"] if row["lower"] is not None else 0.0
     total = row["total"] or 0
     n_review = (
-        per.where((F.col("p") > lower) & (F.col("p") < upper))
+        cum.where((F.col("p") > lower) & (F.col("p") < upper))
         .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("n")).collect()[0]["n"]
     )
     spark = labeled.sparkSession
@@ -182,21 +203,9 @@ def review_pct_grid(labeled: DataFrame,
     swept per target in `paper_flow_dob_latest.Rmd`). ONE pass: the
     bucketed cumulative table is computed once and every target is a
     conditional aggregate over it (not one job per target)."""
-    from pyspark.sql import Window
-
     if targets is None:
         targets = [round(0.90 + 0.01 * i, 2) for i in range(11)]
-    per = _prob_buckets(labeled, prob_col)
-    wd = Window.orderBy(F.desc("p"))
-    wa = Window.orderBy(F.asc("p"))
-    cum = (
-        per.withColumn("ppv", F.sum("ny").over(wd) / F.sum("n").over(wd))
-        .withColumn(
-            "npv", F.sum(F.col("n") - F.col("ny")).over(wa) / F.sum("n").over(wa)
-        )
-        .withColumn("cum_ge", F.sum("n").over(wd))   # pairs with prob >= p
-        .withColumn("cum_le", F.sum("n").over(wa))   # pairs with prob <= p
-    )
+    cum = _cumulative(labeled, prob_col)
     aggs = [F.sum("n").alias("total")]
     for t in targets:
         key = f"{t:.2f}".replace(".", "_")
@@ -243,20 +252,7 @@ def review_threshold_summary(labeled: DataFrame, ppv_target: float = 0.95,
     precision). Everything runs over the bounded ``_prob_buckets`` table
     — one shuffle plus bounded windows, no partition-less window over raw
     pairs and no driver collect."""
-    from pyspark.sql import Window
-
-    per = _prob_buckets(labeled, prob_col)
-    wd = Window.orderBy(F.desc("p"))
-    wa = Window.orderBy(F.asc("p"))
-    cum = (
-        per.withColumn("ppv", F.sum("ny").over(wd) / F.sum("n").over(wd))
-        .withColumn(
-            "npv", F.sum(F.col("n") - F.col("ny")).over(wa) / F.sum("n").over(wa)
-        )
-        .withColumn("cum_ge", F.sum("n").over(wd))
-        .withColumn("cum_le", F.sum("n").over(wa))
-    )
-    agg = cum.agg(
+    agg = _cumulative(labeled, prob_col).agg(
         F.coalesce(F.min(F.when(F.col("ppv") >= ppv_target, F.col("p"))),
                    F.lit(1.0)).alias("review_upper"),
         F.coalesce(F.max(F.when(F.col("npv") >= npv_target, F.col("p"))),
@@ -281,20 +277,9 @@ def review_threshold_summary(labeled: DataFrame, ppv_target: float = 0.95,
 
 def roc_table(labeled: DataFrame, prob_col: str = "match_prob") -> DataFrame:
     """ROC points (threshold, tpr, fpr, precision) per distinct probability
-    (`utils.R:1163-1190` builds the same table via ROCR). Bucketed scan —
-    one shuffle + one bounded window."""
-    from pyspark.sql import Window
-
-    per = _prob_buckets(labeled, prob_col)
-    wd = Window.orderBy(F.desc("p"))
-    tot = per.agg(F.sum("ny").alias("tot_pos"),
-                  F.sum(F.col("n") - F.col("ny")).alias("tot_neg"))
-    cum = (
-        per.withColumn("ctp", F.sum("ny").over(wd))
-        .withColumn("cfp", F.sum(F.col("n") - F.col("ny")).over(wd))
-        .crossJoin(F.broadcast(tot))
-    )
-    return cum.select(
+    (`utils.R:1163-1190` builds the same table via ROCR), read off
+    ``_cumulative``."""
+    return _cumulative(labeled, prob_col).select(
         F.col("p").alias("threshold"),
         (F.col("ctp") / F.greatest("tot_pos", F.lit(1))).alias("tpr"),
         (F.col("cfp") / F.greatest("tot_neg", F.lit(1))).alias("fpr"),
@@ -326,23 +311,12 @@ def find_threshold_for_metric(labeled: DataFrame, metric: str = "precision",
                               target: float = 0.99,
                               prob_col: str = "match_prob") -> float | None:
     """Lowest threshold achieving ``metric ≥ target``
-    (`utils.R:1121-1160`) — one action over the BUCKETED probability table
-    (`_prob_buckets`; no partition-less window over raw pairs): cumulative
-    tp/n via a bounded window, total positives via a window aggregate in
-    the same plan, min qualifying threshold via conditional agg."""
-    from pyspark.sql import Window
-
-    per = _prob_buckets(labeled, prob_col)
-    wd = Window.orderBy(F.desc("p"))
-    wall = Window.partitionBy()  # whole-table aggregate, no extra action
-    cum = (
-        per.withColumn("ctp", F.sum("ny").over(wd))
-        .withColumn("cn", F.sum("n").over(wd))
-        .withColumn("tot_pos", F.sum("ny").over(wall))
-    )
-    cum = cum.withColumn("precision", F.col("ctp") / F.col("cn")).withColumn(
-        "recall", F.col("ctp") / F.greatest("tot_pos", F.lit(1))
-    )
+    (`utils.R:1121-1160`) — one action over the bucketed cumulative
+    table (``_cumulative``; no partition-less window over raw pairs):
+    the extreme qualifying threshold via a conditional agg."""
+    cum = _cumulative(labeled, prob_col).withColumn(
+        "precision", F.col("ppv")
+    ).withColumn("recall", F.col("ctp") / F.greatest("tot_pos", F.lit(1)))
     # precision rises with threshold → lowest qualifying threshold gives
     # max recall at the target; recall falls with threshold → highest
     # qualifying threshold gives max precision at the target.

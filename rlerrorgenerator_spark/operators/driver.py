@@ -16,7 +16,7 @@ Exact-k path: each config row adds a seeded top-k (a TakeOrderedAndProject
 over its input) left-joined back as a flag, so each stage references its
 input twice and un-checkpointed plans grow ~2^k — the driver therefore
 checkpoints each stage (``localCheckpoint`` volatile, or durable
-parquet/Iceberg via a ``CheckpointManager``), exactly the per-stage
+parquet via a ``CheckpointManager``), exactly the per-stage
 snapshot discipline of the reference (`benchmarking/utils.R:504-641`) and
 the north rule's resumable stages. Each editor column is one pandas UDF
 call, so each editor runs once, in its own stage.
@@ -123,6 +123,7 @@ def mess_data(
     (calibration hook, `benchmarking/utils.R:699-709`).
     """
     spark = clean.sparkSession
+    mgr = ckpt or CheckpointManager(spark)
     lookups = lookups or {}
     # LAZY row count: on the Bernoulli path with all-fractional rates the
     # count is never consumed (selection is a hash predicate, not top-k),
@@ -168,7 +169,6 @@ def mess_data(
             # entering ROW_OPS: materialize dirty once (single pass over
             # the whole cell-edit chain) unless the last cell op already
             # staged it, and extract the lineage table
-            mgr = ckpt or CheckpointManager(spark)
             if since_ckpt or not ts:
                 dirty = mgr.stage(dirty, f"dirty_cells_ts{ts:03d}")
             lineage = lineage.unionByName(explode_lineage(dirty))
@@ -213,7 +213,6 @@ def mess_data(
             # and the final lineage staging reads it again: materialize it
             # once here; the table is tiny (rows = injected errors, ~3% of
             # the corpus) so the extra snapshot is noise.
-            mgr = ckpt or CheckpointManager(spark)
             lineage = mgr.stage(lineage, f"lineage_ts{ts:03d}")
         ts += 1
         if not exact and row.error in EDIT_STEPS:
@@ -247,17 +246,14 @@ def mess_data(
             # their input twice via the top-k flag join). Bernoulli path:
             # the cell-edit chain is ONE fused narrow projection, staged
             # once after the last cell op (no intermediate checkpoints).
-            mgr = ckpt or CheckpointManager(spark)
             dirty = mgr.stage(dirty, f"dirty_ts{ts:03d}")
             since_ckpt = 0
     if LINEAGE_ARRAY_COL in dirty.columns:
         # program had no row ops: extract lineage now
-        mgr = ckpt or CheckpointManager(spark)
         if since_ckpt or not ts:
             dirty = mgr.stage(dirty, "dirty_cells_final")
         lineage = lineage.unionByName(explode_lineage(dirty))
         dirty = dirty.drop(LINEAGE_ARRAY_COL)
-    mgr = ckpt or CheckpointManager(spark)
     if heavy:
         wide = clean.select("orig_url", *heavy)
         dirty = dirty.join(wide, "orig_url", "left")

@@ -73,7 +73,6 @@ def run_linkage(
     config: list[ErrorConfigRow] | None = None,
     pages: DataFrame | None = None,
     ckpt_dir: str | None = None,
-    use_minhash: bool = True,
     compute_clusters: bool = True,
     exact: bool = True,
     body_tokens: tuple[int, int] = (20, 120),
@@ -128,7 +127,7 @@ def run_linkage(
     if dirty_pages is None:
         dirty = ckpt.stage(dirty, "dirty_staged")
     candidates = ckpt.stage(
-        build_candidates(clean, dirty, use_minhash=use_minhash), "candidates"
+        build_candidates(clean, dirty), "candidates"
     )
     scored = ckpt.stage(score_pairs(candidates, clean, dirty), "scored")
     # labeled is one cheap broadcast-ish join off the scored checkpoint

@@ -1,20 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Dot products with built-in ``zip_with``/``aggregate`` (JVM; no Python);
-  top-k per query via a rank window over the blocked cross join.
-- ``lsh_topk``: the scale path — random-hyperplane (sign) LSH buckets
-  shrink the candidate set; same scoring afterwards. Recall < 1 by
-  construction; probe multiple hash tables to trade compute for recall.
+Every top-k plan routes candidate pairs, then hands them to one re-rank
+(``_top_k``: exact cosine, ``row_number`` per query, ``rk <= k``):
 
-At 10^12 × 10^12 this becomes IVF-style: cluster the corpus (k-means or
-hash buckets), route queries to nprobe nearest buckets; the bucket join
-below is exactly that shape with hash routing.
+- ``cosine_topk``: brute-force exact top-k — the correctness baseline
+  (cross join, no routing).
+- ``lsh_topk``: random-hyperplane (sign) LSH buckets shrink the
+  candidate set to a bucket equi-join. Recall < 1 by construction;
+  probe multiple hash tables to trade compute for recall.
+- ``ivf_topk``: IVF routing — corpus rows are bucketed by nearest
+  centroid, queries probe their ``n_probe`` nearest buckets. The
+  centroids are trained (``centroids="kmeans"``, production) or fixed
+  md5 signs (``centroids="md5"``, verification). This is the
+  10^12-scale shape: the centroid count grows with the corpus.
+
+LSH planes and md5 centroids come from one md5 sign stream
+(``md5_signs``) and are dotted against floor(x·1e6) integer vectors
+(``_int_dots``), so bucketing and routing are pure integer arithmetic
+that DuckDB replays bit for bit.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401  (pandas-UDF type hints resolve here)
+from functools import reduce
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,25 +49,15 @@ def cosine(a, b) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                round_to: int = 6) -> DataFrame:
-    """Exact top-k neighbors per query (excluding self): (query_id,
-    neighbor_id, cos). Deterministic tie-break on neighbor id.
-
-    The cross join is the honest O(nq·nc) baseline; Spark executes it as
-    BroadcastNestedLoopJoin when one side is small. ``round_to`` makes the
-    score stable across engines (float→double accumulation order).
-    """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
-        )
+def _top_k(cand: DataFrame, k: int, round_to: int) -> DataFrame:
+    """The re-rank every plan ends in: exact cosine per candidate
+    ``(query_id, qv, neighbor_id, cv)`` row, then the top ``k`` per query
+    ``(query_id, neighbor_id, cos, rk)`` with a deterministic tie-break
+    on neighbor id. ``round_to`` makes the score stable across engines
+    (float→double accumulation order)."""
+    scored = cand.select(
+        "query_id", "neighbor_id",
+        F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -65,6 +65,20 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         .where(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "cos", "rk")
     )
+
+
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
+                id_col: str = "vec_id", vec_col: str = "embedding",
+                round_to: int = 6) -> DataFrame:
+    """Exact top-k neighbors per query (excluding self): (query_id,
+    neighbor_id, cos, rk).
+
+    The cross join is the honest O(nq·nc) baseline; Spark executes it as
+    BroadcastNestedLoopJoin when one side is small."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    cand = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id"))
+    return _top_k(cand, k, round_to)
 
 
 def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -82,80 +96,75 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95,
     )
 
 
-def rademacher_planes(table: int, n_planes: int, dim: int) -> list[list[int]]:
-    """Deterministic ±1 (Rademacher) hyperplanes derived from md5 — the
-    same cross-engine discipline as the MinHash md5-u64 trick: DuckDB's
-    ``md5()`` reproduces these signs bit-identically, so the whole LSH
-    bucketing is oracle-checkable in SQL. Sign-LSH with Rademacher
-    projections has the same collision-probability guarantee as Gaussian
-    planes (Charikar's SimHash argument needs only symmetric projections).
-    """
+def md5_signs(tag: str, n: int, dim: int) -> list[list[int]]:
+    """``n`` deterministic ±1 (Rademacher) vectors of length ``dim``:
+    component d (1-based) of vector i is +1 iff the first hex digit of
+    md5(``tag|i|d``) is even. DuckDB's ``md5()`` reproduces the signs bit
+    for bit, so the LSH planes (tag ``lsh|<table>``) and the md5 IVF
+    centroids (tag ``ivf``) are oracle-checkable in SQL. Sign-LSH with
+    Rademacher projections has the same collision-probability guarantee
+    as Gaussian planes (Charikar's SimHash argument needs only symmetric
+    projections)."""
     import hashlib
 
     return [
-        [1 if int(hashlib.md5(f"lsh|{table}|{i}|{d}".encode())
+        [1 if int(hashlib.md5(f"{tag}|{i}|{d}".encode())
                   .hexdigest()[0], 16) % 2 == 0 else -1
          for d in range(1, dim + 1)]
-        for i in range(n_planes)
+        for i in range(n)
     ]
 
 
 def _quantize(vec) -> Column:
     """floor(x·1e6) per component as long — float32→double widening and
     floor are exact and identical in Spark and DuckDB, so every dot
-    product against ±1 planes is pure integer arithmetic with NO
+    product against ±1 signs is pure integer arithmetic with NO
     accumulation-order float hazard across engines."""
     return F.transform(vec, lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("long"))
 
 
-def _sign_bucket(qvec, planes: list[list[int]]) -> Column:
-    """Sign-LSH bucket id over a pre-quantized long vector: sign bits of
-    the integer dot <floor(v·1e6), s_i> packed into a long."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        arr = F.array(*[F.lit(int(x)).cast("long") for x in p])
-        dot = F.aggregate(
-            F.zip_with(qvec, arr, lambda x, y: x * y),
+def _int_dots(vec, signs: list[list[int]]) -> list[Column]:
+    """Integer dot <floor(v·1e6), s> of ``vec`` with each sign vector."""
+    return [
+        F.aggregate(
+            F.zip_with(_quantize(vec), F.array(*[F.lit(x).cast("long") for x in s]),
+                       lambda x, y: x * y),
             F.lit(0).cast("long"), lambda acc, v: acc + v,
         )
-        bucket = bucket + F.shiftleft((dot > 0).cast("long"), i)
-    return bucket
+        for s in signs
+    ]
+
+
+def _bucket_join(queries: DataFrame, corpus: DataFrame, id_col: str,
+                 vec_col: str, q_bucket: Column, c_bucket: Column) -> DataFrame:
+    """Candidate pairs that share a bucket, self excluded:
+    ``(query_id, qv, neighbor_id, cv)``."""
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
+                       q_bucket.alias("bucket"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
+                      c_bucket.alias("bucket"))
+    return q.join(c, "bucket").where(F.col("query_id") != F.col("neighbor_id")) \
+            .select("query_id", "qv", "neighbor_id", "cv")
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
              n_planes: int = 8, n_tables: int = 2, dim: int = 64,
              round_to: int = 6) -> DataFrame:
-    """Approximate top-k: candidates share an LSH bucket in ≥1 of
-    ``n_tables`` sign-LSH tables, then exact cosine + rank. Scale path for
-    the brute-force baseline (bucket equi-join instead of cross join).
-    Planes are md5-derived Rademacher (see ``rademacher_planes``) so an
-    independent engine can reproduce the exact candidate sets."""
-    cand = None
+    """Approximate top-k: candidates share a sign-LSH bucket (the sign
+    bits of the ``n_planes`` integer plane dots, packed into a long) in
+    ≥1 of ``n_tables`` tables, then the exact re-rank. Planes are
+    ``md5_signs(f"lsh|{t}", n_planes, dim)``, so an independent engine
+    can reproduce the exact candidate sets."""
+    parts = []
     for t in range(n_tables):
-        planes = rademacher_planes(t, n_planes, dim)
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-            _sign_bucket(_quantize(F.col(vec_col)), planes).alias("bucket"),
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-            _sign_bucket(_quantize(F.col(vec_col)), planes).alias("bucket"),
-        )
-        part = q.join(c, "bucket").where(F.col("query_id") != F.col("neighbor_id")) \
-                .select("query_id", "qv", "neighbor_id", "cv")
-        cand = part if cand is None else cand.unionByName(part)
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.select(
-        "query_id", "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
-    )
+        bucket = F.lit(0).cast("long")
+        for i, dot in enumerate(_int_dots(F.col(vec_col),
+                                          md5_signs(f"lsh|{t}", n_planes, dim))):
+            bucket = bucket + F.shiftleft((dot > 0).cast("long"), i)
+        parts.append(_bucket_join(queries, corpus, id_col, vec_col, bucket, bucket))
+    cand = reduce(DataFrame.unionByName, parts)
+    return _top_k(cand.dropDuplicates(["query_id", "neighbor_id"]), k, round_to)
 
 
 def _sampled_kmeans(corpus: DataFrame, id_col: str, vec_col: str,
@@ -192,145 +201,61 @@ def _sampled_kmeans(corpus: DataFrame, id_col: str, vec_col: str,
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
              n_centroids: int = 16, n_probe: int = 4,
+             centroids: str = "kmeans", dim: int = 64,
              seed: int = 42, round_to: int = 6) -> DataFrame:
-    """IVF-style approximate top-k: corpus rows are bucketed by nearest
-    centroid (ONE vectorized pandas-UDF matmul per batch — no per-row
-    Python), queries probe their ``n_probe`` nearest centroid buckets,
-    then exact cosine + rank within the probed candidates. The bucket
-    equi-join replaces the cross join: per-query work is
-    ~n_probe/n_centroids of the corpus. This is the 10^12-scale routing
-    shape (centroid count grows with corpus size; at crawl scale the
-    assignment UDF and the probe join are the only stages touching every
-    row)."""
-    import pandas as pd
+    """IVF-style approximate top-k: each corpus row gets the ``bucket``
+    of its nearest centroid, each query explodes into its ``n_probe``
+    nearest buckets, and the bucket equi-join feeds the exact re-rank
+    (duplicate pairs dropped first). Per-query work is
+    ~n_probe/n_centroids of the corpus.
 
-    C = _sampled_kmeans(corpus, id_col, vec_col, n_centroids, seed)
-    CT = C.T.copy()
+    ``centroids="kmeans"`` (production): ``n_centroids`` sampled k-means
+    centroids (``_sampled_kmeans``, seeded by ``seed``); assignment and
+    probe order are ONE vectorized pandas-UDF matmul per batch — no
+    per-row Python. At crawl scale these UDFs and the probe join are the
+    only stages touching every row.
 
-    @F.pandas_udf("int")
-    def assign_bucket(vs: pd.Series) -> pd.Series:
-        import numpy as np
+    ``centroids="md5"`` (verification): fixed ±1 centroids
+    ``md5_signs("ivf", n_centroids, dim)``. All share norm √dim, so the
+    argmax of the integer dot equals the argmax of cosine. Each centroid
+    c gets the routing key ``dot·n + (n-1-c)``, one long that sorts by
+    (dot DESC, c ASC): assignment is the max key and the probes are the
+    top ``n_probe`` keys, integer arithmetic DuckDB replays bit for bit.
+    It ignores ``seed``."""
+    if centroids == "md5":
+        n = n_centroids
+        dots = _int_dots(F.col(vec_col), md5_signs("ivf", n, dim))
+        keys = F.array(*[dot * n + (n - 1 - c) for c, dot in enumerate(dots)])
 
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series((X @ CT).argmax(axis=1).astype("int32"))
+        def bucket_of(key) -> Column:
+            # pmod, not %: dot (hence key) can be negative and both
+            # engines' % follows the dividend sign
+            return (F.lit(n - 1) - F.pmod(key, F.lit(n))).cast("int")
 
-    @F.pandas_udf("array<int>")
-    def probe_buckets(vs: pd.Series) -> pd.Series:
-        import numpy as np
+        assign = bucket_of(F.array_max(keys))
+        probes = F.transform(F.slice(F.sort_array(keys, asc=False), 1, n_probe),
+                             bucket_of)
+    else:
+        CT = _sampled_kmeans(corpus, id_col, vec_col, n_centroids, seed).T.copy()
 
-        X = np.array(vs.tolist(), dtype=np.float64)
-        X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(X @ CT), axis=1)[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
+        def sims(vs: pd.Series):
+            import numpy as np
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        assign_bucket(F.col(vec_col)).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(probe_buckets(F.col(vec_col))).alias("bucket"),
-    )
-    scored = (
-        q.join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
-    )
+            X = np.array(vs.tolist(), dtype=np.float64)
+            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            return X @ CT
 
+        @F.pandas_udf("int")
+        def assign_bucket(vs: pd.Series) -> pd.Series:
+            return pd.Series(sims(vs).argmax(axis=1).astype("int32"))
 
-def ivf_centroids(n_centroids: int, dim: int) -> list[list[int]]:
-    """Deterministic ±1 (Rademacher) IVF centroids from the md5 stream
-    ``ivf|c|d`` — the same cross-engine trick as ``rademacher_planes``:
-    DuckDB reproduces the signs bit-identically, so bucket assignment
-    and probe order become pure integer arithmetic an independent SQL
-    engine can replay. All centroids share norm √dim, so argmax of the
-    raw dot product equals argmax of cosine — no normalization needed."""
-    import hashlib
+        @F.pandas_udf("array<int>")
+        def probe_buckets(vs: pd.Series) -> pd.Series:
+            import numpy as np
 
-    return [
-        [1 if int(hashlib.md5(f"ivf|{c}|{d}".encode())
-                  .hexdigest()[0], 16) % 2 == 0 else -1
-         for d in range(1, dim + 1)]
-        for c in range(n_centroids)
-    ]
+            order = np.argsort(-sims(vs), axis=1)[:, :n_probe]
+            return pd.Series([row.astype("int32").tolist() for row in order])
 
-
-def _centroid_keys(qvec, cents: list[list[int]]) -> Column:
-    """Array of routing keys, one per centroid: ``dot·K + (K-1-c)`` over
-    the quantized integer vector — a single long that sorts by (dot
-    DESC, centroid id ASC), making ties deterministic across engines."""
-    n = len(cents)
-    keys = []
-    for c, p in enumerate(cents):
-        arr = F.array(*[F.lit(int(x)).cast("long") for x in p])
-        dot = F.aggregate(
-            F.zip_with(qvec, arr, lambda x, y: x * y),
-            F.lit(0).cast("long"), lambda acc, v: acc + v,
-        )
-        keys.append(dot * n + (n - 1 - c))
-    return F.array(*keys)
-
-
-def ivf_topk_verified(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      n_centroids: int = 8, n_probe: int = 5,
-                      dim: int = 64, round_to: int = 6) -> DataFrame:
-    """IVF top-k with ORACLE-CHECKABLE routing: md5-Rademacher fixed
-    centroids (``ivf_centroids``) replace the trained k-means of
-    ``ivf_topk``, so corpus bucket assignment (argmax key) and the
-    query's ``n_probe`` probe list (top keys) are exact integer
-    arithmetic DuckDB replays bit-identically — the same discipline as
-    ``minhash_blocks(signature="md5")``. Same probe-join shape and
-    exact-cosine re-rank as the production ``ivf_topk``; only the
-    centroid source differs (fixed projections vs trained means)."""
-    cents = ivf_centroids(n_centroids, dim)
-
-    def keyed(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec),
-            _centroid_keys(_quantize(F.col(vec_col)), cents).alias("keys"),
-        )
-
-    n = n_centroids
-
-    def _bucket_of(key) -> Column:
-        # centroid id from a routing key; pmod, not %: dot (hence key)
-        # can be negative and both engines' % follows the dividend sign
-        return (F.lit(n - 1) - F.pmod(key, F.lit(n))).cast("int")
-
-    c = keyed(corpus, "neighbor_id", "cv").select(
-        "neighbor_id", "cv",
-        # assignment = centroid id embedded in the max key
-        _bucket_of(F.array_max("keys")).alias("bucket"),
-    )
-    q = keyed(queries, "query_id", "qv").select(
-        "query_id", "qv",
-        F.explode(
-            F.transform(
-                F.slice(F.sort_array("keys", asc=False), 1, n_probe),
-                _bucket_of,
-            )
-        ).alias("bucket"),
-    )
-    scored = (
-        q.join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
-    )
+        assign, probes = assign_bucket(F.col(vec_col)), probe_buckets(F.col(vec_col))
+    cand = _bucket_join(queries, corpus, id_col, vec_col, F.explode(probes), assign)
+    return _top_k(cand.dropDuplicates(["query_id", "neighbor_id"]), k, round_to)

@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from rlerrorgenerator_spark.checkpoint import path_exists
+from rlerrorgenerator_spark.checkpoint import delete_path, path_exists
 from rlerrorgenerator_spark.linkage.incremental import link_increment
 
 _EMPTY_CLUSTERS = "id string, cluster_id string"
@@ -44,11 +44,12 @@ def fold_batch(clean: DataFrame, batch: DataFrame, clusters_dir: str,
                              exact_shingles=exact_shingles)
     # write-then-swap: the updated table is materialized to a side path
     # first (reading and overwriting the same parquet path in one job is
-    # undefined), then rewritten to the canonical path. On Iceberg this
-    # is a single transactional overwrite.
+    # undefined), then rewritten to the canonical path and deleted. On
+    # Iceberg this is a single transactional overwrite.
     tmp = clusters_dir.rstrip("/") + "__next"
     updated.write.mode("overwrite").parquet(tmp)
     spark.read.parquet(tmp).write.mode("overwrite").parquet(clusters_dir)
+    delete_path(spark, tmp)
 
 
 def stream_link_increment(clean: DataFrame, dirty_stream: DataFrame,

@@ -210,20 +210,20 @@ def test_ivf_topk_verified_routing(spark):
     routing can only drop candidates, never change scoring."""
     import numpy as np
 
-    from rlerrorgenerator_spark.plans.ann import cosine_topk, ivf_topk_verified
+    from rlerrorgenerator_spark.plans.ann import cosine_topk, ivf_topk
 
     rng = np.random.default_rng(7)
     rows = [(i, rng.standard_normal(64).tolist()) for i in range(200)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     q = df.where(F.col("vec_id") < 30)
     exact = sorted(map(tuple, cosine_topk(q, df, k=3).collect()))
-    full_probe = sorted(map(tuple, ivf_topk_verified(
-        q, df, k=3, n_centroids=8, n_probe=8).collect()))
+    full_probe = sorted(map(tuple, ivf_topk(
+        q, df, k=3, centroids="md5", n_centroids=8, n_probe=8).collect()))
     assert full_probe == exact
-    a = sorted(map(tuple, ivf_topk_verified(
-        q, df, k=3, n_centroids=8, n_probe=5).collect()))
-    b = sorted(map(tuple, ivf_topk_verified(
-        q.repartition(7), df.repartition(13), k=3,
+    a = sorted(map(tuple, ivf_topk(
+        q, df, k=3, centroids="md5", n_centroids=8, n_probe=5).collect()))
+    b = sorted(map(tuple, ivf_topk(
+        q.repartition(7), df.repartition(13), k=3, centroids="md5",
         n_centroids=8, n_probe=5).collect()))
     assert a == b
 

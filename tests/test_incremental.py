@@ -122,6 +122,8 @@ def test_fold_batch_resumes_uri_clusters_dir(spark, tmp_path):
         fold_batch(clean, b2, clusters_dir)
         tables.append(_labels(spark.read.parquet(clusters_dir)))
     assert tables[0] == tables[1]
+    # the write-then-swap side copy is gone after each fold
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["plain", "uri"]
 
 
 def test_increment_bridges_prior_clusters(spark):

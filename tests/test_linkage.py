@@ -150,32 +150,11 @@ def test_resume_from_checkpoint(spark, tmp_path):
     assert s1 == s2
 
 
-def test_checkpoint_format_env_gate(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CKPT_FORMAT selects the checkpoint storage format
-    (north rule: Iceberg tables on a catalog-configured deployment; the
-    sandbox has no Iceberg runtime jar so the format RESOLUTION is what
-    is testable here — the write API itself is format-agnostic)."""
-    from rlerrorgenerator_spark.checkpoint import CheckpointManager
-
-    monkeypatch.delenv("SPARK_GRAFT_CKPT_FORMAT", raising=False)
-    assert CheckpointManager(spark).fmt == "parquet"
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_FORMAT", "iceberg")
-    mgr = CheckpointManager(spark, str(tmp_path / "ice"))
-    assert mgr.fmt == "iceberg"
-    # explicit fmt always wins over the env gate
-    assert CheckpointManager(spark, fmt="parquet").fmt == "parquet"
-    # iceberg existence = committed metadata, not a parquet _SUCCESS flag
-    assert not mgr.exists("stage1")
-    (tmp_path / "ice" / "stage1" / "metadata").mkdir(parents=True)
-    assert mgr.exists("stage1")
-
-
-def test_checkpoint_resume_with_uri_base_dir(spark, tmp_path, monkeypatch):
+def test_checkpoint_resume_with_uri_base_dir(spark, tmp_path):
     """A ``file://`` base_dir resumes like a plain path: the committed
     stage is reused, not rewritten by a second stage() call."""
     from rlerrorgenerator_spark.checkpoint import CheckpointManager
 
-    monkeypatch.delenv("SPARK_GRAFT_CKPT_FORMAT", raising=False)
     mgr = CheckpointManager(spark, (tmp_path / "ck").as_uri())
     assert not mgr.exists("s")
     assert mgr.stage(spark.range(3), "s").count() == 3

@@ -22,15 +22,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
+    from rlerrorgenerator_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("check_oracle_er")
-        .getOrCreate()
-    )
+    spark = get_spark("check_oracle_er")
     con = duckdb.connect()
     for t in ("documents", "customer", "orders", "lineitem", "events",
               "region", "nation", "supplier", "part", "embeddings"):
