@@ -711,8 +711,9 @@ def er_scoring_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_resolution_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best-links 'odds' resolution + 1-to-1 filter, ORACLE-CHECKED
     (VERDICT r3 fix #4): the REAL scored pairs of the e2e fixture
-    (build_candidates exact ∪ SNM → score_pairs exact-shingle mode, the
-    same bit-identical per-pair probabilities er_pipeline_e2e certifies)
+    (build_candidates exact ∪ SNM ∪ MinHash in md5 mode → score_pairs
+    exact-shingle mode, the same bit-identical per-pair probabilities
+    er_pipeline_e2e certifies)
     fed through linkage/resolve.py::find_best_links — the reference's
     windowed odds logic (`benchmarking/utils.R:426-470`: accept a left
     id's top pair only when its probability margin over the runner-up
@@ -724,7 +725,7 @@ def er_resolution_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlerrorgenerator_spark.linkage.resolve import find_best_links
 
     clean, dirty = _blocking_fixture(spark, sf_dir)
-    candidates = build_candidates(clean, dirty, use_minhash=False)
+    candidates = build_candidates(clean, dirty, signature="md5")
     scored = score_pairs(candidates, clean, dirty, exact_shingles=True)
     links = find_best_links(scored, odds=0.4, threshold=0.5)
     return links.select(
@@ -739,8 +740,10 @@ def er_model_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     linkage/models.py (impute-0 → assemble → z-scale → classifier;
     distributed training, no driver-side collect) — logistic regression
     (probability-emitting linear default), RandomForest (caret RF) and
-    MultilayerPerceptron (the keras-NN slot) — on the e2e fixture's
-    metric_* features with a DETERMINISTIC md5 train/holdout split.
+    MultilayerPerceptron (the keras-NN slot) — on the metric_* features
+    (capped distances, as in production) of the e2e fixture's
+    verification-mode program (md5 MinHash blocking, exact shingles)
+    with a DETERMINISTIC md5 train/holdout split.
     Each row reports holdout F1 + rank-statistic AUC (utils.R:1005-1047
     computes AUC via ROCR; metrics.auc_metrics is the same quantity)
     scored at the reference's 0.5 rule (`utils.R:362-364`) with a
@@ -758,7 +761,7 @@ def er_model_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlerrorgenerator_spark.rng import md5_mod
 
     clean, dirty = _blocking_fixture(spark, sf_dir)
-    candidates = build_candidates(clean, dirty, use_minhash=False)
+    candidates = build_candidates(clean, dirty, signature="md5")
     scored = score_pairs(candidates, clean, dirty, exact_shingles=True)
     # drop the deterministic scorer's outputs: the MLlib pipeline emits
     # its own prediction/match_prob and transformSchema rejects clashes
@@ -898,14 +901,17 @@ def er_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def er_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END pipeline oracle: the REAL operators — build_candidates
-    (exact ∪ SNM; MinHash off, its xxhash signatures aren't
-    SQL-portable), the REAL score_pairs (exact-shingle verification
-    mode: full 64-bit shingle sets → exact Jaccard), the REAL
+    (exact ∪ SNM ∪ MinHash, the production program; MinHash runs its md5
+    signature mode, which SQL reproduces), the REAL score_pairs
+    (exact-shingle verification mode: full 64-bit shingle sets → exact
+    Jaccard; the same capped distances as production), the REAL
     label_pairs + pairwise_metrics — over the md5 fixture, against a
-    DuckDB re-derivation of the ENTIRE flow: blocking joins, every
-    scoring feature (Levenshtein forms, prefix/swap similarities, exact
-    word-4-shingle Jaccard, lang/ts evidence), the weighted gated score,
-    the 0.5 decision, lineage truth and the confusion-matrix metrics.
+    DuckDB re-derivation of the ENTIRE flow: blocking joins and MinHash
+    banding, every scoring feature (Levenshtein forms, prefix/swap
+    similarities, exact word-4-shingle Jaccard, lang/ts evidence), the
+    weighted gated score, the 0.5 decision, lineage truth and the
+    confusion-matrix metrics. The oracle's distances are uncapped; the
+    caps sit above every score gate, so the probabilities agree.
     A green row certifies the flagship pipeline's decisions pair-for-pair
     in an independent engine — not just its components.
 
@@ -924,7 +930,7 @@ def er_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     clean, dirty = _blocking_fixture(spark, sf_dir)
-    candidates = build_candidates(clean, dirty, use_minhash=False)
+    candidates = build_candidates(clean, dirty, signature="md5")
     scored = score_pairs(candidates, clean, dirty, exact_shingles=True)
     labeled = label_pairs(scored, dirty).localCheckpoint(eager=False)
     m = pairwise_metrics(labeled)
@@ -951,7 +957,8 @@ def er_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's dirty rows arrive as a file stream (2 parquet drops, one
     micro-batch each via maxFilesPerTrigger=1), each micro-batch folds
     through the REAL blocking + scoring + seeded-CC pipeline
-    (streaming/linkage_stream.py), and the final clusters table is
+    (streaming/linkage_stream.py, ``verify=True``: md5 MinHash
+    signatures and exact shingles), and the final clusters table is
     compared against a DuckDB MONOLITHIC re-derivation: the full e2e
     score (er_pipeline_e2e's SQL), accepted pairs at p > 0.5, recursive-
     CTE components, min-id labels. Green ⟹ the streaming fold equals
@@ -976,8 +983,7 @@ def er_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(in_dir)
     )
     q = stream_link_increment(clean, stream, clusters_dir,
-                              os.path.join(base, "ckpt"),
-                              use_minhash=False, exact_shingles=True)
+                              os.path.join(base, "ckpt"), verify=True)
     q.awaitTermination(600)
     return spark.read.parquet(clusters_dir).orderBy("id")
 
@@ -1195,17 +1201,19 @@ def _minhash_sql(n_hashes: int = 12, bands: int = 6) -> str:
 """
 
 
-def _minhash_block_sql(n_hashes: int = 12, bands: int = 6,
-                       max_block_size: int = 200) -> str:
-    """Cross-side (clean × dirty) variant of ``_minhash_sql`` over the
-    md5 blocking fixture — re-derives ``minhash_blocks(signature="md5")``:
-    signatures per side, band keys, the (band, bkey) hot-bucket cap, and
-    the agreeing-band counts per candidate pair."""
+def _minhash_sides_sql(n_hashes: int, bands: int, shingle_k: int,
+                       max_block_size: int) -> str:
+    """CTEs ``cap_a`` (clean, rid = url) and ``cap_b`` (dirty, rid = rid)
+    of ``(rid, band, bkey)`` over the md5 blocking fixture — the sides of
+    ``minhash_blocks(signature="md5")``: word ``shingle_k``-shingles,
+    md5 signatures, ``|``-joined band keys and the per-side (band, bkey)
+    hot-bucket cap. A pair shares a surviving (band, bkey) on both."""
     mins = ",\n      ".join(
         "min(" + _MD5_U64_SQL.format(x=f"'mh{i}|' || g") + f") AS mh_{i}"
         for i in range(n_hashes)
     )
     rows = n_hashes // bands
+    k1 = shingle_k - 1
 
     def side(tbl: str, rid_expr: str, s: str) -> str:
         band_sel = "\n    UNION ALL ".join(
@@ -1218,8 +1226,8 @@ def _minhash_block_sql(n_hashes: int = 12, bands: int = 6,
   toks_{s} AS (SELECT {rid_expr} AS rid, string_split(text, ' ') AS w FROM {tbl}),
   grams_{s} AS (
     SELECT rid, unnest(list_distinct(list_transform(
-             generate_series(1, greatest(len(w) - 4, 1)),
-             i -> array_to_string(w[i:i+4], ' ')))) AS g
+             generate_series(1, greatest(len(w) - {k1}, 1)),
+             i -> array_to_string(w[i:i+{k1}], ' ')))) AS g
     FROM toks_{s}
   ),
   sig_{s} AS (
@@ -1239,10 +1247,18 @@ def _minhash_block_sql(n_hashes: int = 12, bands: int = 6,
     )
   )"""
 
+    return (side("clean", "url", "a").strip() + ",\n  "
+            + side("dirty", "rid", "b").strip())
+
+
+def _minhash_block_sql(n_hashes: int, bands: int, shingle_k: int,
+                       max_block_size: int) -> str:
+    """Cross-side (clean × dirty) variant of ``_minhash_sql`` over the
+    md5 blocking fixture — re-derives ``minhash_blocks(signature="md5")``:
+    the agreeing-band counts per candidate pair."""
     return f"""
   WITH {_BLOCKING_FIXTURE_SQL},
-  {side('clean', 'url', 'a').strip()},
-  {side('dirty', 'rid', 'b').strip()}
+  {_minhash_sides_sql(n_hashes, bands, shingle_k, max_block_size)}
   SELECT a.rid AS rid_a, b.rid AS rid_b, count(*) AS n_bands
   FROM cap_a a JOIN cap_b b ON a.band = b.band AND a.bkey = b.bkey
   GROUP BY 1, 2
@@ -1816,24 +1832,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "er_blocking_exact": rf"""
             WITH {_BLOCKING_FIXTURE_SQL},
-            a1 AS (SELECT * FROM (SELECT url AS rid_a, {_NORM_URL_SQL.format(u="url")} AS bkey FROM clean)
-                   WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            b1 AS (SELECT * FROM (SELECT rid AS rid_b, {_NORM_URL_SQL.format(u="url")} AS bkey FROM dirty)
-                   WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            a1c AS (SELECT * FROM a1 WHERE bkey NOT IN
-                      (SELECT bkey FROM a1 GROUP BY bkey HAVING count(*) > 100)),
-            b1c AS (SELECT * FROM b1 WHERE bkey NOT IN
-                      (SELECT bkey FROM b1 GROUP BY bkey HAVING count(*) > 100)),
-            a2 AS (SELECT * FROM (SELECT url AS rid_a,
-                          substring(regexp_replace(substring(text, 1, 1000), '\s+', ' ', 'g'), 1, 24) AS bkey
-                   FROM clean) WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            b2 AS (SELECT * FROM (SELECT rid AS rid_b,
-                          substring(regexp_replace(substring(text, 1, 1000), '\s+', ' ', 'g'), 1, 24) AS bkey
-                   FROM dirty) WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            a2c AS (SELECT * FROM a2 WHERE bkey NOT IN
-                      (SELECT bkey FROM a2 GROUP BY bkey HAVING count(*) > 100)),
-            b2c AS (SELECT * FROM b2 WHERE bkey NOT IN
-                      (SELECT bkey FROM b2 GROUP BY bkey HAVING count(*) > 100)),
+            {_exact_sides_sql(100)},
             p AS (
               SELECT rid_a, rid_b, 'exact:url_norm' AS block
               FROM a1c JOIN b1c USING (bkey)
@@ -1844,13 +1843,14 @@ def oracle_sql() -> dict[str, str]:
             SELECT rid_a, rid_b, min(block) AS block
             FROM p GROUP BY rid_a, rid_b ORDER BY rid_a, rid_b
         """,
-        # the flagship pipeline, end-to-end: blocking (exact ∪ SNM) →
-        # every scoring feature → gated weighted score → 0.5 decision →
-        # lineage truth → confusion-matrix metrics, all re-derived in
-        # DuckDB. exact-shingle mode makes the Spark Jaccard equal the
-        # SQL string-shingle Jaccard; every other feature is integer or
-        # fixed-order double arithmetic, so per-pair probabilities are
-        # bit-identical and the decision set matches pair-for-pair.
+        # the flagship pipeline, end-to-end: blocking (exact ∪ SNM ∪
+        # md5 MinHash) → every scoring feature → gated weighted score →
+        # 0.5 decision → lineage truth → confusion-matrix metrics, all
+        # re-derived in DuckDB. exact-shingle mode makes the Spark
+        # Jaccard equal the SQL string-shingle Jaccard; every other
+        # feature is integer or fixed-order double arithmetic, so
+        # per-pair probabilities are bit-identical and the decision set
+        # matches pair-for-pair.
         "er_pipeline_e2e": rf"""
             WITH {_e2e_prob_sql()},
             agg AS (
@@ -1970,24 +1970,7 @@ def oracle_sql() -> dict[str, str]:
         # while the Spark query folds batch 2 into batch 1's clusters.
         "er_incremental_clusters": rf"""
             WITH RECURSIVE {_BLOCKING_FIXTURE_SQL},
-            a1 AS (SELECT * FROM (SELECT url AS rid_a, {_NORM_URL_SQL.format(u="url")} AS bkey FROM clean)
-                   WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            b1 AS (SELECT * FROM (SELECT rid AS rid_b, {_NORM_URL_SQL.format(u="url")} AS bkey FROM dirty)
-                   WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            a1c AS (SELECT * FROM a1 WHERE bkey NOT IN
-                      (SELECT bkey FROM a1 GROUP BY bkey HAVING count(*) > 100)),
-            b1c AS (SELECT * FROM b1 WHERE bkey NOT IN
-                      (SELECT bkey FROM b1 GROUP BY bkey HAVING count(*) > 100)),
-            a2 AS (SELECT * FROM (SELECT url AS rid_a,
-                          substring(regexp_replace(substring(text, 1, 1000), '\s+', ' ', 'g'), 1, 24) AS bkey
-                   FROM clean) WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            b2 AS (SELECT * FROM (SELECT rid AS rid_b,
-                          substring(regexp_replace(substring(text, 1, 1000), '\s+', ' ', 'g'), 1, 24) AS bkey
-                   FROM dirty) WHERE bkey IS NOT NULL AND length(bkey) > 0),
-            a2c AS (SELECT * FROM a2 WHERE bkey NOT IN
-                      (SELECT bkey FROM a2 GROUP BY bkey HAVING count(*) > 100)),
-            b2c AS (SELECT * FROM b2 WHERE bkey NOT IN
-                      (SELECT bkey FROM b2 GROUP BY bkey HAVING count(*) > 100)),
+            {_exact_sides_sql(100)},
             p AS (
               SELECT DISTINCT rid_a, rid_b FROM (
                 SELECT rid_a, rid_b FROM a1c JOIN b1c USING (bkey)
@@ -2029,50 +2012,31 @@ def oracle_sql() -> dict[str, str]:
             FROM p ORDER BY rid_a, rid_b
         """,
         "er_person_features": _person_features_oracle_sql(),
-        "er_blocking_minhash": _minhash_block_sql(12, 6, 200),
+        "er_blocking_minhash": _minhash_block_sql(12, 6, 5, 200),
         "er_blocking_snm": rf"""
             WITH {_BLOCKING_FIXTURE_SQL},
-            u AS (
-              SELECT url AS rid, {_NORM_URL_SQL.format(u="url")} AS skey,
-                     'a' AS side
-              FROM clean
-              UNION ALL
-              SELECT rid, {_NORM_URL_SQL.format(u="url")} AS skey, 'b' AS side
-              FROM dirty
-            ),
-            r AS (SELECT rid, side,
-                         row_number() OVER (ORDER BY skey, side, rid) AS rn,
-                         CAST(floor(row_number() OVER (ORDER BY skey, side, rid)
-                                    / 3.0) AS BIGINT) AS band
-                  FROM u)
-            SELECT DISTINCT la.rid AS rid_a, rb.rid AS rid_b,
-                   'snm' AS block
-            FROM (SELECT * FROM r WHERE side = 'a') la
-            JOIN (SELECT * FROM r WHERE side = 'b') rb
-              ON rb.band BETWEEN la.band - 1 AND la.band + 1
-             AND abs(la.rn - rb.rn) <= 3
+            {_snm_pairs_sql()}
+            SELECT rid_a, rid_b, 'snm' AS block FROM snm
             ORDER BY rid_a, rid_b
         """,
         **_er_oracle_sql_entries(),
     }
 
 
-# The full pipeline re-derivation up to per-pair (rid_a, rid_b, p,
-# label): fixture → blocking (exact url_norm + text_prefix with hot-key
-# caps, ∪ SNM banded rank join) → every scoring feature → gated weighted
-# score. Shared by the e2e metrics oracle and the streaming-fold oracle.
-# NOTE: assembled lazily inside oracle_sql() via rf-strings, so ordering
-# of these module constants only matters relative to first call.
-def _e2e_prob_sql() -> str:
-    return rf"""{_BLOCKING_FIXTURE_SQL},
-            a1 AS (SELECT * FROM (SELECT url AS rid_a, {_NORM_URL_SQL.format(u="url")} AS bkey FROM clean)
+def _exact_sides_sql(max_block_size: int) -> str:
+    """CTEs ``a1c``/``b1c`` (url_norm) and ``a2c``/``b2c`` (text_prefix)
+    of ``(rid_a | rid_b, bkey)`` over the md5 blocking fixture — the
+    sides of ``exact_blocks``, each key dropped where its per-side group
+    exceeds ``max_block_size`` rows (100 is ``exact_blocks``' default;
+    ``build_candidates`` passes ``MAX_BLOCK_SIZE``)."""
+    return rf"""a1 AS (SELECT * FROM (SELECT url AS rid_a, {_NORM_URL_SQL.format(u="url")} AS bkey FROM clean)
                    WHERE bkey IS NOT NULL AND length(bkey) > 0),
             b1 AS (SELECT * FROM (SELECT rid AS rid_b, {_NORM_URL_SQL.format(u="url")} AS bkey FROM dirty)
                    WHERE bkey IS NOT NULL AND length(bkey) > 0),
             a1c AS (SELECT * FROM a1 WHERE bkey NOT IN
-                      (SELECT bkey FROM a1 GROUP BY bkey HAVING count(*) > 100)),
+                      (SELECT bkey FROM a1 GROUP BY bkey HAVING count(*) > {max_block_size})),
             b1c AS (SELECT * FROM b1 WHERE bkey NOT IN
-                      (SELECT bkey FROM b1 GROUP BY bkey HAVING count(*) > 100)),
+                      (SELECT bkey FROM b1 GROUP BY bkey HAVING count(*) > {max_block_size})),
             a2 AS (SELECT * FROM (SELECT url AS rid_a,
                           substring(regexp_replace(substring(text, 1, 1000), '\s+', ' ', 'g'), 1, 24) AS bkey
                    FROM clean) WHERE bkey IS NOT NULL AND length(bkey) > 0),
@@ -2080,10 +2044,17 @@ def _e2e_prob_sql() -> str:
                           substring(regexp_replace(substring(text, 1, 1000), '\s+', ' ', 'g'), 1, 24) AS bkey
                    FROM dirty) WHERE bkey IS NOT NULL AND length(bkey) > 0),
             a2c AS (SELECT * FROM a2 WHERE bkey NOT IN
-                      (SELECT bkey FROM a2 GROUP BY bkey HAVING count(*) > 100)),
+                      (SELECT bkey FROM a2 GROUP BY bkey HAVING count(*) > {max_block_size})),
             b2c AS (SELECT * FROM b2 WHERE bkey NOT IN
-                      (SELECT bkey FROM b2 GROUP BY bkey HAVING count(*) > 100)),
-            u AS (
+                      (SELECT bkey FROM b2 GROUP BY bkey HAVING count(*) > {max_block_size}))"""
+
+
+def _snm_pairs_sql() -> str:
+    """CTE ``snm`` of distinct ``(rid_a, rid_b)`` over the md5 blocking
+    fixture — ``sorted_neighborhood_blocks(window=3)``: one global rank
+    over the normalized url (ties broken by side, then rid) and a
+    banded join of clean and dirty rows at most 3 ranks apart."""
+    return rf"""u AS (
               SELECT url AS rid, {_NORM_URL_SQL.format(u="url")} AS skey, 'a' AS side FROM clean
               UNION ALL
               SELECT rid, {_NORM_URL_SQL.format(u="url")} AS skey, 'b' AS side FROM dirty
@@ -2092,17 +2063,42 @@ def _e2e_prob_sql() -> str:
                          row_number() OVER (ORDER BY skey, side, rid) AS rn,
                          CAST(floor(row_number() OVER (ORDER BY skey, side, rid) / 3.0) AS BIGINT) AS band
                   FROM u),
+            snm AS (
+              SELECT DISTINCT la.rid AS rid_a, rb.rid AS rid_b
+              FROM (SELECT * FROM r WHERE side = 'a') la
+              JOIN (SELECT * FROM r WHERE side = 'b') rb
+                ON rb.band BETWEEN la.band - 1 AND la.band + 1
+               AND abs(la.rn - rb.rn) <= 3
+            )"""
+
+
+# The full pipeline re-derivation up to per-pair (rid_a, rid_b, p,
+# label): fixture → blocking (exact url_norm + text_prefix with hot-key
+# caps, ∪ SNM banded rank join, ∪ md5 MinHash-LSH) → every scoring
+# feature → gated weighted score. Shared by the e2e metrics,
+# resolution-links and streaming-fold oracles.
+# NOTE: assembled lazily inside oracle_sql() via rf-strings, so ordering
+# of these module constants only matters relative to first call.
+def _e2e_prob_sql() -> str:
+    from rlerrorgenerator_spark.linkage.blocking import MAX_BLOCK_SIZE
+
+    return rf"""{_BLOCKING_FIXTURE_SQL},
+            {_exact_sides_sql(MAX_BLOCK_SIZE)},
+            {_snm_pairs_sql()},
+            -- MinHash-LSH at minhash_blocks' defaults (16 hashes, 8
+            -- bands, word 4-shingles), as build_candidates runs it
+            {_minhash_sides_sql(16, 8, 4, MAX_BLOCK_SIZE)},
             cand AS (
               SELECT DISTINCT rid_a, rid_b FROM (
                 SELECT rid_a, rid_b FROM a1c JOIN b1c USING (bkey)
                 UNION ALL
                 SELECT rid_a, rid_b FROM a2c JOIN b2c USING (bkey)
                 UNION ALL
-                SELECT la.rid AS rid_a, rb.rid AS rid_b
-                FROM (SELECT * FROM r WHERE side = 'a') la
-                JOIN (SELECT * FROM r WHERE side = 'b') rb
-                  ON rb.band BETWEEN la.band - 1 AND la.band + 1
-                 AND abs(la.rn - rb.rn) <= 3
+                SELECT rid_a, rid_b FROM snm
+                UNION ALL
+                SELECT ma.rid AS rid_a, mb.rid AS rid_b
+                FROM cap_a ma JOIN cap_b mb
+                  ON ma.band = mb.band AND ma.bkey = mb.bkey
               )
             ),
             cg AS (SELECT url AS id, unnest(list_distinct(list_transform(

@@ -89,14 +89,13 @@ def _warmup_linkage(spark) -> None:
     res.clusters.count()
 
 
-def _run_er_pipeline(spark, sf_dir: str, n_rows: int = 0,
+def _run_er_pipeline(spark, sf_dir: str,
                      pages_path: str | None = None) -> dict:
     """One full linkage run; returns timings + candidate-pair count.
 
-    ``n_rows=0`` → pages derived from the sf_dir documents table (the
-    per-round bench, injection included in the timed region);
-    ``n_rows>0`` → synthesized pages of that size with Bernoulli
-    sampling; ``pages_path`` → a pre-materialized fixture dir holding
+    Without ``pages_path`` → pages derived from the sf_dir documents
+    table (the per-round bench, injection included in the timed region);
+    ``pages_path`` → a pre-materialized fixture dir holding
     BOTH the clean pages table and the injected dirty table (the scaling
     workload). Rationale for the last mode: at 10^12 documents both
     tables EXIST as Iceberg artifacts — the clean crawl is the input and
@@ -116,17 +115,14 @@ def _run_er_pipeline(spark, sf_dir: str, n_rows: int = 0,
         pages, exact = spark.read.parquet(
             os.path.join(pages_path, "pages")), False
         dirty_pages = spark.read.parquet(os.path.join(pages_path, "dirty"))
-    elif n_rows:
-        pages, exact = None, False
     else:
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         pages, exact = pages_from_documents(docs), True
     _warmup(spark)
     _warmup_linkage(spark)
     t0 = time.time()
-    res = run_linkage(spark, n_rows=n_rows or 2000, pages=pages, seed=42,
-                      compute_clusters=True, exact=exact,
-                      body_tokens=(200, 600), dirty_pages=dirty_pages)
+    res = run_linkage(spark, pages=pages, seed=42, compute_clusters=True,
+                      exact=exact, dirty_pages=dirty_pages)
     n_candidates = res.candidates.count()
     m = res.metrics.collect()[0]
     res.clusters.count()
@@ -141,8 +137,8 @@ def _run_er_pipeline(spark, sf_dir: str, n_rows: int = 0,
 
 _SCALING_SNIPPET = r"""
 import json, sys, time
-sf_dir, cores, n_rows, sp = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4])
-pages_path = sys.argv[5] if len(sys.argv) > 5 and sys.argv[5] else None
+sf_dir, cores, sp = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+pages_path = sys.argv[4] if len(sys.argv) > 4 and sys.argv[4] else None
 import os
 os.environ["SPARK_GRAFT_CPUS"] = str(cores)
 from rlerrorgenerator_spark.session import get_spark
@@ -154,7 +150,7 @@ spark = get_spark(app_name=f"bench-scale-{cores}", cores=cores,
                   shuffle_partitions=sp)
 spark.sparkContext.setLogLevel("ERROR")
 from bench import _run_er_pipeline
-out = _run_er_pipeline(spark, sf_dir, n_rows=n_rows, pages_path=pages_path)
+out = _run_er_pipeline(spark, sf_dir, pages_path=pages_path)
 print("BENCHJSON:" + json.dumps(out))
 """
 
@@ -225,8 +221,7 @@ def _ensure_scaling_input(n_rows: int, seed: int = 42) -> str:
     return base
 
 
-def _run_er_subprocess(sf_dir: str, cores: int, n_rows: int,
-                       shuffle_partitions: int,
+def _run_er_subprocess(sf_dir: str, cores: int, shuffle_partitions: int,
                        bind_cpus: str | None = None,
                        pages_path: str | None = None,
                        timeout: int = 3600) -> dict:
@@ -236,7 +231,7 @@ def _run_er_subprocess(sf_dir: str, cores: int, n_rows: int,
 
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
     cmd = [sys.executable, "-c", _SCALING_SNIPPET, sf_dir, str(cores),
-           str(n_rows), str(shuffle_partitions), pages_path or ""]
+           str(shuffle_partitions), pages_path or ""]
     if bind_cpus:
         # CPU-affinity-bound leg: confine the whole "cluster" (JVM task
         # threads, GC, shuffle IO, Python UDF workers) to exactly its
@@ -529,14 +524,12 @@ def _run_scaling(sf_dir: str, t_start: float, deadline: float,
             return False
         try:
             t = time.time()
-            lo = _run_er_subprocess(sf_dir, n_small, scaling_rows, sp,
-                                    lo_bind, pages_path,
+            lo = _run_er_subprocess(sf_dir, n_small, sp, lo_bind, pages_path,
                                     timeout=int(max(120, _remaining())))
             lo_secs.append(time.time() - t)
             los.append(round(lo["pairs_per_sec"], 1))
             t = time.time()
-            hi = _run_er_subprocess(sf_dir, n_big, scaling_rows, sp,
-                                    hi_bind, pages_path,
+            hi = _run_er_subprocess(sf_dir, n_big, sp, hi_bind, pages_path,
                                     timeout=int(max(120, _remaining())))
             hi_secs.append(time.time() - t)
             his.append(round(hi["pairs_per_sec"], 1))

@@ -13,8 +13,9 @@ generalize to three strategies over the pages domain, unioned + deduped:
    kernel per side (``functions/arrowhash.py``, a narrow map), band keys
    and the bucket join as built-in expressions; deterministic per row.
    ``signature="md5"`` runs the same plan on md5 signatures, which the
-   cross-engine oracle reproduces; the dedup plans reuse
-   :func:`minhash_signature` and :func:`band_keys` in that mode.
+   cross-engine oracles reproduce (``build_candidates`` passes it
+   through); the dedup plans reuse :func:`minhash_signature` and
+   :func:`band_keys` in that mode.
 
 Skew: pathological blocks (empty/boilerplate text → one giant LSH bucket)
 are capped at ``max_block_size`` before the pair join — the explicit
@@ -39,6 +40,10 @@ from pyspark.sql.types import LongType, StructField, StructType
 from rlerrorgenerator_spark.functions.arrowhash import minhash_signature_batches
 from rlerrorgenerator_spark.functions.textops import exploded_shingles
 from rlerrorgenerator_spark.rng import md5_u64_str
+
+# rows per block key above which build_candidates drops the key (exact
+# and MinHash strategies); the e2e oracle SQL interpolates the same value
+MAX_BLOCK_SIZE = 200
 
 
 def normalize_url(col) -> Column:
@@ -259,7 +264,7 @@ def band_keys(sig: DataFrame, rid_alias: str, bands: int,
 
 def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
                    n_hashes: int = 16, bands: int = 8, shingle_k: int = 4,
-                   seed: int = 1, max_block_size: int = 200,
+                   seed: int = 1, max_block_size: int = MAX_BLOCK_SIZE,
                    signature: str = "xxhash") -> DataFrame:
     """MinHash-LSH banding: rows agreeing on all rows of any band become
     candidates ``(rid_a, rid_b, n_bands)``. bands × rows_per_band =
@@ -283,19 +288,23 @@ def minhash_blocks(clean: DataFrame, dirty: DataFrame, text_col: str = "text",
 
 
 def build_candidates(clean: DataFrame, dirty: DataFrame,
-                     use_minhash: bool = True) -> DataFrame:
-    """Union of the exact (capped at 200 rows per key), SNM and, with
-    ``use_minhash``, MinHash (capped at 200) strategies, deduped to
-    (rid_a, rid_b).
+                     signature: str = "xxhash") -> DataFrame:
+    """Union of the exact, SNM and MinHash strategies, deduped to
+    (rid_a, rid_b); the exact and MinHash strategies are capped at
+    ``MAX_BLOCK_SIZE`` rows per key. ``signature="md5"`` is the
+    verification mode the cross-engine oracles run: the same plan with
+    md5 MinHash signatures (see :func:`minhash_blocks`).
 
     ``block`` keeps the first strategy that produced the pair (for
     diagnostics); dedup is a groupBy on the pair key — map-side partial
     aggregation keeps the shuffle small.
     """
-    out = exact_blocks(clean, dirty, max_block_size=200).unionByName(
-        sorted_neighborhood_blocks(clean, dirty))
-    if use_minhash:
-        out = out.unionByName(
-            minhash_blocks(clean, dirty)
-            .select("rid_a", "rid_b", F.lit("minhash").alias("block")))
+    minhash = minhash_blocks(clean, dirty, max_block_size=MAX_BLOCK_SIZE,
+                             signature=signature)
+    out = (
+        exact_blocks(clean, dirty, max_block_size=MAX_BLOCK_SIZE)
+        .unionByName(sorted_neighborhood_blocks(clean, dirty))
+        .unionByName(minhash.select("rid_a", "rid_b",
+                                    F.lit("minhash").alias("block")))
+    )
     return out.groupBy("rid_a", "rid_b").agg(F.min("block").alias("block"))

@@ -120,8 +120,10 @@ def attach_pair_attrs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     return candidates.join(a, "rid_a").join(b, "rid_b")
 
 
-def add_features(pairs: DataFrame, exact_shingles: bool = False) -> DataFrame:
-    """Compute the metric_* columns on a widened pair table."""
+def add_features(pairs: DataFrame) -> DataFrame:
+    """Compute the metric_* columns on a widened pair table. The three
+    edit distances are capped at their score gates (see
+    :func:`score_pairs`)."""
     un_a, un_b = normalize_url("url_a"), normalize_url("url_b")
     tp_a, tp_b = F.col("tp_a"), F.col("tp_b")
     # word-SHINGLE Jaccard, not unigram: corpora with small vocabularies
@@ -147,31 +149,22 @@ def add_features(pairs: DataFrame, exact_shingles: bool = False) -> DataFrame:
     # hash-set build would be pure waste (OpenHashSet get/rehash measured
     # ~4% of the 4-core leg's JFR samples)
     union = (F.size(eff_a) + F.size(eff_b)).cast("double") - inter
-    if not exact_shingles:
-        # Bounded Levenshtein (early-exit O(n·t)) wherever the score's
-        # consumers gate the value anyway — see norm_levenshtein_capped.
-        # url_lev_abs: the score zeroes url evidence beyond 3 edits and
-        # hard-gates at 2, so every value >3 is interchangeable; map the
-        # bounded built-in's -1 overflow marker to 4.
-        lv1 = F.levenshtein(un_a, un_b, 3)
-        lv2 = F.levenshtein(F.lower("url_a"), F.lower("url_b"), 3)
-        url_lev_abs = F.least(
-            F.when(lv1 < 0, 4).otherwise(lv1),
-            F.when(lv2 < 0, 4).otherwise(lv2),
-        ).cast("double")
-        # text/swap prefix distances are gated at 0.25 × the 64-char
-        # prefix = 16 edits
-        text_lev = norm_levenshtein_capped(tp_a, tp_b, 16)
-        swap_lev = norm_levenshtein_capped(
-            tp_a, F.substring(F.coalesce("lang_b", F.lit("")), 1, TEXT_PREFIX), 16)
-    else:
-        url_lev_abs = F.least(
-            F.levenshtein(un_a, un_b),
-            F.levenshtein(F.lower("url_a"), F.lower("url_b")),
-        ).cast("double")
-        text_lev = norm_levenshtein(tp_a, tp_b)
-        swap_lev = norm_levenshtein(
-            tp_a, F.substring(F.coalesce("lang_b", F.lit("")), 1, TEXT_PREFIX))
+    # Bounded Levenshtein (early-exit O(n·t)) wherever the score's
+    # consumers gate the value anyway — see norm_levenshtein_capped.
+    # url_lev_abs: the score zeroes url evidence beyond 3 edits and
+    # hard-gates at 2, so every value >3 is interchangeable; map the
+    # bounded built-in's -1 overflow marker to 4.
+    lv1 = F.levenshtein(un_a, un_b, 3)
+    lv2 = F.levenshtein(F.lower("url_a"), F.lower("url_b"), 3)
+    url_lev_abs = F.least(
+        F.when(lv1 < 0, 4).otherwise(lv1),
+        F.when(lv2 < 0, 4).otherwise(lv2),
+    ).cast("double")
+    # text/swap prefix distances are gated at 0.25 × the 64-char prefix =
+    # 16 edits
+    text_lev = norm_levenshtein_capped(tp_a, tp_b, 16)
+    swap_lev = norm_levenshtein_capped(
+        tp_a, F.substring(F.coalesce("lang_b", F.lit("")), 1, TEXT_PREFIX), 16)
     return (
         pairs.withColumn("metric_url_jw", jaro_winkler_udf(un_a, un_b))
         .withColumn("metric_url_lev", norm_levenshtein(un_a, un_b))
@@ -265,21 +258,19 @@ def score_pairs(candidates: DataFrame, clean: DataFrame, dirty: DataFrame,
     match_prob + prediction. Heavy payload columns (texts, shingle arrays)
     are dropped from the output — the scored table checkpoints lean.
     ``exact_shingles=True`` is the cross-engine verification mode: the
-    same shingle kernel ships full unsampled 64-bit sets (exact Jaccard)
-    and the distance metrics are uncapped.
+    same shingle kernel ships full unsampled 64-bit sets, so the Jaccard
+    is exact; nothing else changes.
 
-    Scored-output contract of the default mode (``exact_shingles``
-    false): the persisted distance metrics are CAPPED at their score
-    gates — ``metric_url_lev_abs`` saturates at 4 (the score zeroes url
-    evidence beyond 3 edits) and ``metric_text_lev`` / ``metric_swap_lev``
-    report 1.0 for any raw prefix distance > 16 (the 0.25 × 64-char
-    gate). ``match_prob`` and ``prediction`` are provably unchanged by
-    the caps (every consumer gates below them), but anything downstream
-    that treats these three columns as TRUE normalized distances must
-    either score with ``exact_shingles=True`` or tolerate the saturated
-    range; a cross-mode diff of the scored table will show divergent
-    metric values on capped pairs by design."""
+    Scored-output contract (both modes): the persisted distance metrics
+    are CAPPED at their score gates — ``metric_url_lev_abs`` saturates
+    at 4 (the score zeroes url evidence beyond 3 edits) and
+    ``metric_text_lev`` / ``metric_swap_lev`` report 1.0 for any raw
+    prefix distance > 16 (the 0.25 × 64-char gate). ``match_prob`` and
+    ``prediction`` are provably unchanged by the caps (every consumer
+    gates below them), so an engine that computes the uncapped
+    distances derives the same scores; anything that treats these
+    three columns as TRUE normalized distances must tolerate the
+    saturated range."""
     out = add_match_prob(add_features(
-        attach_pair_attrs(candidates, clean, dirty, exact_shingles),
-        exact_shingles))
+        attach_pair_attrs(candidates, clean, dirty, exact_shingles)))
     return out.drop("sh_a", "sh_b", "shs_a", "shs_b", "tp_a", "tp_b")

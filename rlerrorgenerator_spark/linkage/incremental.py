@@ -70,16 +70,16 @@ def increment_clusters(accepted: DataFrame, prior_clusters: DataFrame,
 
 def link_increment(clean: DataFrame, new_dirty: DataFrame,
                    prior_clusters: DataFrame,
-                   use_minhash: bool = True,
-                   exact_shingles: bool = False) -> DataFrame:
+                   verify: bool = False) -> DataFrame:
     """Block + score the new batch against the clean table only, then
     fold accepted edges into the prior clustering. Returns the updated
     (id, cluster_id) table (prior ids ∪ clean urls ∪ batch rids).
-    ``exact_shingles`` is the cross-engine verification scoring mode
-    (see features.score_pairs)."""
-    candidates = build_candidates(clean, new_dirty, use_minhash=use_minhash)
-    scored = score_pairs(candidates, clean, new_dirty,
-                         exact_shingles=exact_shingles)
+    ``verify=True`` runs the cross-engine verification modes of the same
+    plans: md5 MinHash signatures (blocking.build_candidates) and exact
+    shingle sets (features.score_pairs)."""
+    candidates = build_candidates(clean, new_dirty,
+                                  signature="md5" if verify else "xxhash")
+    scored = score_pairs(candidates, clean, new_dirty, exact_shingles=verify)
     accepted = scored.where(F.col("prediction")).select("rid_a", "rid_b")
     new_ids = (
         clean.select(F.col("url").alias("id"))

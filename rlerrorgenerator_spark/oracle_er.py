@@ -12,9 +12,9 @@ row against an independent SQL re-derivation.
 
 Layout: one ``_OpOracle(spark_fn, sql)`` per operator, both generated
 from the SAME Python constants (seeds, rates, charsets, lookup dims,
-token strings) so the two sides cannot silently drift; a pytest
-(tests/test_oracle_er.py) additionally asserts frame equality at
-sf0.001 for every op.
+token strings) so the two sides cannot silently drift;
+``tools/check_oracle_er.py`` diffs the two frames of every op
+separately.
 
 Inputs are derived deterministically from the driver's parquet tables
 (``documents`` for text/pages ops, ``customer`` for person ops) with the
@@ -1059,14 +1059,6 @@ def _q_prep_data(spark, sf_dir):
                           .orderBy("rid")
 
 
-def er_oracle_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {f"er_op_{name}": op.spark_fn for name, op in ER_ORACLE_OPS.items()}
-
-
-def er_oracle_sql() -> dict[str, str]:
-    return {f"er_op_{name}": op.sql for name, op in ER_ORACLE_OPS.items()}
-
-
 # ----------------------------------------------------- driver-window families
 #
 # The driver's CORRECTNESS artifact checks at most 50 queries() entries;
@@ -1078,7 +1070,7 @@ def er_oracle_sql() -> dict[str, str]:
 # the DuckDB oracle is the UNION ALL of the members' (individually
 # green-in-r3) oracle SQLs with the same tag. Nothing is weakened: the
 # driver still value-hashes every member's full derivation, and
-# tests/test_oracle_er.py keeps asserting each op separately for
+# tools/check_oracle_er.py still diffs each op separately for
 # fine-grained diagnosis.
 
 LINEAGE_FAMILIES: dict[str, list[str]] = {

@@ -30,32 +30,40 @@ _EMPTY_CLUSTERS = "id string, cluster_id string"
 
 
 def fold_batch(clean: DataFrame, batch: DataFrame, clusters_dir: str,
-               use_minhash: bool = True,
-               exact_shingles: bool = False) -> None:
+               verify: bool = False) -> None:
     """One incremental fold: read the prior clusters table (empty on
     first batch), link the batch against clean, atomically replace the
-    clusters table. Pure batch function — usable outside streaming."""
+    clusters table. Pure batch function — usable outside streaming.
+    ``verify`` selects link_increment's verification modes."""
     spark = batch.sparkSession
-    if path_exists(spark, os.path.join(clusters_dir, "_SUCCESS")):
-        prior = spark.read.parquet(clusters_dir)
-    else:
-        prior = spark.createDataFrame([], _EMPTY_CLUSTERS)
-    updated = link_increment(clean, batch, prior, use_minhash=use_minhash,
-                             exact_shingles=exact_shingles)
     # write-then-swap: the updated table is materialized to a side path
     # first (reading and overwriting the same parquet path in one job is
     # undefined), then rewritten to the canonical path and deleted. On
     # Iceberg this is a single transactional overwrite.
     tmp = clusters_dir.rstrip("/") + "__next"
+    if path_exists(spark, os.path.join(tmp, "_SUCCESS")):
+        # a crash between the two writes: the overwrite clears the
+        # canonical table before it rewrites it, so only the committed
+        # side copy is whole — finish that swap before folding (a replayed
+        # batch then re-folds idempotently instead of into an empty prior)
+        _swap(spark, tmp, clusters_dir)
+    if path_exists(spark, os.path.join(clusters_dir, "_SUCCESS")):
+        prior = spark.read.parquet(clusters_dir)
+    else:
+        prior = spark.createDataFrame([], _EMPTY_CLUSTERS)
+    updated = link_increment(clean, batch, prior, verify=verify)
     updated.write.mode("overwrite").parquet(tmp)
+    _swap(spark, tmp, clusters_dir)
+
+
+def _swap(spark, tmp: str, clusters_dir: str) -> None:
     spark.read.parquet(tmp).write.mode("overwrite").parquet(clusters_dir)
     delete_path(spark, tmp)
 
 
 def stream_link_increment(clean: DataFrame, dirty_stream: DataFrame,
                           clusters_dir: str, checkpoint_dir: str,
-                          use_minhash: bool = True,
-                          exact_shingles: bool = False):
+                          verify: bool = False):
     """Start the incremental-linkage stream; returns the StreamingQuery.
 
     ``dirty_stream`` is a streaming DataFrame of dirty page records
@@ -66,8 +74,7 @@ def stream_link_increment(clean: DataFrame, dirty_stream: DataFrame,
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        fold_batch(clean, batch_df, clusters_dir,
-                   use_minhash=use_minhash, exact_shingles=exact_shingles)
+        fold_batch(clean, batch_df, clusters_dir, verify=verify)
 
     return (
         dirty_stream.writeStream

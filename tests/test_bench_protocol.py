@@ -42,7 +42,7 @@ def _legs(monkeypatch, schedule):
 
     monkeypatch.setattr(bench.time, "time", lambda: clock["t"])
 
-    def fake_leg(sf_dir, cores, n_rows, sp, bind, pages, timeout=3600):
+    def fake_leg(sf_dir, cores, sp, bind, pages, timeout=3600):
         pps, wall = schedule[calls["i"]]
         calls["i"] += 1
         calls["cores"].append(cores)

@@ -126,6 +126,35 @@ def test_fold_batch_resumes_uri_clusters_dir(spark, tmp_path):
     assert sorted(p.name for p in tmp_path.iterdir()) == ["plain", "uri"]
 
 
+def test_fold_batch_finishes_interrupted_swap(spark, tmp_path):
+    # a crash mid-swap: the post-b2 table is committed in <dir>__next and
+    # the overwrite already cleared the canonical table. Replaying b2
+    # must finish the swap, not fold b2 into an empty prior.
+    import shutil
+
+    from rlerrorgenerator_spark.streaming.linkage_stream import fold_batch
+
+    clean = prep_pages(
+        synth_pages(spark, 200, seed=15, body_tokens=(20, 120))
+    ).localCheckpoint(eager=True)
+    dirty, _ = mess_data(clean, default_error_config(), seed=15)
+    dirty = dirty.localCheckpoint(eager=True)
+    b1 = dirty.where(F.crc32(F.col("rid")) % 2 == 0).localCheckpoint(eager=True)
+    b2 = dirty.subtract(b1).localCheckpoint(eager=True)
+
+    clusters_dir = str(tmp_path / "clusters")
+    fold_batch(clean, b1, clusters_dir)
+    fold_batch(clean, b2, clusters_dir)
+    want = _labels(spark.read.parquet(clusters_dir))
+
+    shutil.copytree(clusters_dir, clusters_dir + "__next")
+    shutil.rmtree(clusters_dir)
+    (tmp_path / "clusters").mkdir()
+    fold_batch(clean, b2, clusters_dir)
+    assert _labels(spark.read.parquet(clusters_dir)) == want
+    assert not (tmp_path / "clusters__next").exists()
+
+
 def test_increment_bridges_prior_clusters(spark):
     # two singleton prior clusters merged by one new edge: min-id label
     # must re-minimize over BOTH prior memberships

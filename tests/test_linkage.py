@@ -249,6 +249,44 @@ def test_shingle_jaccard_mixed_sample_boundary(spark):
     assert row2["metric_text_jaccard"] == 1.0
 
 
+def test_distance_caps_are_one_contract(spark):
+    """Both scoring modes report the same CAPPED distances: pairs past the
+    url (>3 edits) and text-prefix (>16 edits) caps read 4 and 1.0 under
+    ``exact_shingles`` too, and the scores agree."""
+    import datetime as dt
+
+    from rlerrorgenerator_spark.linkage.features import score_pairs
+
+    ts = dt.datetime(2024, 1, 1)
+    body = " ".join(f"word{i}" for i in range(20))
+    other = " ".join(f"zz{i}q" for i in range(20))
+    clean = spark.createDataFrame(
+        [("https://site.com/alpha/page-one", ts, body, "en")],
+        "url string, warc_ts timestamp, text string, lang string",
+    )
+    dirty = spark.createDataFrame(
+        [("r1", "https://other.org/zzz/qqq-xyz", ts, body, "en"),    # url far
+         ("r2", "https://site.com/alpha/page-on", ts, other, "en"),  # text far
+         ("r3", "https://site.com/alpha/page-one", ts, body + "x", "en")],
+        "rid string, url string, warc_ts timestamp, text string, lang string",
+    )
+    cand = spark.createDataFrame(
+        [("https://site.com/alpha/page-one", r) for r in ("r1", "r2", "r3")],
+        "rid_a string, rid_b string")
+    cols = ["metric_url_lev_abs", "metric_text_lev", "metric_swap_lev",
+            "match_prob", "prediction"]
+
+    def scored(exact: bool) -> dict:
+        df = score_pairs(cand, clean, dirty, exact_shingles=exact)
+        return {r.rid_b: tuple(r[c] for c in cols) for r in df.collect()}
+
+    default, exact = scored(False), scored(True)
+    assert default == exact
+    assert default["r1"][0] == 4.0 and default["r1"][4] is False
+    assert default["r2"][1] == 1.0 and default["r2"][2] == 1.0
+    assert default["r3"][4] is True
+
+
 def _pairs_digest(rows) -> str:
     return hashlib.sha256("\n".join(sorted(map(repr, rows))).encode()).hexdigest()
 
